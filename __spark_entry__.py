@@ -25,6 +25,10 @@ def entry(spark: SparkSession) -> DataFrame:
     composition (SURVEY.md §3.1) on the driver's star schema:
     conditional-count profile → left join → one-hot → bucketize →
     deterministic top-N → membership semi-join → dimension join.
+    The IMDb pipeline's own version is
+    ``pipelines/imdb_features.generate_dataset``, whose crew half
+    (``crew_columns``) ranks both roles in one grouped window and joins
+    the top ids back in the same aggregate as the people stats.
     """
     return QUERIES[FLAGSHIP].spark(spark, SMOKE_SF_DIR)
 

@@ -13,6 +13,7 @@ the *intent* with a scale-safe primitive (SURVEY.md §4.4).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -30,7 +31,52 @@ __all__ = [
     "histogram",
     "global_rank_cumsum",
     "global_running_max",
+    "sql_literal",
+    "sql_ident",
 ]
+
+
+def sql_literal(value: str | int | float | bool) -> str:
+    """SQL text that parses back to exactly ``F.lit(value)``: same value,
+    same type.
+
+    Wide projections are built as SQL text because every ``Column``
+    method is a Py4J round trip (one ``F.col`` costs ~13, one
+    ``coalesce(cast(array_contains(..)))`` flag ~50), while a
+    ``selectExpr`` costs one per expression string. Strings escape
+    ``\\`` and ``'``, and spell ``$`` as ``\\u0024`` so the parser's
+    ``${var}`` substitution (on by default) never sees a reference.
+    Doubles use ``repr``, which round-trips every double, with the
+    ``D`` suffix (a bare ``1.5`` is a DECIMAL); ``inf``/``nan`` have no
+    numeric literal and go through a string cast.
+    """
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        if math.isfinite(value):
+            return f"{value!r}D"
+        return f"CAST('{value!r}' AS DOUBLE)"
+    if isinstance(value, str):
+        escaped = (
+            value.replace("\\", "\\\\")
+            .replace("'", "\\'")
+            .replace("$", "\\u0024")
+        )
+        return f"'{escaped}'"
+    raise TypeError(f"no exact SQL literal for {type(value).__name__}")
+
+
+def sql_ident(name: str) -> str:
+    """SQL text naming exactly the column ``name`` (dots, spaces and
+    backticks included). A name containing ``${`` would be rewritten by
+    variable substitution inside backticks, so it goes through the
+    ``IDENTIFIER`` clause, whose string argument escapes ``$``."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    if "${" in name:
+        return f"IDENTIFIER({sql_literal(quoted)})"
+    return quoted
 
 
 def conditional_counts(
@@ -120,29 +166,29 @@ def one_hot(
     must run to learn the vocabulary); at 100 TB pass an explicit
     ``vocabulary`` to skip the extra job.
     """
-    col = F.col(column)
+    src = sql_ident(column)
     if vocabulary is None:
         if is_array:
-            vocab_expr = F.array_distinct(F.flatten(F.collect_set(col)))
-            row = df.select(col).na.drop().agg(vocab_expr).first()
+            row = df.where(f"{src} IS NOT NULL").selectExpr(
+                f"array_distinct(flatten(collect_set({src})))"
+            ).first()
         else:
-            row = df.agg(F.collect_set(col)).first()
+            row = df.selectExpr(f"collect_set({src})").first()
         vocabulary = sorted(v for v in (row[0] or []) if v is not None)
     prefix = prefix if prefix is not None else f"{column}_"
-    names: list[str] = []
-    flags: list[Column] = []
-    for value in vocabulary:
-        name = f"{prefix}{value}"
-        names.append(name)
-        flag = (
-            F.array_contains(col, value) if is_array else (col == F.lit(value))
-        )
-        flags.append(F.coalesce(flag.cast("int"), F.lit(0)).alias(name))
-    # ONE select, not a withColumn-per-value loop: each withColumn is a
-    # full analyzer pass over a growing projection — O(vocab²) analysis
-    # cost that stalls the driver on wide vocabularies (1k-value test in
-    # tests/test_relational.py).
-    return df.select(*df.columns, *flags), names
+    names = [f"{prefix}{value}" for value in vocabulary]
+    test = "array_contains({}, {})" if is_array else "({} = {})"
+    flags = [
+        f"coalesce(CAST({test.format(src, sql_literal(value))} AS INT), 0)"
+        f" AS {sql_ident(name)}"
+        for value, name in zip(vocabulary, names)
+    ]
+    # ONE projection, not a withColumn-per-value loop: each withColumn is
+    # a full analyzer pass over a growing projection — O(vocab²)
+    # analysis cost that stalls the driver on wide vocabularies (1k-value
+    # test in tests/test_relational.py). SQL text, not Column objects:
+    # one Py4J round trip per flag instead of ~50.
+    return df.selectExpr("*", *flags), names
 
 
 def bucketize(
@@ -160,16 +206,21 @@ def bucketize(
     ``value >= edges[-1]``. NULLs get ``null_bucket`` (default: stay NULL
     — the reference silently sent NULLs to the last bucket, SURVEY §4.4.3).
     """
-    col = F.col(column)
-    expr = F.when(col < F.lit(edges[0]), F.lit(0))
-    for i, edge in enumerate(edges[1:], start=1):
-        expr = expr.when(col < F.lit(edge), F.lit(i))
-    expr = expr.otherwise(F.lit(len(edges)))
-    if null_bucket is not None:
-        expr = F.when(col.isNull(), F.lit(null_bucket)).otherwise(expr)
-    else:
-        expr = F.when(col.isNull(), F.lit(None).cast("int")).otherwise(expr)
-    return df.withColumn(out, expr.cast("int"))
+    src = sql_ident(column)
+    null = (
+        "CAST(NULL AS INT)" if null_bucket is None else sql_literal(null_bucket)
+    )
+    ladder = " ".join(
+        f"WHEN {src} < {sql_literal(edge)} THEN {i}"
+        for i, edge in enumerate(edges)
+    )
+    return df.withColumn(
+        out,
+        F.expr(
+            f"CAST(CASE WHEN {src} IS NULL THEN {null} {ladder}"
+            f" ELSE {len(edges)} END AS INT)"
+        ),
+    )
 
 
 def membership_flag(

@@ -8,9 +8,17 @@ sees one fused plan (the reference had the same functional shape,
 
 * NO per-stage ``repartition("tconst")`` (reference J8 ⚠ — AQE plans the
   join exchanges; a manual pre-shuffle just doubles them).
-* Membership flags are broadcast semi-joins, not 1000-term regexes
-  (J7 ⚠, exact ids — no prefix matches).
+* Every crew feature (J5/J6 people joins, A3 stats, A4 ranking, J7
+  flags) comes from one long-form ``(tconst, role, pid)`` projection of
+  ``title_crew`` (``crew_columns``): one grouped aggregate for all
+  stats and flags, one ranking for both roles — ``title_crew`` is
+  scanned twice, not once per role per feature.
+* Membership flags are an exact broadcast equi-join on the top ids, not
+  1000-term regexes (J7 ⚠, no prefix matches).
 * Top-N entity ranking is tie-broken (T1 ⚠, deterministic).
+* Wide projections, filters and aggregates are SQL text rendered by
+  ``sql_literal``/``sql_ident``: the driver-side cost of a plan is its
+  Py4J round trips, and a Column chain costs dozens per expression.
 * One-hot genre vocabulary is sorted (deterministic schema).
 * The final ``dropna`` (reference §4.4.6 — silently dropped every title
   without akas/crew/principals) is EXPLICIT and configurable.
@@ -21,22 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import (
-    bucketize,
-    conditional_counts,
-    membership_flag,
-    one_hot,
-    top_n,
-)
+from ..operators.relational import bucketize, one_hot, sql_ident, sql_literal
 
 __all__ = [
     "clean_titles",
     "initial_form",
-    "people_columns",
-    "popularity_columns",
+    "crew_columns",
     "cleanup_columns",
     "generate_dataset",
-    "rank_entities_by_impact",
 ]
 
 #: Title types retained by the reference filter (data_processing.py:95,104).
@@ -45,6 +45,17 @@ YEAR_RANGE = (2000, 2024)
 MIN_VOTES = 100
 RUNTIME_EDGES = [30, 91, 151]  # buckets: <30, 30-90, 91-150, >150
 PRINCIPAL_CATEGORIES = ("actor", "actress", "producer", "writer")
+#: crew role -> its title_crew id-array column
+CREW_ROLES = {"director": "directors", "writer": "writers"}
+#: person feature -> the name_basics array column whose size it is
+PEOPLE_FEATURES = {"known": "knownForTitles", "prof": "primaryProfession"}
+
+
+def _group(df: DataFrame, keys: list[str], aggs: list[str]) -> DataFrame:
+    """``groupBy(keys).agg(aggs)`` from SQL text (see ``sql_literal`` for
+    why text: each ``F.expr`` is one Py4J round trip, a Column chain is
+    dozens)."""
+    return df.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
 
 
 def clean_titles(title_basics: DataFrame) -> DataFrame:
@@ -55,13 +66,12 @@ def clean_titles(title_basics: DataFrame) -> DataFrame:
     ``== 0`` silently dropped junk rows (§4.4.4). We make the contract
     explicit: keep rows whose isAdult is exactly '0'.
     """
-    return title_basics.filter(
-        F.col("startYear").isNotNull()
-        & F.col("runtimeMinutes").isNotNull()
-        & F.col("genres").isNotNull()
-        & (F.col("isAdult") == "0")
-        & F.col("titleType").isin(*KEPT_TITLE_TYPES)
-        & F.col("startYear").between(*YEAR_RANGE)
+    types = ", ".join(map(sql_literal, KEPT_TITLE_TYPES))
+    lo, hi = map(sql_literal, YEAR_RANGE)
+    return title_basics.where(
+        "startYear IS NOT NULL AND runtimeMinutes IS NOT NULL"
+        f" AND genres IS NOT NULL AND isAdult = {sql_literal('0')}"
+        f" AND titleType IN ({types}) AND startYear BETWEEN {lo} AND {hi}"
     )
 
 
@@ -84,8 +94,8 @@ def initial_form(
     job at scale.
     """
     titles = clean_titles(title_basics)
-    rated = title_ratings.filter(
-        F.col("averageRating").isNotNull() & (F.col("numVotes") >= MIN_VOTES)
+    rated = title_ratings.where(
+        f"averageRating IS NOT NULL AND numVotes >= {sql_literal(MIN_VOTES)}"
     )
     df = titles.join(rated, "tconst", "inner")
 
@@ -101,25 +111,25 @@ def initial_form(
     # A1: akas rows per title. The reference counted ALL akas rows but
     # named it countries_count (§4.4.7) — we keep count(*) semantics under
     # the honest name and add the distinct-region variant.
-    akas_counts = title_akas.groupBy(
-        F.col("titleId").alias("tconst")
-    ).agg(
-        F.count(F.lit(1)).alias("akas_count"),
-        F.countDistinct("region").alias("countries_count"),
+    akas_counts = _group(
+        title_akas,
+        ["titleId AS tconst"],
+        ["count(1) AS akas_count", "count(DISTINCT region) AS countries_count"],
     )
     df = df.join(akas_counts, "tconst", "left")
 
     # A2: principals profile — one conditional aggregation
-    principals_profile = conditional_counts(
+    principals_profile = _group(
         title_principals,
         ["tconst"],
-        {
-            f"num_{c}s": F.col("category") == c
-            for c in PRINCIPAL_CATEGORIES
-        },
-        extra_aggs=[
-            F.count(F.lit(1)).alias("num_principals"),
-            F.countDistinct("category").alias("num_principal_categories"),
+        [
+            *(
+                f"sum(CASE WHEN category = {sql_literal(c)} THEN 1 ELSE 0 END)"
+                f" AS {sql_ident(f'num_{c}s')}"
+                for c in PRINCIPAL_CATEGORIES
+            ),
+            "count(1) AS num_principals",
+            "count(DISTINCT category) AS num_principal_categories",
         ],
     )
     df = df.join(principals_profile, "tconst", "left")
@@ -132,111 +142,97 @@ def initial_form(
     return df
 
 
-def _people_stats(
-    exploded: DataFrame, name_basics: DataFrame, role: str
-) -> DataFrame:
-    """A3: per-title mean/min/max of people features for one crew role.
-
-    ``exploded`` is (tconst, person_id). Joins person features then
-    aggregates back to title grain — one shuffle each.
-    """
-    # size(NULL array) is -1 in Spark (legacy); the reference inherited
-    # that quirk via size(split(NULL)) — we keep NULL as NULL so the
-    # aggregates below skip missing people instead of counting -1.
-    def _safe_size(c: str) -> F.Column:
-        return F.when(F.col(c).isNotNull(), F.size(c))
-
-    people = name_basics.select(
-        F.col("nconst"),
-        _safe_size("knownForTitles").alias("numKnownForTitles"),
-        _safe_size("primaryProfession").alias("numProfessions"),
-    )
-    joined = exploded.join(
-        people, exploded[f"{role}_id"] == people.nconst, "left"
-    ).drop("nconst")
-    return joined.groupBy("tconst").agg(
-        F.mean("numKnownForTitles").alias(f"{role}_mean_known"),
-        F.min("numKnownForTitles").alias(f"{role}_min_known"),
-        F.max("numKnownForTitles").alias(f"{role}_max_known"),
-        F.mean("numProfessions").alias(f"{role}_mean_prof"),
-        F.min("numProfessions").alias(f"{role}_min_prof"),
-        F.max("numProfessions").alias(f"{role}_max_prof"),
-    )
-
-
-def people_columns(
-    df: DataFrame, title_crew: DataFrame, name_basics: DataFrame
-) -> DataFrame:
-    """Stage 2 (``dataset_add_people_columns``,
-    ``data_processing.py:192-250``): explode crew lists → join person
-    features (J5) → per-title stats (A3) → join back (J6)."""
-    for role, col in (("writer", "writers"), ("director", "directors")):
-        exploded = title_crew.select(
-            "tconst", F.explode_outer(F.col(col)).alias(f"{role}_id")
-        )
-        stats = _people_stats(exploded, name_basics, role)
-        df = df.join(stats, "tconst", "left")
-    return df
-
-
-def rank_entities_by_impact(
-    df: DataFrame, entity_col: str, n: int = 1000
-) -> DataFrame:
-    """A4+T1 (``rank_entities_by_impact``, ``data_processing.py:273-288``):
-    rank entities (directors/writers/…) by (avg rating, avg votes) with a
-    DETERMINISTIC tie-break on the entity id (reference §4.4.5 had none).
-    ``df`` must have columns (entity_col, averageRating, numVotes).
-    TakeOrderedAndProject: no global sort, N rows per partition merged.
-    """
-    agg = df.groupBy(entity_col).agg(
-        F.avg("averageRating").alias("avg_rating"),
-        F.avg("numVotes").alias("avg_votes"),
-    )
-    return top_n(
-        agg,
-        order_by=[F.col("avg_rating").desc(), F.col("avg_votes").desc()],
-        n=n,
-        tie_breakers=[F.col(entity_col).asc()],
-    )
-
-
-def popularity_columns(
+def crew_columns(
     df: DataFrame,
     title_crew: DataFrame,
+    name_basics: DataFrame,
     title_ratings: DataFrame,
     top_n_entities: int = 1000,
 ) -> DataFrame:
-    """Stage 3 (``dataset_add_popularity_columns``,
-    ``data_processing.py:253-315``): flag titles whose directors/writers
-    are in the top-N by impact.
+    """Stages 2+3 (``dataset_add_people_columns`` and
+    ``dataset_add_popularity_columns``, ``data_processing.py:192-315``):
+    per-title people stats (J5/J6 + A3) and the ``has_top_*`` flags
+    (A4 + T1 + J7), all from ONE long-form ``(tconst, role, pid)``
+    projection of ``title_crew``.
 
-    Reference J7 ⚠ compiled the top-N ids into an unanchored 1000-term
-    regex (O(rows×N) and prefix-buggy). Here: the ranked ids stay a
-    DataFrame, and the flag is an exact broadcast semi-join on the
-    exploded crew array (``membership_flag(is_array=True)``) — one hash
-    probe per crew id, no driver roundtrip for the ids at all.
+    * Ranking (A4 + T1): one ``groupBy(role, pid)`` of the rated crew,
+      then a per-role ``row_number`` over the total order
+      ``(avg_rating desc, avg_votes desc, pid asc)`` — the reference's
+      orderBy+limit had no tie-break (§4.4.5). For N up to
+      ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000) Catalyst
+      turns ``row_number() <= N`` into a per-partition group limit
+      before the shuffle, so only N rows per role per partition move.
+    * Stats and flags: the crew rows join the person features and the
+      top ids (J7 ⚠ was a 1000-term unanchored regex, prefix-buggy;
+      here it is an exact broadcast equi-join), then one
+      ``groupBy(tconst)`` computes every role's mean/min/max and
+      ``max(is_top)`` as conditional aggregates.
+
+    ``title_crew`` is scanned once per branch: twice in all.
     """
-    rated_crew = title_crew.join(title_ratings, "tconst", "inner")
-    for role, col in (("director", "directors"), ("writer", "writers")):
-        exploded = rated_crew.select(
-            F.explode(F.col(col)).alias("entity"),
-            "averageRating",
-            "numVotes",
+    stack = ", ".join(
+        f"{sql_literal(role)}, {sql_ident(col)}"
+        for role, col in CREW_ROLES.items()
+    )
+    crew = title_crew.selectExpr(
+        "tconst", f"stack({len(CREW_ROLES)}, {stack}) AS (role, ids)"
+    ).selectExpr("tconst", "role", "explode(ids) AS pid")
+
+    impact = _group(
+        crew.join(title_ratings, "tconst"),
+        ["role", "pid"],
+        ["avg(averageRating) AS avg_rating", "avg(numVotes) AS avg_votes"],
+    )
+    top = (
+        impact.selectExpr(
+            "role",
+            "pid",
+            "row_number() OVER (PARTITION BY role"
+            " ORDER BY avg_rating DESC, avg_votes DESC, pid) AS impact_rank",
         )
-        top_ids = rank_entities_by_impact(
-            exploded, "entity", n=top_n_entities
-        ).select("entity")
-        crew_flags = membership_flag(
-            title_crew.select("tconst", col),
-            col,
-            top_ids,
-            out=f"has_top_{role}",
-            is_array=True,
-        ).select("tconst", f"has_top_{role}")
-        df = df.join(crew_flags, "tconst", "left").na.fill(
-            {f"has_top_{role}": 0}
-        )
-    return df
+        .where(f"impact_rank <= {sql_literal(top_n_entities)}")
+        .selectExpr("role", "pid", "1 AS is_top")
+    )
+
+    # size(NULL array) is -1 in Spark (legacy); the reference inherited
+    # that quirk via size(split(NULL)) — we keep NULL as NULL so the
+    # aggregates below skip missing people instead of counting -1.
+    people = name_basics.selectExpr(
+        "nconst AS pid",
+        *(
+            f"CASE WHEN {sql_ident(c)} IS NOT NULL THEN size({sql_ident(c)})"
+            f" END AS {feature}"
+            for feature, c in PEOPLE_FEATURES.items()
+        ),
+    )
+    # Column order: every stat writer-first, then the flags
+    # director-first (the reference's stage order).
+    stats = [
+        f"{fn}(CASE WHEN role = {sql_literal(role)} THEN {feature} END)"
+        f" AS {role}_{stat}_{feature}"
+        for role in ("writer", "director")
+        for feature in PEOPLE_FEATURES
+        for fn, stat in (("avg", "mean"), ("min", "min"), ("max", "max"))
+    ]
+    flags = [
+        f"max(CASE WHEN role = {sql_literal(role)} THEN is_top END)"
+        f" AS has_top_{role}"
+        for role in CREW_ROLES
+    ]
+    # Only the top ids (<= 2N rows) are hinted: name_basics is 14M rows
+    # in the full dump, so its join strategy is left to the planner
+    # (a broadcast at small sizes).
+    per_title = _group(
+        crew.join(people, "pid", "left").join(
+            top.hint("broadcast"), ["role", "pid"], "left"
+        ),
+        ["tconst"],
+        stats + flags,
+    )
+    # a title with no crew, or none in the top N, is flagged 0, not NULL
+    return df.join(per_title, "tconst", "left").na.fill(
+        {f"has_top_{role}": 0 for role in CREW_ROLES}
+    )
 
 
 #: Columns the reference drops before ML (ids, leaky target cousins;
@@ -293,10 +289,10 @@ def generate_dataset(
         tables["title_principals"],
         genre_vocabulary=genre_vocabulary,
     )
-    df = people_columns(df, tables["title_crew"], tables["name_basics"])
-    df = popularity_columns(
+    df = crew_columns(
         df,
         tables["title_crew"],
+        tables["name_basics"],
         tables["title_ratings"],
         top_n_entities=top_n_entities,
     )

@@ -81,10 +81,12 @@ def arrayify(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     ``columns`` maps column name -> delimiter. The reference stored
     "Action,Comedy" style lists as strings and re-split them at every use
     (``data_processing.py:123,212-213,218-219``); we split once at ingest.
+    One ``withColumns`` projection (one analyzer pass) replaces the
+    columns in place, so column order and the other types are kept.
     """
-    for name, delim in columns.items():
-        df = df.withColumn(name, F.split(F.col(name), delim))
-    return df
+    return df.withColumns(
+        {name: F.split(name, delim) for name, delim in columns.items()}
+    )
 
 
 #: Event-time columns whose physical parquet type has varied across

@@ -4,8 +4,12 @@ plus the analysis and ML tails."""
 
 from __future__ import annotations
 
+import hashlib
+import threading
+
 import pandas as pd
 import pytest
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
 
 from imdb_fixtures import generate
@@ -16,6 +20,36 @@ from mknssh_11_bigdata_spark.pipelines.imdb_features import (
     generate_dataset,
 )
 from mknssh_11_bigdata_spark.sources.imdb import load_imdb_tables
+
+
+#: sha256 of the feature table on the fixture (top_n_entities=10) and of
+#: run_pipeline's result, recorded on the per-role crew implementation
+#: that crew_columns replaced: the rewrite must stay bit-identical.
+DATASET_DIGEST = (
+    "b14ff2bcf84aba89861fb75231ac605482bd71ff75a03125de705257f0fd521d"
+)
+PIPELINE_DIGEST = (
+    "903b1971af833cc10f9419c5dbb0baa6a654ef7ea6475a4674f8852ace4dfd1c"
+)
+#: Py4J round trips to build generate_dataset on the fixture with a known
+#: vocabulary: 348 measured on PySpark 4.1.2 (3,066 with Column chains
+#: and per-role crew branches); the bound leaves 1.5x headroom.
+ROUND_TRIP_BOUND = 520
+
+
+def _digest(*parts) -> str:
+    h = hashlib.sha256()
+    for part in parts:
+        h.update(f"{part!r}\n".encode())
+    return h.hexdigest()
+
+
+def _table_digest(df) -> str:
+    """Schema (names in order, types, nullability) + sorted rows."""
+    schema = [
+        (f.name, f.dataType.simpleString(), f.nullable) for f in df.schema
+    ]
+    return _digest(schema, *sorted(repr(tuple(r)) for r in df.collect()))
 
 
 @pytest.fixture(scope="module")
@@ -78,6 +112,40 @@ def test_dataset_schema_and_content(dataset):
     # flags are exact 0/1
     flags = dataset.select("has_top_director", "has_top_writer").collect()
     assert {v for r in flags for v in r} <= {0, 1}
+
+
+def test_dataset_golden_digest(dataset):
+    assert _table_digest(dataset) == DATASET_DIGEST
+
+
+def test_crew_plan_shape_and_round_trips(tables, dataset, monkeypatch):
+    """title_crew is scanned once per crew branch (ranking; stats+flags)
+    and title_ratings once per use, and building the plan with a known
+    vocabulary stays a few hundred Py4J round trips: wide projections
+    are SQL text, not Column chains (~13 round trips per F.col on
+    PySpark 4.1)."""
+    vocab = [
+        c[len("genre_"):] for c in dataset.columns if c.startswith("genre_")
+    ]
+    me, sent = threading.get_ident(), [0]
+    send = GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        # the finalizer thread's object-release commands are not ours
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    # top_n_entities differs from the cached `dataset` fixture's, or the
+    # cache manager would swap the whole plan for its InMemoryRelation
+    df = generate_dataset(tables, genre_vocabulary=vocab, top_n_entities=5)
+    monkeypatch.undo()
+    assert sent[0] <= ROUND_TRIP_BOUND, sent[0]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    assert sum("title_crew.tsv" in line for line in lines) <= 2, plan
+    assert sum("title_ratings.tsv" in line for line in lines) <= 2, plan
 
 
 def test_dataset_deterministic(tables):
@@ -200,6 +268,8 @@ def test_run_pipeline_end_to_end(spark, imdb_dir, tmp_path):
         emb_out_dim=4,
     )
     assert out2["metrics"] == m
+    del out["dataset_path"]
+    assert _digest(out) == PIPELINE_DIGEST, out
 
 
 def test_tsne_2d_shape_and_determinism():

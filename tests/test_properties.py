@@ -4,6 +4,7 @@ column functions, plus salted-agg equivalence (SURVEY.md §5.4-5.5)."""
 from __future__ import annotations
 
 import bisect
+import math
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -57,6 +58,150 @@ def test_bucketize_matches_bisect(spark, values, raw_edges):
     # operator's half-open [lo, hi) contract
     for v in values:
         assert got[v] == bisect.bisect_right(edges, v)
+
+
+#: Text the SQL renderer must escape: quotes, backslashes, the
+#: six-character text \u0041 (a unicode escape if left raw), backticks,
+#: ${...} variable references, dots, spaces, non-ASCII, the empty string.
+TRICKY = st.sampled_from(
+    ["'", "\\", "\\u0041", "`", "``x", "${spark.app.name}", "${x}",
+     "a.b", "a b", "é😀", "", "%_", "\\'"]
+)
+NAME = st.one_of(TRICKY.filter(bool), st.text(min_size=1, max_size=6))
+VALUE = st.one_of(TRICKY, st.text(max_size=6))
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    st.lists(st.one_of(VALUE, st.none()), min_size=1, max_size=6),
+    st.lists(VALUE, max_size=4),
+    NAME,
+    st.one_of(st.none(), VALUE),
+    st.booleans(),
+    st.booleans(),
+)
+def test_one_hot_sql_text_matches_column_reference(
+    spark, values, extra_vocab, column, prefix, is_array, discover
+):
+    """one_hot builds its flags as SQL text; for any value, column name
+    and prefix they must equal flags built from F.col/F.lit."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    from mknssh_11_bigdata_spark.operators.relational import one_hot
+
+    if is_array:
+        rows = [([v, "z"] if v is not None else None,) for v in values]
+        dtype = ArrayType(StringType())
+    else:
+        rows = [(v,) for v in values]
+        dtype = StringType()
+    # build under a plain name, then rename: the reference never parses
+    # the tricky name
+    plain = spark.createDataFrame(rows, StructType([StructField("c", dtype)]))
+    df = plain.withColumnRenamed("c", column)
+    if discover:
+        seen: set[str] = set()
+        for (v,) in rows:
+            if v is not None:
+                seen.update(v if is_array else [v])
+        vocab = sorted(seen)
+        got, names = one_hot(df, column, prefix=prefix, is_array=is_array)
+    else:
+        vocab = sorted(set(values[:2]) - {None} | set(extra_vocab))
+        got, names = one_hot(
+            df, column, vocabulary=vocab, prefix=prefix, is_array=is_array
+        )
+    pre = prefix if prefix is not None else f"{column}_"
+    assert names == [f"{pre}{v}" for v in vocab]
+    c = F.col("c")
+    ref = plain.select(
+        c,
+        *[
+            F.coalesce(
+                (F.array_contains(c, v) if is_array else c == F.lit(v)).cast(
+                    "int"
+                ),
+                F.lit(0),
+            ).alias(name)
+            for v, name in zip(vocab, names)
+        ],
+    )
+    assert got.columns == [column, *names]
+    assert got.dtypes[1:] == ref.dtypes[1:]
+    assert got.collect() == ref.collect()
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.one_of(
+        st.tuples(
+            st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=8),
+            st.lists(
+                st.integers(-(2**40), 2**40), min_size=1, max_size=4, unique=True
+            ),
+        ),
+        st.tuples(
+            st.lists(
+                st.floats(-1e6, 1e6, allow_nan=False), min_size=1, max_size=8
+            ),
+            st.lists(
+                st.floats(-1e5, 1e5, allow_nan=False).filter(
+                    lambda e: not e.is_integer()
+                ),
+                min_size=1,
+                max_size=4,
+                unique=True,
+            ),
+        ),
+    ),
+    NAME,
+)
+def test_bucketize_sql_text_int_and_fractional_edges(spark, data, column):
+    """Integer edges on a bigint column and non-integral float edges on
+    a double column land exactly where bisect puts them, under any
+    column name."""
+    from mknssh_11_bigdata_spark.operators.relational import bucketize
+
+    values, raw_edges = data
+    edges = sorted(raw_edges)
+    df = spark.createDataFrame([(v,) for v in values], ["v"]).withColumnRenamed(
+        "v", column
+    )
+    out = bucketize(df, column, edges, out="b")
+    assert out.dtypes[-1] == ("b", "int")
+    for v, b in out.collect():
+        assert b == bisect.bisect_right(edges, v), (v, edges)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            VALUE,
+            st.booleans(),
+            st.integers(-(2**63), 2**63 - 1),
+            st.floats(allow_nan=True, allow_infinity=True),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_sql_literal_round_trips_value_and_type(spark, values):
+    from mknssh_11_bigdata_spark.operators.relational import sql_literal
+
+    one = spark.range(1)
+    got = one.selectExpr(
+        *[f"{sql_literal(v)} AS c{i}" for i, v in enumerate(values)]
+    )
+    ref = one.select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(values)])
+    assert got.dtypes == ref.dtypes
+    for v, g in zip(values, got.first()):
+        if isinstance(v, float) and math.isnan(v):
+            assert math.isnan(g)
+        else:
+            assert g == v and type(g) is type(v), (v, g)
+            if isinstance(v, float):  # -0.0 keeps its sign
+                assert math.copysign(1, g) == math.copysign(1, v)
 
 
 def test_salted_agg_equals_plain_agg(spark):
