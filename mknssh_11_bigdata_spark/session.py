@@ -130,3 +130,13 @@ def release_checkpoints(spark: SparkSession) -> int:
     for jrdd in jrdds:
         jrdd.unpersist(False)
     return len(jrdds)
+
+
+def release_checkpoint(df) -> None:
+    """Free the RDD blocks pinned by ONE ``localCheckpoint`` frame.
+
+    ``DataFrame.unpersist`` cannot: it drops cache-manager entries, and
+    a local checkpoint is a persisted RDD under the frame's
+    ``LogicalRDD`` leaf, not a cached query. The frame, and every frame
+    built on it, is unreadable afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

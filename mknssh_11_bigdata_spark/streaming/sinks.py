@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import nz
+from ..session import release_checkpoint
 
 
 class _CommitMarkerLedger:
@@ -62,12 +63,6 @@ class _CommitMarkerLedger:
     def _mark_committed(self, batch_id: int) -> None:
         self._marker_dir.mkdir(parents=True, exist_ok=True)
         (self._marker_dir / str(batch_id)).touch()
-
-    def _unmark(self, batch_id: int) -> None:
-        try:
-            (self._marker_dir / str(batch_id)).unlink()
-        except OSError:
-            pass
 
     def _geometry_guard(self, _defaults: dict | None = None, **fields) -> None:
         """Persist-or-validate the sink's layout-shaping parameters.
@@ -226,20 +221,126 @@ class IdempotentParquetSink(_CommitMarkerLedger):
         return df.drop("batch_id")
 
 
-class LatestSnapshotSink(_CommitMarkerLedger):
+def _fold(prev, part: DataFrame, keys, *cols, agg=F.sum) -> DataFrame:
+    """The additive merge (idempotent with ``agg=F.max``): ``agg`` of
+    each of ``cols`` per ``keys`` over ``prev ∪ part``. Before the first
+    commit the partial, already aggregated, is the state."""
+    if prev is None:
+        return part
+    return (
+        prev.unionByName(part)
+        .groupBy(*keys)
+        .agg(*[agg(c).alias(c) for c in cols])
+    )
+
+
+class _VersionedStateSink(_CommitMarkerLedger):
+    """Exactly-once ``foreachBatch`` skeleton for a sink whose state is
+    a mergeable partial aggregate — sum, max, bottom-k, rank-1 or
+    replace-by-key, the partial-aggregation algebra of Dremel's serving
+    tree.
+    A subclass supplies only that algebra and its read views:
+
+    * ``partial(batch_df)`` — the batch's own partial state;
+    * ``merge(*prev, part)`` — the previous committed tables (in
+      ``_tables`` order, each None before the first commit) folded with
+      the partial into the new state.
+
+    With sidecars, ``merge`` returns a tuple, one entry per table, for
+    ``_write``.
+
+    Everything else happens here, once:
+
+    * layout — the state table at ``<root>/v=<batchId>``; each sidecar
+      named in ``_tables`` after ``""`` at ``<root>/<name>/v=<batchId>``,
+      written as one file;
+    * geometry — a non-empty ``_geometry_fields()`` is persisted and
+      validated through ``_geometry_guard`` BEFORE the replay check;
+    * replay — a committed batch id drops before any Spark work;
+    * commit — the ``_committed/<batchId>`` marker is written after
+      every table, so a crash mid-write leaves a version readers never
+      see and the replay overwrites;
+    * pruning — after the commit, every table of the versions older
+      than the newest ``keep_versions`` is deleted, but their commit
+      MARKERS are kept: a replayed pruned id must still drop, since
+      re-merging it would double-count additive state and, for
+      replace-by-key state, rebuild a version the same prune deletes
+      again. A marker is an empty file, noise next to the state pruned;
+    * reads — :meth:`_latest` lists the markers once and reads every
+      requested table at that ONE version, so a view spanning the state
+      and a sidecar never pairs two versions while a batch commits.
+    """
+
+    #: tables under the root: ``""`` is the state, the rest sidecars
+    _tables: tuple[str, ...] = ("",)
+
+    def __init__(self, root: str, keep_versions: int = 2):
+        super().__init__(root)
+        self.keep_versions = keep_versions
+
+    def _geometry_fields(self) -> dict:
+        """Layout-shaping parameters the persisted state depends on."""
+        return {}
+
+    def _path(self, table: str, version: int) -> str:
+        return f"{self.root}/{table + '/' if table else ''}v={version}"
+
+    def _latest(self, spark: SparkSession, tables=("",)):
+        """``(version, [frame per table])`` at the newest committed
+        version, or ``(None, [None, ...])`` before the first commit. A
+        sidecar missing at that version (a root written before the
+        sidecar existed) reads as None."""
+        committed = self.committed_batches()
+        if not committed:
+            return None, [None] * len(tables)
+        v = max(committed)
+        paths = [(t, self._path(t, v)) for t in tables]
+        return v, [
+            spark.read.parquet(p)
+            if not t or pathlib.Path(p).exists()
+            else None
+            for t, p in paths
+        ]
+
+    def _state(self, spark: SparkSession) -> DataFrame | None:
+        return self._latest(spark)[1][0]
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        fields = self._geometry_fields()
+        if fields:
+            self._geometry_guard(**fields)
+        if batch_id in self.committed_batches():
+            return  # replay of a committed batch — exactly-once drop
+        part = self.partial(batch_df)
+        _, prev = self._latest(batch_df.sparkSession, self._tables)
+        self._write(batch_id, self.merge(*prev, part))
+        self._mark_committed(batch_id)
+        self._prune()
+
+    def _write(self, batch_id: int, state) -> None:
+        frames = state if isinstance(state, tuple) else (state,)
+        for t, df in zip(self._tables, frames):
+            (df.coalesce(1) if t else df).write.mode("overwrite").parquet(
+                self._path(t, batch_id)
+            )
+
+    def _prune(self) -> None:
+        import shutil
+
+        for old in sorted(self.committed_batches())[: -self.keep_versions]:
+            for t in self._tables:
+                shutil.rmtree(self._path(t, old), ignore_errors=True)
+
+
+class LatestSnapshotSink(_VersionedStateSink):
     """``foreachBatch`` upsert maintaining a latest-record-per-key
     snapshot — the streaming twin of the batch
     ``events_latest_per_user`` compaction (MERGE INTO's "keep the
     newest version of every key" special case, on plain parquet).
 
-    Each micro-batch rewrites the snapshot as
-    ``rank-1 over (union(previous snapshot, batch))`` into a NEW
-    versioned directory ``v=<batchId>``, then drops a commit marker —
-    so a replayed committed batch is skipped, a crashed half-written
-    version is invisible to readers (no marker) and simply overwritten
-    by the replay, and readers always see one consistent committed
-    version. Old versions beyond ``keep_versions`` are pruned after
-    commit.
+    Each micro-batch's state is ``rank-1 over (previous snapshot ∪
+    batch)``, versioned and marker-gated by :class:`_VersionedStateSink`,
+    so readers always see one consistent committed version.
 
     Ordering must be TOTAL per key (pass a unique tiebreaker in
     ``order_cols``) or the kept record is nondeterministic — same
@@ -260,53 +361,32 @@ class LatestSnapshotSink(_CommitMarkerLedger):
         order_cols: list[str],
         keep_versions: int = 2,
     ):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
-        self.keep_versions = keep_versions
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        """The latest COMMITTED snapshot (None before the first commit)."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: the latest COMMITTED snapshot (None before the first commit)
+    read = _VersionedStateSink._state
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window, functions as F
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df
 
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        prev = self.read(batch_df.sparkSession)
-        merged = (
-            prev.unionByName(batch_df.select(*prev.columns))
-            if prev is not None
-            else batch_df
-        )
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        from pyspark.sql import Window
+
+        if prev is not None:
+            part = prev.unionByName(part.select(*prev.columns))
         w = Window.partitionBy(*self.key_cols).orderBy(
             *[F.col(c).desc() for c in self.order_cols]
         )
-        snap = (
-            merged.withColumn("__rn", F.row_number().over(w))
+        return (
+            part.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        snap.write.mode("overwrite").parquet(f"{self.root}/v={batch_id}")
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(
-                f"{self.root}/v={old}", ignore_errors=True
-            )
-            self._unmark(old)
 
 
-class SeasonalBaselineSink(_CommitMarkerLedger):
+class SeasonalBaselineSink(_VersionedStateSink):
     """Streaming twin of the batch ``events_seasonal_baseline`` query
     (the last SURVEY round-4 theme): maintains the DAILY EVENT-COUNT
     SPINE from an update-mode watermarked tumbling-day aggregation, and
@@ -323,10 +403,9 @@ class SeasonalBaselineSink(_CommitMarkerLedger):
     once every event is absorbed (equivalence e2e-tested).
 
     Each micro-batch of updated ``(d, n_events)`` rows REPLACES its
-    days in a new versioned snapshot ``v=<batchId>`` (update-mode
-    deltas carry the full recomputed aggregate per changed window, so
-    replace-by-key is the correct upsert), marker-gated with the
-    module's exactly-once contract, old versions pruned after commit.
+    days in the versioned spine (update-mode deltas carry the full
+    recomputed aggregate per changed window, so replace-by-key is the
+    correct upsert).
 
     Watermark honesty: the upstream watermark bounds window state at
     the cost of DROPPING events later than the delay — the streamed
@@ -336,16 +415,8 @@ class SeasonalBaselineSink(_CommitMarkerLedger):
     uses one generous enough that nothing drops.
     """
 
-    def __init__(self, root: str, keep_versions: int = 2):
-        super().__init__(root)
-        self.keep_versions = keep_versions
-
-    def spine(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED (d, n_events) spine (None pre-commit)."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED (d, n_events) spine (None pre-commit)
+    spine = _VersionedStateSink._state
 
     def baseline(self, spark: SparkSession) -> DataFrame | None:
         """The seasonal-baseline view over the maintained spine —
@@ -378,34 +449,18 @@ class SeasonalBaselineSink(_CommitMarkerLedger):
             .orderBy("d")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        updates = batch_df.select("d", "n_events")
-        prev = self.spine(batch_df.sparkSession)
-        merged = (
-            prev.join(updates.select("d"), "d", "left_anti").unionByName(
-                updates
-            )
-            if prev is not None
-            else updates
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.select("d", "n_events")
+
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        if prev is None:
+            return part
+        return prev.join(part.select("d"), "d", "left_anti").unionByName(
+            part
         )
-        merged.write.mode("overwrite").parquet(
-            f"{self.root}/v={batch_id}"
-        )
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
-            self._unmark(old)
 
 
-class SourceQualityDriftSink(_CommitMarkerLedger):
+class SourceQualityDriftSink(_VersionedStateSink):
     """Streaming twin of ``doc_source_quality_drift`` — the per-source
     crawl-quality monitor maintained INCREMENTALLY over a document
     stream, closing the drift-monitor theme the seasonal sink opened.
@@ -423,22 +478,10 @@ class SourceQualityDriftSink(_CommitMarkerLedger):
     approximately. The drift view (shard means, spans, per-source avg,
     rounded exactly as the batch query) derives from the snapshot at
     read time.
-
-    Same exactly-once discipline as the module's other sinks:
-    replace-by-merge into ``v=<batchId>``, marker after data, replayed
-    batch ids dropped, old versions pruned.
     """
 
-    def __init__(self, root: str, keep_versions: int = 2):
-        super().__init__(root)
-        self.keep_versions = keep_versions
-
-    def stats(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED (source, shard, n, sq) partials."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED (source, shard, n, sq) partials
+    stats = _VersionedStateSink._state
 
     def drift(self, spark: SparkSession) -> DataFrame | None:
         """The drift view — column-identical to
@@ -475,15 +518,13 @@ class SourceQualityDriftSink(_CommitMarkerLedger):
             .orderBy("source")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def partial(self, batch_df: DataFrame) -> DataFrame:
         from ..functions.text import quality_score
 
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
         # the batch query's constant, imported so the twins can't drift
         from ..queries_analytics import _DRIFT_SHARDS as shards
 
-        part = (
+        return (
             batch_df.select(
                 "source",
                 (F.col("doc_id") % shards).alias("shard"),
@@ -495,39 +536,12 @@ class SourceQualityDriftSink(_CommitMarkerLedger):
                 F.sum("q").alias("sq"),  # quarter-points: exact sum
             )
         )
-        prev = self.stats(batch_df.sparkSession)
-        if prev is not None:
-            merged = (
-                prev.unionByName(part)
-                .groupBy("source", "shard")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("sq").alias("sq"),
-                )
-            )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(f"{self.root}/v={batch_id}")
-        self._mark_committed(batch_id)
-        self._prune()
 
-    def _prune(self) -> None:
-        """Drop old snapshot DIRECTORIES but KEEP their commit markers:
-        this sink's merge is ADDITIVE (n, sq), not replace-by-key, so a
-        replay of a pruned batch id must still hit the exactly-once
-        drop — unmarking would let a replayed batch re-merge and
-        double-count (ADVICE r4; the replace-by-key sinks above stay
-        unmark-on-prune because their merges are idempotent). Markers
-        are empty files: the ledger grows one inode per batch, noise
-        next to the snapshot data being pruned."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        return _fold(prev, part, ["source", "shard"], "n", "sq")
 
 
-class ZipfSourceDriftSink(_CommitMarkerLedger):
+class ZipfSourceDriftSink(_VersionedStateSink):
     """Streaming twin of ``corpus_zipf_source_drift`` — the per-source
     Zipf language-health monitor maintained INCREMENTALLY over a
     document stream, closing the drift-monitor symmetry VERDICT r4 #5
@@ -551,25 +565,15 @@ class ZipfSourceDriftSink(_CommitMarkerLedger):
     (previous snapshot ∪ batch partials); a production deployment
     would key-partition the snapshot and rewrite only touched
     partitions (same note as ``LatestSnapshotSink``).
-
-    Same exactly-once discipline as the module's other sinks:
-    versioned ``v=<batchId>`` snapshots, marker after data, replayed
-    batch ids dropped, pruning keeps markers (additive merge — same
-    rationale as ``SourceQualityDriftSink._prune``).
     """
 
     def __init__(self, root: str, keep_versions: int = 2):
-        super().__init__(root)
-        self.keep_versions = keep_versions
+        super().__init__(root, keep_versions)
         self._drift_ckpt: DataFrame | None = None
         self._drift_ckpt_version: int | None = None
 
-    def counts(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED (source, token, f) counts."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED (source, token, f) counts
+    counts = _VersionedStateSink._state
 
     def drift(self, spark: SparkSession) -> DataFrame | None:
         """The drift view — column-identical to
@@ -579,32 +583,29 @@ class ZipfSourceDriftSink(_CommitMarkerLedger):
 
         The counts snapshot feeds both OLS fits, so it is
         localCheckpointed — but keyed by the committed version and
-        unpersisted on version change (ADVICE r5): a long-lived
+        released on version change (ADVICE r5): a long-lived
         monitoring session calling ``drift()`` repeatedly holds ONE
         cached snapshot, not an accumulating block per call. A view
         returned by an earlier call stays valid until the next
         committed version supersedes it."""
         from ..queries_analytics import zipf_drift_from_source_counts
 
-        committed = self.committed_batches()
-        if not committed:
+        version, _ = self._latest(spark, ())
+        if version is None:
             return None
-        version = max(committed)
         if self._drift_ckpt_version != version:
             if self._drift_ckpt is not None:
-                self._drift_ckpt.unpersist()
+                release_checkpoint(self._drift_ckpt)
             self._drift_ckpt = spark.read.parquet(
-                f"{self.root}/v={version}"
+                self._path("", version)
             ).localCheckpoint(eager=True)
             self._drift_ckpt_version = version
         return zipf_drift_from_source_counts(self._drift_ckpt)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def partial(self, batch_df: DataFrame) -> DataFrame:
         from ..functions import text as TX
 
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        part = (
+        return (
             batch_df.select(
                 "source",
                 F.explode(TX.tokens(F.col("text"))).alias("token"),
@@ -612,30 +613,12 @@ class ZipfSourceDriftSink(_CommitMarkerLedger):
             .groupBy("source", "token")
             .agg(F.count(F.lit(1)).cast("long").alias("f"))
         )
-        prev = self.counts(batch_df.sparkSession)
-        if prev is not None:
-            merged = (
-                prev.unionByName(part)
-                .groupBy("source", "token")
-                .agg(F.sum("f").cast("long").alias("f"))
-            )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(f"{self.root}/v={batch_id}")
-        self._mark_committed(batch_id)
-        self._prune()
 
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        return _fold(prev, part, ["source", "token"], "f")
 
 
-class HourlyAnomalySink(_CommitMarkerLedger):
+class HourlyAnomalySink(_VersionedStateSink):
     """Streaming twin of ``event_hourly_anomaly`` — the trailing-
     baseline ops monitor maintained INCREMENTALLY over the event
     stream; the last batch monitor in the registry without a streaming
@@ -650,23 +633,10 @@ class HourlyAnomalySink(_CommitMarkerLedger):
     hourly_anomaly_from_counts`) — streamed ≡ batch bit-for-bit
     (e2e-tested). State is types×hours-sized (a few rows per hour),
     bounded regardless of event volume.
-
-    Same exactly-once discipline as the module's other sinks:
-    versioned snapshots, marker after data, replayed ids dropped,
-    pruning keeps markers (additive merge — same rationale as
-    ``SourceQualityDriftSink._prune``).
     """
 
-    def __init__(self, root: str, keep_versions: int = 2):
-        super().__init__(root)
-        self.keep_versions = keep_versions
-
-    def counts(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED (event_type, hour_ts, n_events) spine."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED (event_type, hour_ts, n_events) spine
+    counts = _VersionedStateSink._state
 
     def anomalies(self, spark: SparkSession) -> DataFrame | None:
         """The scored view — column-identical to
@@ -679,40 +649,20 @@ class HourlyAnomalySink(_CommitMarkerLedger):
             return None
         return hourly_anomaly_from_counts(counts)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        part = (
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 "event_type", F.date_trunc("hour", "ts").alias("hour_ts")
             )
             .groupBy("event_type", "hour_ts")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        prev = self.counts(batch_df.sparkSession)
-        if prev is not None:
-            merged = (
-                prev.unionByName(part)
-                .groupBy("event_type", "hour_ts")
-                .agg(F.sum("n_events").alias("n_events"))
-            )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(f"{self.root}/v={batch_id}")
-        self._mark_committed(batch_id)
-        self._prune()
 
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        return _fold(prev, part, ["event_type", "hour_ts"], "n_events")
 
 
-class HeavyHittersMonitorSink(_CommitMarkerLedger):
+class HeavyHittersMonitorSink(_VersionedStateSink):
     """Streaming twin of ``corpus_heavy_hitters``' sketch stage: a
     CONSTANT-size Misra-Gries summary over the document stream's
     tokens, maintained incrementally — the boilerplate/hot-key monitor
@@ -731,30 +681,23 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
     replay, truncation forced).
 
     State is EXACTLY <= capacity rows (plus the running token total as
-    a constant column) — unlike the Zipf sink's vocabulary-sized
-    counts, this monitor's snapshot cost is independent of corpus and
-    vocabulary size; that is its reason to exist at 100 TB. The
-    (capacity+1)-th-largest probe collects capacity+1 rows, never the
-    summary.
-
-    Same exactly-once discipline as the module's other monitors:
-    versioned ``v=<batchId>`` snapshots, marker after data, replayed
-    batch ids dropped, pruning keeps markers.
+    a constant column, and as the one-row ``n/v=<batchId>`` sidecar) —
+    unlike the Zipf sink's vocabulary-sized counts, this monitor's
+    snapshot cost is independent of corpus and vocabulary size; that is
+    its reason to exist at 100 TB. The (capacity+1)-th-largest probe
+    collects capacity+1 rows, never the summary.
     """
 
+    _tables = ("", "n")
+
     def __init__(self, root: str, capacity: int = 64, keep_versions: int = 2):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         if capacity < 1:
             raise ValueError("capacity must be >= 1")
         self.capacity = capacity
-        self.keep_versions = keep_versions
 
-    def summary(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED summary: (item, est, n_total)."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED summary: (item, est, n_total)
+    summary = _VersionedStateSink._state
 
     def n_total(self, spark: SparkSession) -> int:
         """Running stream token total, read from the one-row sidecar
@@ -763,22 +706,15 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
         capacity+1 counters all tied) must not reset n, or every later
         ``max_undercount``/``guaranteed_heavy`` is computed against an
         understated total and the guarantee column lies."""
-        import pathlib
+        return self._n_of(*self._latest(spark, self._tables)[1])
 
-        committed = self.committed_batches()
-        if not committed:
+    @staticmethod
+    def _n_of(summary: DataFrame | None, side: DataFrame | None) -> int:
+        if summary is None:
             return 0
-        side = pathlib.Path(self.root) / "n" / f"v={max(committed)}"
-        if side.exists():
-            rows = spark.read.parquet(str(side)).collect()
-            return int(rows[0]["n_total"]) if rows else 0
         # legacy root (pre-sidecar): best effort from the summary rows
-        head = (
-            spark.read.parquet(f"{self.root}/v={max(committed)}")
-            .limit(1)
-            .collect()
-        )
-        return int(head[0]["n_total"]) if head else 0
+        rows = (side if side is not None else summary.limit(1)).collect()
+        return int(rows[0]["n_total"]) if rows else 0
 
     def heavy_hitters(self, spark: SparkSession) -> DataFrame | None:
         """Summary rows with their bound columns: ``est`` (a lower
@@ -787,11 +723,12 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
         ``guaranteed_heavy`` — true iff est alone already clears the
         n/(capacity+1) bar, i.e. the item is a heavy hitter under ANY
         resolution of the undercount. ``n_total`` comes from the
-        sidecar, never the (possibly empty) summary rows."""
-        s = self.summary(spark)
+        sidecar of the same version, never the (possibly empty) summary
+        rows."""
+        _, (s, side) = self._latest(spark, self._tables)
         if s is None:
             return None
-        n = self.n_total(s.sparkSession)
+        n = self._n_of(s, side)
         bound = F.lit(n // (self.capacity + 1)).cast("long")
         return s.select(
             "item",
@@ -801,12 +738,9 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
             (F.col("est") > bound).alias("guaranteed_heavy"),
         ).orderBy(F.col("est").desc(), "item")
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def partial(self, batch_df: DataFrame):
         from ..functions import text as TX
 
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
         part = (
             batch_df.select(
                 F.explode(TX.tokens(F.col("text"))).alias("item")
@@ -814,23 +748,24 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
             .groupBy("item")
             .agg(F.count(F.lit(1)).cast("long").alias("est"))
         )
-        batch_n = part.agg(F.sum("est").cast("long")).collect()[0][0] or 0
-        prev = self.summary(spark)
+        return part, part.agg(F.sum("est").cast("long")).collect()[0][0] or 0
+
+    def merge(self, prev: DataFrame | None, side: DataFrame | None, part):
+        counts, batch_n = part
         # n comes from the SIDECAR, never the summary rows: a
         # truncation can legally empty the summary (capacity+1 counters
         # all tied), and reading prev_n from a zero-row snapshot would
         # reset the running total — understating every later bound and
         # falsely claiming guaranteed_heavy (ADVICE r6)
-        prev_n = self.n_total(spark)
+        n = self._n_of(prev, side) + batch_n
         if prev is not None:
-            merged = (
-                prev.select("item", "est")
-                .unionByName(part)
-                .groupBy("item")
-                .agg(F.sum("est").cast("long").alias("est"))
-            )
-        else:
-            merged = part
+            prev = prev.select("item", "est")
+        return _fold(prev, counts, ["item"], "est"), n
+
+    def _write(self, batch_id: int, state) -> None:
+        """The Misra-Gries truncation, then the summary and the scalar
+        ``n`` sidecar."""
+        merged, n_now = state
         merged = merged.localCheckpoint(eager=True)  # summary-sized
         top = (
             merged.orderBy(F.col("est").desc(), "item")
@@ -844,31 +779,17 @@ class HeavyHittersMonitorSink(_CommitMarkerLedger):
             )
         else:
             final = merged
-        n_now = prev_n + batch_n
-        final.withColumn(
-            "n_total", F.lit(n_now).cast("long")
-        ).write.mode("overwrite").parquet(f"{self.root}/v={batch_id}")
-        spark.range(1).select(
-            F.lit(n_now).cast("long").alias("n_total")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/n/v={batch_id}"
+        n = F.lit(n_now).cast("long").alias("n_total")
+        final.select("*", n).write.mode("overwrite").parquet(
+            self._path("", batch_id)
         )
-        merged.unpersist()
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
-            shutil.rmtree(f"{self.root}/n/v={old}", ignore_errors=True)
+        merged.sparkSession.range(1).select(n).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(self._path("n", batch_id))
+        release_checkpoint(merged)
 
 
-class KmvDistinctMonitorSink(_CommitMarkerLedger):
+class KmvDistinctMonitorSink(_VersionedStateSink):
     """Streaming twin of ``event_kmv_distinct``'s KMV sketch (VERDICT
     r6 missing #3 — the sketch family's last asymmetry): a per-key
     distinct-cardinality monitor whose state is BOUNDED at k+1 hashes
@@ -897,10 +818,6 @@ class KmvDistinctMonitorSink(_CommitMarkerLedger):
     audit column is NOT derivable from bounded state (that is the
     point of the sketch); the e2e test asserts the estimate/h_k
     columns against the batch query on the same streamed data.
-
-    Same exactly-once discipline as the module's other monitors:
-    versioned ``v=<batchId>`` state snapshots, marker after data,
-    replayed batch ids dropped, pruning keeps markers.
     """
 
     def __init__(
@@ -912,21 +829,23 @@ class KmvDistinctMonitorSink(_CommitMarkerLedger):
         salt: str = "kmv-v1",
         keep_versions: int = 2,
     ):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         if k < 1:
             raise ValueError("k must be >= 1")
         self.key_col = key_col
         self.id_col = id_col
         self.k = k
         self.salt = salt
-        self.keep_versions = keep_versions
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED state: (key, h) rows, <= k+1 per key."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED state: (key, h) rows, <= k+1 per key
+    state = _VersionedStateSink._state
+
+    def _geometry_fields(self) -> dict:
+        # persisted state is k+1 hashes under ONE (k, salt): reopening
+        # with a larger k would read short state as the exact arm
+        # (silently wrong estimates), a different salt would merge
+        # incomparable hash spaces
+        return {"k": self.k, "salt": self.salt}
 
     def estimates(self, spark: SparkSession) -> DataFrame | None:
         """Per-key cardinality view ``(key, n_state, hk,
@@ -981,19 +900,11 @@ class KmvDistinctMonitorSink(_CommitMarkerLedger):
             "key_a", "key_b", "u_est", "overlap_est", "jaccard_est"
         ).orderBy("key_a", "key_b")
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.sketches import bottom_k_values, kmv_hash
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        from ..operators.sketches import kmv_hash
 
-        # persisted state is k+1 hashes under ONE (k, salt): reopening
-        # with a larger k would read short state as the exact arm
-        # (silently wrong estimates), a different salt would merge
-        # incomparable hash spaces — record and validate
-        self._geometry_guard(k=self.k, salt=self.salt)
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
         hcol = self.id_col + "_h"
-        part = (
+        hashed = (
             batch_df.select(self.key_col, self.id_col)
             .distinct()
             .select(
@@ -1001,35 +912,22 @@ class KmvDistinctMonitorSink(_CommitMarkerLedger):
                 kmv_hash(F.col(self.id_col), self.salt).alias(hcol),
             )
         )
-        batch_mins = bottom_k_values(
-            part, self.key_col, hcol, self.k + 1
-        )
-        prev = self.state(spark)
-        merged = (
-            batch_mins
-            if prev is None
-            else prev.unionByName(batch_mins)
-        )
+        return self._bottom(hashed)
+
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
         # state re-reduces with the same bottom-(k+1) operator it was
         # built with; (key x (k+1))-sized, so this merge is sliver work
-        state = bottom_k_values(merged, self.key_col, hcol, self.k + 1)
-        state.write.mode("overwrite").parquet(
-            f"{self.root}/v={batch_id}"
+        return self._bottom(part if prev is None else prev.unionByName(part))
+
+    def _bottom(self, df: DataFrame) -> DataFrame:
+        from ..operators.sketches import bottom_k_values
+
+        return bottom_k_values(
+            df, self.key_col, self.id_col + "_h", self.k + 1
         )
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
 
 
-class HllDistinctMonitorSink(_CommitMarkerLedger):
+class HllDistinctMonitorSink(_VersionedStateSink):
     """Streaming twin of ``event_hll_distinct``'s portable HyperLogLog:
     a per-key distinct-cardinality monitor whose state is EXACTLY m=64
     register maxima per key — beside ``KmvDistinctMonitorSink`` this is
@@ -1048,11 +946,6 @@ class HllDistinctMonitorSink(_CommitMarkerLedger):
     Unlike the KMV twin there is no exact-arm discriminator to emulate:
     the batch HLL query's arm switch depends only on (raw, V), both
     derivable from bounded state.
-
-    Same exactly-once discipline as the module's other monitors:
-    versioned ``v=<batchId>`` snapshots, marker after data, replayed
-    batch ids dropped, pruning keeps markers; geometry (m, rank cap,
-    salt) persisted and validated on reopen.
     """
 
     def __init__(
@@ -1063,20 +956,22 @@ class HllDistinctMonitorSink(_CommitMarkerLedger):
         salt: str = "hll-v1",
         keep_versions: int = 2,
     ):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         self.key_col = key_col
         self.id_col = id_col
         self.salt = salt
-        self.keep_versions = keep_versions
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED state: (key, reg, mreg), <= 64 rows/key."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED state: (key, reg, mreg), <= 64 rows/key
+    state = _VersionedStateSink._state
 
-    def _register_maxima(self, batch_df: DataFrame) -> DataFrame:
+    def _geometry_fields(self) -> dict:
+        from ..queries_events import HLL_M, _HLL_RANK_CAP
+
+        # register maxima are comparable only under ONE (m, cap, salt):
+        # a mismatched reopen would fold incomparable registers
+        return {"m": HLL_M, "rank_cap": _HLL_RANK_CAP, "salt": self.salt}
+
+    def partial(self, batch_df: DataFrame) -> DataFrame:
         from ..operators.sketches import kmv_hash
         from ..queries_events import _hll_registers
 
@@ -1087,6 +982,10 @@ class HllDistinctMonitorSink(_CommitMarkerLedger):
         # the SHARED register construction (queries_events._hll_registers)
         # — streamed registers are the batch query's bit-for-bit
         return _hll_registers(h, self.key_col)
+
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
+        # (keys x 64)-sized — sliver work
+        return _fold(prev, part, [self.key_col, "reg"], "mreg", agg=F.max)
 
     def estimates(self, spark: SparkSession) -> DataFrame | None:
         """Per-key cardinality view ``(key, hll_estimate,
@@ -1134,42 +1033,8 @@ class HllDistinctMonitorSink(_CommitMarkerLedger):
         )
         return _hll_estimate_frame(wm, key).orderBy(key)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..queries_events import HLL_M, _HLL_RANK_CAP
 
-        # register maxima are comparable only under ONE (m, cap, salt):
-        # a mismatched reopen would fold incomparable registers
-        self._geometry_guard(
-            m=HLL_M, rank_cap=_HLL_RANK_CAP, salt=self.salt
-        )
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
-        part = self._register_maxima(batch_df)
-        prev = self.state(spark)
-        merged = part if prev is None else (
-            prev.unionByName(part)
-            .groupBy(self.key_col, "reg")
-            .agg(F.max("mreg").alias("mreg"))
-        )
-        # (keys x 64)-sized — sliver work
-        merged.write.mode("overwrite").parquet(
-            f"{self.root}/v={batch_id}"
-        )
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        """Keep commit markers (idempotent MAX merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
-
-
-class CmsFrequencyMonitorSink(_CommitMarkerLedger):
+class CmsFrequencyMonitorSink(_VersionedStateSink):
     """Streaming twin of ``corpus_cms_frequency``'s sketch stage: a
     Count-Min counter matrix over the document stream's tokens,
     maintained incrementally — the point-frequency monitor ("how often
@@ -1192,12 +1057,6 @@ class CmsFrequencyMonitorSink(_CommitMarkerLedger):
     capacity bound but answering point queries instead of proposing a
     top set. Probes (:meth:`estimates`) are a broadcast join of the
     geometry-sized matrix, never a corpus rescan.
-
-    Same exactly-once discipline as the module's other monitors:
-    versioned ``v=<batchId>`` snapshots, marker after data, replayed
-    batch ids dropped, pruning keeps markers. Geometry (depth, width,
-    salt) is persisted and validated on reopen — cells summed under
-    one bucket layout cannot be probed under another.
     """
 
     def __init__(
@@ -1208,20 +1067,21 @@ class CmsFrequencyMonitorSink(_CommitMarkerLedger):
         salt: str = "cms-v1",
         keep_versions: int = 2,
     ):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         if depth < 1 or width < 1:
             raise ValueError("depth and width must be >= 1")
         self.depth = depth
         self.width = width
         self.salt = salt
-        self.keep_versions = keep_versions
 
-    def sketch(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED counter matrix: (d, bucket, cnt)."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED counter matrix: (d, bucket, cnt)
+    sketch = _VersionedStateSink._state
+
+    def _geometry_fields(self) -> dict:
+        # persisted cells are sums under ONE (depth, width, salt)
+        # bucket layout: a mismatched reopen would add incomparable
+        # matrices or probe at wrong positions
+        return {"depth": self.depth, "width": self.width, "salt": self.salt}
 
     def estimates(
         self, universe: DataFrame, item_col: str
@@ -1240,46 +1100,18 @@ class CmsFrequencyMonitorSink(_CommitMarkerLedger):
             universe, item_col, s, self.depth, self.width, self.salt
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def partial(self, batch_df: DataFrame) -> DataFrame:
         from ..functions import text as TX
         from ..operators.sketches import cms_build
 
-        # persisted cells are sums under ONE (depth, width, salt)
-        # bucket layout: a mismatched reopen would add incomparable
-        # matrices or probe at wrong positions — record and validate
-        self._geometry_guard(
-            depth=self.depth, width=self.width, salt=self.salt
-        )
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
         items = batch_df.select(
             F.explode(TX.tokens(F.col("text"))).alias("item")
         )
-        part = cms_build(
-            items, "item", self.depth, self.width, self.salt
-        )
-        prev = self.sketch(spark)
-        merged = part if prev is None else (
-            prev.unionByName(part)
-            .groupBy("d", "bucket")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
+        return cms_build(items, "item", self.depth, self.width, self.salt)
+
+    def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
         # geometry-sized (<= depth x width rows) — sliver work
-        merged.write.mode("overwrite").parquet(
-            f"{self.root}/v={batch_id}"
-        )
-        self._mark_committed(batch_id)
-        self._prune()
-
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
-
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
+        return _fold(prev, part, ["d", "bucket"], "cnt")
 
 
 #: Integer ppm novelty share — the ONE expression the novelty
@@ -1316,10 +1148,10 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
     telemetry, never wrong-sided. Size ``m_bits`` from the expected
     gram vocabulary (~16 bits per distinct gram, the repo geometry).
 
-    Same exactly-once discipline as the module's other monitors:
-    per-batch slices + telemetry gated by commit markers, replayed
-    batch ids dropped. Slices are never rewritten (the bitmap is
-    additive), so there is no version pruning; :meth:`compact` folds
+    Exactly-once discipline: per-batch slices + telemetry gated by
+    commit markers, replayed batch ids dropped. Slices are never
+    rewritten (the bitmap is additive), so there is no version
+    pruning; :meth:`compact` folds
     accumulated slices into one consolidated ``compacted_v=<epoch>``
     word table (one bit_or groupBy — the merge the read path already
     performs) with the repo's crash-safety ordering: data first,
@@ -1416,6 +1248,7 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         self._finish_compaction(
             epoch, prev_epoch, ["bloom"], include_seed=False
         )
+        release_checkpoint(folded)
         return epoch
 
     def novelty(self, spark: SparkSession) -> DataFrame | None:
@@ -1543,9 +1376,10 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
             f"{self.root}/bloom/batch_id={batch_id}"
         )
         self._mark_committed(batch_id)
+        release_checkpoint(grams)
 
 
-class QuantileSketchMonitorSink(_CommitMarkerLedger):
+class QuantileSketchMonitorSink(_VersionedStateSink):
     """Streaming twin of ``event_value_quantile_sketch``'s bottom-k
     uniform row sample — the DISTRIBUTION member of the monitor family
     (MG: top-set, KMV/HLL: cardinality, CMS: frequency, novelty:
@@ -1577,14 +1411,9 @@ class QuantileSketchMonitorSink(_CommitMarkerLedger):
     ``ceil(p * n_sample)`` index, n_sample = min(n_rows, k) by
     construction. Groups with n_rows <= k report exact quantiles (the
     sample is the whole group).
-
-    Same exactly-once discipline as the module's other monitors:
-    versioned ``v=<batchId>`` snapshots, marker after data, replayed
-    batch ids dropped, pruning keeps markers; geometry (k, salt, the
-    hashed id column, the value column) persisted and validated on
-    reopen — state hashed from one id column is incomparable with
-    another's even though the schema matches.
     """
+
+    _tables = ("", "n")
 
     def __init__(
         self,
@@ -1596,7 +1425,7 @@ class QuantileSketchMonitorSink(_CommitMarkerLedger):
         salt: str = "qsk-v1",
         keep_versions: int = 2,
     ):
-        super().__init__(root)
+        super().__init__(root, keep_versions)
         if k < 1:
             raise ValueError("k must be >= 1")
         self.key_col = key_col
@@ -1604,52 +1433,57 @@ class QuantileSketchMonitorSink(_CommitMarkerLedger):
         self.val_col = val_col
         self.k = k
         self.salt = salt
-        self.keep_versions = keep_versions
 
-    def state(self, spark: SparkSession) -> DataFrame | None:
-        """Latest COMMITTED state: (key, h, val) rows, <= k per key."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(f"{self.root}/v={max(committed)}")
+    #: latest COMMITTED state: (key, h, val) rows, <= k per key
+    state = _VersionedStateSink._state
 
     def n_rows(self, spark: SparkSession) -> DataFrame | None:
         """Per-key running row totals from the additive sidecar."""
-        committed = self.committed_batches()
-        if not committed:
-            return None
-        return spark.read.parquet(
-            f"{self.root}/n/v={max(committed)}"
-        )
+        return self._latest(spark, ("n",))[1][0]
 
-    def estimates(self, spark: SparkSession) -> DataFrame | None:
-        """Per-key quantile view ``(key, n_rows, n_sample, p50_est,
-        p90_est, p99_est)`` — the batch query's sketch-arm arithmetic
-        (same probed quantiles, same integer ceil-rank) evaluated over
-        the persisted sample."""
+    def _geometry_fields(self) -> dict:
+        # state hashed from one id column is incomparable with another's
+        # even though the schema matches: one sample multiset is
+        # comparable only under ONE (k, salt, id column, value column)
+        return {
+            "k": self.k,
+            "salt": self.salt,
+            "id_col": self.id_col,
+            "val_col": self.val_col,
+        }
+
+    def _estimate(self, sample: DataFrame, n: DataFrame) -> DataFrame:
+        """``(key, n_rows, n_sample, p50_est, p90_est, p99_est)`` — the
+        batch query's sketch-arm arithmetic (same probed quantiles,
+        same integer ceil-rank) over a sample and its row counts."""
         from ..queries_events import _QSK_PS, _qsk_est_cols
 
-        s = self.state(spark)
-        if s is None:
-            return None
-        agg = s.groupBy(self.key_col).agg(
+        key = self.key_col
+        agg = sample.groupBy(key).agg(
             F.array_sort(F.collect_list(self.val_col)).alias("__vals")
         )
         return (
             agg.select(
-                self.key_col,
+                key,
                 F.size("__vals").cast("long").alias("n_sample"),
                 *_qsk_est_cols(F.col("__vals")),
             )
-            .join(self.n_rows(spark), self.key_col)
+            .join(n, key)
             .select(
-                self.key_col,
+                key,
                 "n_rows",
                 "n_sample",
                 *[f"{name}_est" for name, _, _ in _QSK_PS],
             )
-            .orderBy(self.key_col)
+            .orderBy(key)
         )
+
+    def estimates(self, spark: SparkSession) -> DataFrame | None:
+        """Per-key quantile view ``(key, n_rows, n_sample, p50_est,
+        p90_est, p99_est)`` over the persisted sample and the row
+        counts of the same version."""
+        _, (s, n) = self._latest(spark, self._tables)
+        return None if s is None else self._estimate(s, n)
 
     def windowed_estimates(
         self, spark: SparkSession, window_days: int = 7
@@ -1666,106 +1500,44 @@ class QuantileSketchMonitorSink(_CommitMarkerLedger):
         batch sliding query's sketch columns)."""
         from ..operators.sketches import bottom_k_rows
         from ..plans.layout import broadcast_if_small
-        from ..queries_events import (
-            _QSK_PS,
-            _qsk_est_cols,
-            trailing_window_explode,
-        )
+        from ..queries_events import trailing_window_explode
 
-        s = self.state(spark)
+        _, (s, n) = self._latest(spark, self._tables)
         if s is None:
             return None
         key = self.key_col
         days = broadcast_if_small(s.select(key).distinct())
         wo = trailing_window_explode(s, key, window_days, days)
-        wstate = bottom_k_rows(wo, key, "__h", self.val_col, self.k)
-        samp = wstate.groupBy(key).agg(
-            F.array_sort(F.collect_list(self.val_col)).alias("__vals")
-        )
         wn = (
-            trailing_window_explode(
-                self.n_rows(spark), key, window_days, days
-            )
+            trailing_window_explode(n, key, window_days, days)
             .groupBy(key)
             .agg(F.sum("n_rows").cast("long").alias("n_rows"))
         )
-        return (
-            samp.select(
-                key,
-                F.size("__vals").cast("long").alias("n_sample"),
-                *_qsk_est_cols(F.col("__vals")),
-            )
-            .join(wn, key)
-            .select(
-                key,
-                "n_rows",
-                "n_sample",
-                *[f"{name}_est" for name, _, _ in _QSK_PS],
-            )
-            .orderBy(key)
+        return self._estimate(
+            bottom_k_rows(wo, key, "__h", self.val_col, self.k), wn
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.sketches import bottom_k_rows, kmv_hash
+    def partial(self, batch_df: DataFrame):
+        from ..operators.sketches import kmv_hash
 
-        # one sample multiset is comparable only under ONE
-        # (k, salt, hashed id column, sampled value column)
-        self._geometry_guard(
-            k=self.k,
-            salt=self.salt,
-            id_col=self.id_col,
-            val_col=self.val_col,
-        )
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
         part = batch_df.select(
             self.key_col,
             kmv_hash(F.col(self.id_col), self.salt).alias("__h"),
             F.col(self.val_col),
         )
-        batch_mins = bottom_k_rows(
-            part, self.key_col, "__h", self.val_col, self.k
-        )
-        batch_n = part.groupBy(self.key_col).agg(
+        return self._bottom(part), part.groupBy(self.key_col).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows")
         )
-        prev = self.state(spark)
-        merged = (
-            batch_mins
-            if prev is None
-            else prev.unionByName(batch_mins)
-        )
+
+    def merge(self, prev: DataFrame | None, prev_n: DataFrame | None, part):
         # state re-reduces with the same bottom-k operator it was
         # built with; (key x k)-sized, so this merge is sliver work
-        state = bottom_k_rows(
-            merged, self.key_col, "__h", self.val_col, self.k
-        )
-        state.write.mode("overwrite").parquet(
-            f"{self.root}/v={batch_id}"
-        )
-        prev_n = self.n_rows(spark)
-        n_now = (
-            batch_n
-            if prev_n is None
-            else prev_n.unionByName(batch_n)
-            .groupBy(self.key_col)
-            .agg(F.sum("n_rows").cast("long").alias("n_rows"))
-        )
-        n_now.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/n/v={batch_id}"
-        )
-        self._mark_committed(batch_id)
-        self._prune()
+        sample, n = part
+        if prev is not None:
+            sample = prev.unionByName(sample)
+        return self._bottom(sample), _fold(prev_n, n, [self.key_col], "n_rows")
 
-    def _prune(self) -> None:
-        """Keep commit markers (additive merge) — see
-        ``SourceQualityDriftSink._prune``."""
-        import shutil
+    def _bottom(self, df: DataFrame) -> DataFrame:
+        from ..operators.sketches import bottom_k_rows
 
-        committed = sorted(self.committed_batches())
-        for old in committed[: -self.keep_versions]:
-            shutil.rmtree(f"{self.root}/v={old}", ignore_errors=True)
-            shutil.rmtree(
-                f"{self.root}/n/v={old}", ignore_errors=True
-            )
+        return bottom_k_rows(df, self.key_col, "__h", self.val_col, self.k)

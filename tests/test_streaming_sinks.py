@@ -5,6 +5,9 @@ first attempt committed or crashed mid-write."""
 
 from __future__ import annotations
 
+import pathlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from mknssh_11_bigdata_spark.sources.readers import load_table
@@ -119,8 +122,12 @@ def test_latest_snapshot_sink_replay_and_versioning(spark, tmp_path):
     sink(b2, 2)  # replay merges against the last COMMITTED version
     snap = {(r.k, r.seq, r.v) for r in sink.read(spark).collect()}
     assert snap == {(1, 20, "c"), (2, 30, "e"), (3, 12, "d")}
-    # old versions pruned beyond keep_versions=2
-    assert sink.committed_batches() == {1, 2}
+    # old versions pruned beyond keep_versions=2; a pruned version keeps
+    # its marker, so replaying its id still drops
+    assert not pathlib.Path(f"{sink.root}/v=0").exists()
+    assert 0 in sink.committed_batches()
+    sink(b0, 0)
+    assert {(r.k, r.seq, r.v) for r in sink.read(spark).collect()} == snap
 
 
 def test_seasonal_baseline_sink_matches_batch_query(spark, tmp_path):
@@ -246,39 +253,149 @@ def test_source_quality_drift_sink_matches_batch_query(spark, tmp_path):
     assert got2 == want2
 
 
-def test_drift_sink_pruned_batch_replay_still_drops(spark, tmp_path):
-    """ADVICE r4: this sink's merge is ADDITIVE, so the exactly-once
-    drop must survive version pruning — the old _prune unlinked the
-    pruned versions' commit markers, letting a replayed pruned batch
-    id re-merge and double-count (n, sq). Markers must outlive their
-    v= directories."""
-    from mknssh_11_bigdata_spark.streaming.sinks import (
-        SourceQualityDriftSink,
-    )
+#: versioned sink -> (constructor kwargs, input, state reader, sidecars)
+_PRUNE_CASES = {
+    "SourceQualityDriftSink": ({}, "documents", "stats", []),
+    "LatestSnapshotSink": (
+        {"key_cols": ["user_id"], "order_cols": ["ts", "event_id"]},
+        "events",
+        "read",
+        [],
+    ),
+    "SeasonalBaselineSink": ({}, "daily", "spine", []),
+    "ZipfSourceDriftSink": ({}, "documents", "counts", []),
+    "HourlyAnomalySink": ({}, "events", "counts", []),
+    "HeavyHittersMonitorSink": (
+        {"capacity": 8},
+        "documents",
+        "summary",
+        ["n"],
+    ),
+    "KmvDistinctMonitorSink": ({"k": 8}, "events", "state", []),
+    "HllDistinctMonitorSink": ({}, "events", "state", []),
+    "CmsFrequencyMonitorSink": ({}, "documents", "sketch", []),
+    "QuantileSketchMonitorSink": ({"k": 8}, "events", "state", ["n"]),
+}
 
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "source", "text"
+
+@pytest.mark.parametrize("name", list(_PRUNE_CASES))
+def test_drift_sink_pruned_batch_replay_still_drops(spark, tmp_path, name):
+    """ADVICE r4: a replayed batch whose version was pruned must still
+    drop — an ADDITIVE merge would double-count it. One rule for every
+    versioned sink: pruning deletes every table of the old versions
+    (state and sidecars) but markers outlive their directories, so a
+    replayed pruned id drops and rebuilds nothing."""
+    from mknssh_11_bigdata_spark.streaming import sinks
+
+    kwargs, table, reader, sidecars = _PRUNE_CASES[name]
+    events = load_table(spark, SF_SMOKE, "events")
+    frame, split = {
+        "events": (events, "event_id"),
+        "documents": (
+            load_table(spark, SF_SMOKE, "documents").select(
+                "doc_id", "source", "text"
+            ),
+            "doc_id",
+        ),
+        "daily": (
+            events.groupBy(F.to_date("ts").alias("d")).agg(
+                F.count(F.lit(1)).cast("long").alias("n_events")
+            ),
+            "datediff(d, date'1970-01-01')",
+        ),
+    }[table]
+    batches = [frame.filter(f"{split} % 4 = {i}") for i in range(4)]
+    sink = getattr(sinks, name)(
+        str(tmp_path / "sink"), keep_versions=1, **kwargs
     )
-    batches = [
-        docs.filter(f"doc_id % 4 = {i}") for i in range(4)
-    ]
-    sink = SourceQualityDriftSink(str(tmp_path / "drift"), keep_versions=1)
     for i, b in enumerate(batches):
         sink(b, i)
-    # pruning actually happened (only the newest version dir remains)…
-    import pathlib as _pl
 
-    vdirs = sorted(
-        p.name for p in _pl.Path(sink.root).iterdir() if p.name.startswith("v=")
-    )
-    assert vdirs == [f"v={len(batches) - 1}"]
+    def vdirs(d):
+        d = pathlib.Path(sink.root, d)
+        return sorted(
+            p.name for p in d.iterdir() if p.name.startswith("v=")
+        )
+
+    # pruning actually happened (only the newest version dirs remain)…
+    newest = [f"v={len(batches) - 1}"]
+    assert vdirs("") == newest
+    for side in sidecars:
+        assert vdirs(side) == newest
     # …but every batch id is STILL marked committed
     assert sink.committed_batches() == set(range(len(batches)))
 
     # replaying a PRUNED batch id must be a no-op, not a re-merge
-    before = {tuple(r) for r in sink.stats(spark).collect()}
+    read = getattr(sink, reader)
+    before = {tuple(r) for r in read(spark).collect()}
     sink(batches[0], 0)
-    assert {tuple(r) for r in sink.stats(spark).collect()} == before
+    assert vdirs("") == newest
+    assert {tuple(r) for r in read(spark).collect()} == before
+
+
+def test_two_table_views_read_one_version(spark, tmp_path, monkeypatch):
+    """A view over the state AND its count sidecar must read both at
+    ONE committed version. The race is simulated: the marker listing
+    shows only batch 0 on its first call and batches 0 and 1 after it,
+    as if batch 1 committed between two reads. ``n_total`` and
+    ``n_rows`` must still come from ``v=0``, not ``v=1``."""
+    from mknssh_11_bigdata_spark.streaming.sinks import (
+        HeavyHittersMonitorSink,
+        QuantileSketchMonitorSink,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    events = load_table(spark, SF_SMOKE, "events").select(
+        "event_type", "event_id", "value"
+    )
+    hh = HeavyHittersMonitorSink(str(tmp_path / "hh"))
+    qs = QuantileSketchMonitorSink(str(tmp_path / "qs"), k=8)
+    for i in range(2):
+        hh(docs.filter(f"doc_id % 2 = {i}"), i)
+        qs(events.filter(f"event_id % 2 = {i}"), i)
+    n0 = spark.read.parquet(f"{hh.root}/n/v=0").collect()[0]["n_total"]
+    rows0 = {
+        r["event_type"]: r["n_rows"]
+        for r in spark.read.parquet(f"{qs.root}/n/v=0").collect()
+    }
+    assert hh.n_total(spark) != n0  # v=1 really holds another count
+
+    for sink in (hh, qs):
+        listings = iter([{0}])
+        monkeypatch.setattr(
+            sink,
+            "committed_batches",
+            lambda it=listings: next(it, {0, 1}),
+        )
+    assert {r["n_total"] for r in hh.heavy_hitters(spark).collect()} == {
+        n0
+    }
+    assert {
+        r["event_type"]: r["n_rows"] for r in qs.estimates(spark).collect()
+    } == rows0
+
+
+def test_monitor_sinks_release_their_checkpoints(spark, tmp_path):
+    """A streaming query never calls ``release_checkpoints``, so a sink
+    that pins a frame per micro-batch must free it itself, or a
+    long-running stream keeps one persisted RDD per batch for good.
+    One novelty call plus one compaction, and one heavy-hitters call,
+    must leave no new persistent RDD in the context."""
+    from mknssh_11_bigdata_spark.streaming.sinks import (
+        HeavyHittersMonitorSink,
+        NoveltyMonitorSink,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "text"
+    ).filter("doc_id < 40")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    nov = NoveltyMonitorSink(str(tmp_path / "nov"))
+    nov(docs, 0)
+    nov.compact(spark)
+    HeavyHittersMonitorSink(str(tmp_path / "hh"), capacity=4)(docs, 0)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_zipf_source_drift_sink_matches_batch_query(spark, tmp_path):
