@@ -98,10 +98,18 @@ def get_spark(
         # per-thread data reaches a realistic executor share (measured:
         # sf1-equivalent bench dies in a hash-agg spill-read). Size the
         # heap like a real executor fleet would be sized. On a cluster
-        # this knob is spark-submit's, not ours.
+        # this knob is spark-submit's, not ours. Never past half the
+        # machine's RAM, though: a heap larger than physical memory lets
+        # the storage pool (60% of it) hold cached and checkpointed
+        # blocks the machine cannot back, and the kernel OOM-kills the
+        # JVM where Spark would have spilled them to disk (measured on a
+        # 4-core 15 GB VM: the test JVM killed at 15.5 GB RSS).
+        ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(48, ram_gb // 2))}g"
+            ),
         )
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
@@ -133,10 +141,18 @@ def release_checkpoints(spark: SparkSession) -> int:
 
 
 def release_checkpoint(df) -> None:
-    """Free the RDD blocks pinned by ONE ``localCheckpoint`` frame.
+    """Free the RDD blocks pinned by every ``localCheckpoint`` under
+    ``df``: a bare checkpoint frame, or a frame joined from several.
 
     ``DataFrame.unpersist`` cannot: it drops cache-manager entries, and
-    a local checkpoint is a persisted RDD under the frame's
-    ``LogicalRDD`` leaf, not a cached query. The frame, and every frame
-    built on it, is unreadable afterwards."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    a local checkpoint is a persisted RDD under a ``LogicalRDD`` leaf
+    of the logical plan, not a cached query. Each such leaf is freed
+    (unpersisting a leaf that was never persisted is a no-op). Only
+    the leaves are reachable: a checkpoint that fed another checkpoint
+    sits behind the truncated lineage and stays pinned. The frame, and
+    every frame built on its leaves, is unreadable afterwards."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)

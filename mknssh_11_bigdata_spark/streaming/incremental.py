@@ -11,21 +11,30 @@ records every routing decision — so the corpus parquet only ever
 contains the deduped stream prefix, exactly what a crawl pipeline
 feeds to training.
 
-Exactly-once discipline is the module-wide commit-marker contract
-(:class:`sinks._CommitMarkerLedger`): a replayed batch id is dropped
-before any work, a crashed batch overwrites its own partial output.
+Every sink here is a :class:`_SliceIngestSink`: one slice-ledger
+skeleton (replay drop, status and corpus slices, index slices, commit
+marker, compaction cadence, checkpoint release) under the module-wide
+commit-marker contract (:class:`sinks._CommitMarkerLedger`) — a
+replayed batch id is dropped before any work, a crashed batch
+overwrites its own partial output. A sink supplies only its columns,
+its routing decision (``_status``) and the probe indexes it maintains
+(``_write_index_slices``, ``_TABLES``) — the probe/scan split of
+incremental top-k maintenance (EDBT 2020): per batch, the increment
+probes indexes kept per slice, never a corpus pass.
 Within-batch duplicates are NOT collapsed (the operator's documented
 semantics — the increment probes the corpus, it does not self-join);
 run the batch MinHash chain over an increment first if crawl batches
 self-duplicate.
 
-Two sinks, one contract: :class:`IncrementalDedupCorpusSink`
-recomputes the corpus-side fingerprint and band indexes per batch
-(simple, correct, re-reads the corpus);
-:class:`IndexedIncrementalDedupCorpusSink` MAINTAINS them as persisted
-tables appended per batch — the 100 TB shape, where the per-day cost
-is the increment plus index probes, never a corpus pass. Both route
-every document identically (e2e batch-equivalence tested)."""
+:class:`IncrementalDedupCorpusSink` recomputes the corpus-side
+fingerprint and band indexes per batch (simple, correct, re-reads the
+corpus); :class:`IndexedIncrementalDedupCorpusSink` MAINTAINS them as
+persisted tables appended per batch — the 100 TB shape, where the
+per-day cost is the increment plus index probes, never a corpus pass.
+Both route every document identically (e2e batch-equivalence tested).
+:class:`IncrementalEmbeddingDedupSink` is the SRP twin; the Bloom and
+split variants of both families share :class:`_BloomPrefilter` and
+:class:`_SplitLedger`."""
 
 from __future__ import annotations
 
@@ -34,18 +43,223 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import release_checkpoint
 from .sinks import _CommitMarkerLedger
 
 
-class IncrementalDedupCorpusSink(_CommitMarkerLedger):
-    """``foreachBatch`` callable maintaining a deduped corpus.
+class _SliceIngestSink(_CommitMarkerLedger):
+    """``foreachBatch`` skeleton for a deduped slice ledger.
 
     Layout under ``root``::
 
         corpus/batch_id=<n>/   survivors of batch n (seed = batch_id=-1)
-        status/batch_id=<n>/   (doc_id, status, dup_of) per increment doc
+        status/batch_id=<n>/   (id, status, dup_of) per increment row
+        <index>/batch_id=<n>/  each probe table in ``_TABLES``, slice n
         _committed/<n>         commit marker (data first, marker after)
-    """
+
+    Per batch, once for every sink: the geometry guard (when
+    ``_geometry_fields()`` is non-empty) BEFORE the replay check; the
+    replay drop; the increment and the routing decision pinned (each
+    feeds two consumers); the status slice; the survivor corpus slice,
+    whose index slices are built from the Parquet slice just written;
+    the ``_post_route`` hook; the marker after all data, so a
+    half-written batch stays invisible; then every pin of the batch is
+    freed — a streaming query never calls ``release_checkpoints``, so a
+    long stream would otherwise keep them all.
+
+    ``compact_every=K`` (on the sinks that accept it) arms the cadence
+    policy: after each commit, if K or more batch slices have
+    accumulated past the newest compaction epoch, :meth:`compact` folds
+    them — so a long-running stream keeps a BOUNDED per-table slice
+    count (≤ K live slices + 1 consolidated) instead of growing one
+    slice per crawl day forever. ``None`` leaves compaction to the
+    operator."""
+
+    #: slice tables compact() folds and cleans; status (and split)
+    #: slices stay per batch — they are read by committed batch id, and
+    #: markers survive compaction
+    _TABLES: tuple[str, ...] = ("corpus",)
+    compact_every: int | None = None
+
+    def __init__(self, root: str, id_col: str, value_col: str):
+        super().__init__(root)
+        self.id_col = id_col
+        self._cols = (id_col, value_col)
+
+    def _arm_compaction(self, compact_every: int | None) -> None:
+        if compact_every is not None and compact_every < 1:
+            raise ValueError("compact_every must be >= 1 (or None)")
+        self.compact_every = compact_every
+
+    def seed(self, corpus: DataFrame) -> None:
+        """Write the pre-existing corpus and its index slices as the
+        ``batch_id=-1`` slices. Call once before starting the stream
+        (idempotent: overwrite)."""
+        self._check_geometry()
+        self._write_slices(corpus, -1)
+
+    def _write_slices(self, docs: DataFrame, batch_id: int) -> None:
+        path = f"{self.root}/corpus/batch_id={batch_id}"
+        docs.write.mode("overwrite").parquet(path)
+        # the index slices read the corpus slice back: nothing is pinned
+        # for the two writes, and the schema is known (no footer job)
+        self._write_index_slices(
+            docs.sparkSession.read.schema(docs.schema).parquet(path),
+            batch_id,
+        )
+
+    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
+        """Write slice ``batch_id`` of every probe table ``docs`` feeds.
+        None here."""
+
+    def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
+        """The per-batch routing decision ``(id, status, dup_of)``."""
+        raise NotImplementedError
+
+    def _post_route(
+        self,
+        spark: SparkSession,
+        inc: DataFrame,
+        status: DataFrame,
+        batch_id: int,
+    ) -> DataFrame | None:
+        """Per-batch extension point, called after the corpus/index
+        slices land and before the commit marker: any extra per-batch
+        state lands here, under the same crash-safety ordering. Returns
+        the frame it wrote, whose pins are freed after the marker, or
+        None. No-op here."""
+        return None
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        self._check_geometry()
+        if batch_id in self.committed_batches():
+            return  # replay of a committed batch — exactly-once drop
+        spark = batch_df.sparkSession
+        # The file-source batch frame can't be reused across the two
+        # consumers below (routing + survivors) without re-listing;
+        # pin it once. Increment batches are crawl-day-sized.
+        inc = batch_df.select(*self._cols).localCheckpoint(eager=True)
+        pins = [inc]
+        try:
+            routing = self._status(spark, inc)
+            pins.append(routing)
+            status = routing.localCheckpoint(eager=True)  # ledger AND filter
+            pins.append(status)
+            status.write.mode("overwrite").parquet(
+                f"{self.root}/status/batch_id={batch_id}"
+            )
+            self._write_slices(
+                inc.join(
+                    status.filter("status = 'new'").select(self.id_col),
+                    self.id_col,
+                ),
+                batch_id,
+            )
+            pins.append(self._post_route(spark, inc, status, batch_id))
+            self._mark_committed(batch_id)
+        finally:
+            # every pin is ours: `inc` cut the caller's lineage, so no
+            # leaf of batch_df sits under these frames
+            for df in pins:
+                if df is not None:
+                    release_checkpoint(df)
+        if self.compact_every is not None:
+            epoch = self._compact_epoch()
+            live = [
+                b
+                for b in self.committed_batches()
+                if epoch is None or b > epoch
+            ]
+            if len(live) >= self.compact_every:
+                self.compact(spark)
+
+    def _slices(self, name: str) -> list[str]:
+        """Committed data paths for ``name`` — the shared compaction-
+        aware read rule (``_CommitMarkerLedger._compacted_slice_paths``)
+        — raising when there are none (Spark's empty-path error inside
+        foreachBatch is opaque otherwise)."""
+        present = self._compacted_slice_paths(name)
+        if not present:
+            raise RuntimeError(
+                f"{type(self).__name__} has no {name} slices under "
+                f"{self.root}/{name}: call seed() with the pre-existing "
+                "corpus before starting the stream."
+            )
+        return present
+
+    def _index(self, spark: SparkSession, name: str) -> DataFrame:
+        # leaf dirs read WITHOUT basePath: no partition-column
+        # inference, so batch_id= and compacted_v= dirs mix freely
+        return spark.read.parquet(*self._slices(name))
+
+    def corpus(self, spark: SparkSession) -> DataFrame:
+        """The accumulated deduped corpus: seed + committed survivors,
+        compaction-aware."""
+        return self._index(spark, "corpus")
+
+    def statuses(self, spark: SparkSession) -> DataFrame:
+        """Every committed batch's routing ledger, with its
+        ``batch_id``."""
+        base = f"{self.root}/status"
+        paths = [
+            f"{base}/batch_id={b}" for b in sorted(self.committed_batches())
+        ]
+        if not paths:
+            raise RuntimeError(
+                f"{type(self).__name__} has no committed batches under "
+                f"{base} yet — statuses() is only meaningful after at "
+                "least one micro-batch commits."
+            )
+        return spark.read.option("basePath", base).parquet(*paths)
+
+    def compact(self, spark: SparkSession) -> int:
+        """Fold the seed + every committed slice of each ``_TABLES``
+        table into ONE consolidated ``compacted_v=<epoch>`` slice, then
+        drop the folded slice directories — bounding the per-batch read
+        fan-in. One slice per table lands per crawl day; at 100 TB the
+        probe join's file-listing/footer cost grows with that count,
+        and periodic compaction is how every log-structured store
+        bounds it (the read path is exactly an LSM level-0 merge).
+        Returns the compaction epoch (the max committed batch id).
+
+        Crash-safe by the module's marker discipline (the shared
+        ``_finish_compaction`` tail): consolidated data is written
+        FIRST, the epoch marker second, folded slices are deleted
+        LAST — a crash before the marker leaves readers on the old
+        slices (the half-written consolidation is invisible); a crash
+        after the marker leaves stale slice dirs readers already
+        ignore (``_slices`` reads only slices ABOVE the epoch) and the
+        next ``compact()`` removes. The fold reads straight into its
+        new directory: no source slice is written before the marker,
+        so nothing needs pinning. Status and split slices are
+        untouched, and batch COMMIT markers are kept, so the
+        exactly-once replay drop still recognizes folded batch ids."""
+        committed = self.committed_batches()
+        if not committed:
+            raise RuntimeError("nothing to compact: no committed batches yet")
+        epoch = max(committed)
+        prev_epoch = self._compact_epoch()
+        if prev_epoch == epoch:
+            # No batch committed since the last compaction: the only
+            # slices are the consolidated compacted_v=<epoch> dirs
+            # themselves. Re-compacting would mode('overwrite') the
+            # directory it reads — a write failure in that window would
+            # destroy the corpus while the marker still points at it.
+            # Nothing to fold: no-op.
+            return epoch
+        for name in self._TABLES:
+            self._index(spark, name).write.mode("overwrite").parquet(
+                f"{self.root}/{name}/compacted_v={epoch}"
+            )
+        self._finish_compaction(epoch, prev_epoch, self._TABLES)
+        return epoch
+
+
+class IncrementalDedupCorpusSink(_SliceIngestSink):
+    """``foreachBatch`` callable maintaining a deduped text corpus,
+    recomputing the corpus-side fingerprint and band indexes per batch
+    (:func:`operators.dedup.incremental_dedup_status`). Layout: the
+    base's ``corpus/``, ``status/`` and ``_committed/``."""
 
     def __init__(
         self,
@@ -54,85 +268,28 @@ class IncrementalDedupCorpusSink(_CommitMarkerLedger):
         text_col: str = "text",
         **dedup_kwargs,
     ):
-        super().__init__(root)
-        self.id_col = id_col
+        super().__init__(root, id_col, text_col)
         self.text_col = text_col
         self.dedup_kwargs = dedup_kwargs
 
-    def seed(self, corpus: DataFrame) -> None:
-        """Write the pre-existing corpus as the ``batch_id=-1`` slice.
-        Call once before starting the stream (idempotent: overwrite)."""
-        corpus.write.mode("overwrite").parquet(
-            f"{self.root}/corpus/batch_id=-1"
-        )
-
-    def corpus(self, spark: SparkSession) -> DataFrame:
-        """The accumulated deduped corpus: seed + committed survivors."""
-        base = f"{self.root}/corpus"
-        slices = [f"{base}/batch_id=-1"] + [
-            f"{base}/batch_id={b}" for b in sorted(self.committed_batches())
-        ]
-        present = [p for p in slices if pathlib.Path(p).exists()]
-        if not present:
-            raise RuntimeError(
-                "IncrementalDedupCorpusSink has no corpus slices under "
-                f"{base}: call seed() with the pre-existing corpus "
-                "before starting the stream (Spark's empty-path error "
-                "inside foreachBatch is opaque otherwise)."
-            )
-        return (
-            spark.read.option("basePath", base).parquet(*present)
-        ).drop("batch_id")
-
-    def statuses(self, spark: SparkSession) -> DataFrame:
-        """Every committed batch's routing ledger."""
-        base = f"{self.root}/status"
-        paths = [
-            f"{base}/batch_id={b}" for b in sorted(self.committed_batches())
-        ]
-        if not paths:
-            raise RuntimeError(
-                "IncrementalDedupCorpusSink has no committed batches "
-                f"under {base} yet — statuses() is only meaningful "
-                "after at least one micro-batch commits."
-            )
-        return spark.read.option("basePath", base).parquet(*paths)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
+        """The per-batch routing decision (id, status, dup_of) — the
+        seam the indexed and Bloom sinks narrow. They MUST return the
+        decisions :func:`incremental_dedup_status` returns (the
+        certified semantics); only the probe COST may change."""
         from ..operators.dedup import incremental_dedup_status
 
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
-        # The file-source batch frame can't be reused across the two
-        # consumers below (status + survivors) without re-listing;
-        # pin it once. Increment batches are crawl-day-sized.
-        inc = batch_df.select(self.id_col, self.text_col).localCheckpoint(
-            eager=True
-        )
-        status = incremental_dedup_status(
-            self.corpus(spark).select(self.id_col, self.text_col),
+        return incremental_dedup_status(
+            self.corpus(spark).select(*self._cols),
             inc,
-            self.id_col,
-            self.text_col,
+            *self._cols,
             **self.dedup_kwargs,
-        ).localCheckpoint(eager=True)  # feeds the ledger AND the filter
-        status.write.mode("overwrite").parquet(
-            f"{self.root}/status/batch_id={batch_id}"
         )
-        survivors = inc.join(
-            status.filter("status = 'new'").select(self.id_col),
-            self.id_col,
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{self.root}/corpus/batch_id={batch_id}"
-        )
-        self._mark_committed(batch_id)
 
 
 class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
     """The sink above with PERSISTED probe-index maintenance — the
-    100 TB shape the base class's module docstring sketches: instead of
+    100 TB shape the module docstring sketches: instead of
     re-fingerprinting and re-signing the ACCUMULATED corpus on every
     micro-batch (a per-day full-corpus pass), the corpus-side exact
     fingerprint index and LSH band index are materialized once per
@@ -157,17 +314,10 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
         fp_index/batch_id=<n>     (fp, doc_id) of slice n
         band_index/batch_id=<n>   (doc_id, band_idx, band_key) of slice n
 
-    ``compact_every=K`` arms the cadence policy: after each commit, if
-    K or more batch slices have accumulated past the newest compaction
-    epoch, :meth:`compact` folds them — so a long-running stream keeps
-    a BOUNDED per-table slice count (≤ K live slices + 1 consolidated)
-    instead of growing one slice per crawl day forever. ``None`` (the
-    default) leaves compaction to the operator.
+    ``compact_every=K`` arms the base's compaction cadence.
     """
 
-    #: slice-table names compact() folds and cleans; subclasses that
-    #: persist extra per-batch tables extend this
-    _TABLES: tuple[str, ...] = ("corpus", "fp_index", "band_index")
+    _TABLES = ("corpus", "fp_index", "band_index")
 
     def __init__(
         self,
@@ -178,40 +328,29 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
         **dedup_kwargs,
     ):
         super().__init__(root, id_col, text_col, **dedup_kwargs)
-        if compact_every is not None and compact_every < 1:
-            raise ValueError("compact_every must be >= 1 (or None)")
-        self.compact_every = compact_every
+        self._arm_compaction(compact_every)
 
     def _geometry_fields(self) -> dict:
-        """Layout-shaping parameters the persisted index slices are a
-        pure function of; subclasses that persist extra geometry-keyed
-        tables (the bloom bitmaps) extend this. Validated against the
-        root's ``_geometry.json`` on every seed/batch — a reopen with
-        different values fails loudly instead of silently mis-probing
-        (review finding, r7)."""
+        """The MinHash geometry the fp/band slices are a pure function
+        of, validated against the root's ``_geometry.json`` on every
+        seed/batch. The one place its defaults live: the index writer
+        and the Bloom probe read it from here."""
         return {
             "num_hashes": self.dedup_kwargs.get("num_hashes", 12),
             "bands": self.dedup_kwargs.get("bands", 4),
             "shingle_n": self.dedup_kwargs.get("shingle_n", 3),
         }
 
-    def seed(self, corpus: DataFrame) -> None:
-        self._geometry_guard(**self._geometry_fields())
-        super().seed(corpus)
-        self._write_index_slices(corpus, -1)
-
     def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import corpus_dedup_indexes
 
+        g = self._geometry_fields()
         fp, band = corpus_dedup_indexes(
-            docs.select(self.id_col, self.text_col),
-            self.id_col,
-            self.text_col,
-            **{
-                k: v
-                for k, v in self.dedup_kwargs.items()
-                if k in ("num_hashes", "bands", "shingle_n")
-            },
+            docs.select(*self._cols),
+            *self._cols,
+            g["num_hashes"],
+            g["bands"],
+            g["shingle_n"],
         )
         fp.write.mode("overwrite").parquet(
             f"{self.root}/fp_index/batch_id={batch_id}"
@@ -220,168 +359,159 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
             f"{self.root}/band_index/batch_id={batch_id}"
         )
 
-    def _slice_paths(self, name: str) -> list[str]:
-        """Committed data paths for ``name`` (corpus / fp_index /
-        band_index) — the shared compaction-aware read rule
-        (``_CommitMarkerLedger._compacted_slice_paths``)."""
-        return self._compacted_slice_paths(name)
-
-    def corpus(self, spark: SparkSession) -> DataFrame:
-        """The accumulated deduped corpus, compaction-aware."""
-        present = self._slice_paths("corpus")
-        if not present:
-            raise RuntimeError(
-                "IndexedIncrementalDedupCorpusSink has no corpus slices "
-                f"under {self.root}/corpus: call seed() with the "
-                "pre-existing corpus before starting the stream."
-            )
-        # leaf dirs read WITHOUT basePath: no partition-column
-        # inference, so batch_id= and compacted_v= dirs mix freely
-        return spark.read.parquet(*present)
-
-    def _index(self, spark: SparkSession, name: str) -> DataFrame:
-        present = self._slice_paths(name)
-        if not present:
-            raise RuntimeError(
-                f"IndexedIncrementalDedupCorpusSink has no {name} slices "
-                f"under {self.root}/{name}: call seed() with the "
-                "pre-existing corpus before starting the stream."
-            )
-        return spark.read.parquet(*present)
-
-    def compact(self, spark: SparkSession) -> int:
-        """Fold the seed + every committed slice of the corpus and both
-        probe indexes into ONE consolidated slice per table, then drop
-        the folded slice directories — bounding the per-batch read
-        fan-in. One slice per table lands per crawl day; at 100 TB the
-        probe join's file-listing/footer cost grows with that count,
-        and periodic compaction is how every log-structured store
-        bounds it (the read path is exactly an LSM level-0 merge).
-        Returns the compaction epoch (the max committed batch id).
-
-        Crash-safe by the module's marker discipline (the shared
-        ``_finish_compaction`` tail): consolidated data is written
-        FIRST, the epoch marker second, folded slices are deleted
-        LAST — a crash before the marker leaves readers on the old
-        slices (the half-written consolidation is invisible); a crash
-        after the marker leaves stale slice dirs readers already
-        ignore (``_slice_paths`` reads only slices ABOVE the epoch)
-        and the next ``compact()`` removes. Batch COMMIT markers are
-        kept, so the exactly-once replay drop still recognizes folded
-        batch ids."""
-        committed = self.committed_batches()
-        if not committed:
-            raise RuntimeError("nothing to compact: no committed batches yet")
-        epoch = max(committed)
-        prev_epoch = self._compact_epoch()
-        if prev_epoch == epoch:
-            # No batch committed since the last compaction: the only
-            # slices are the consolidated compacted_v=<epoch> dirs
-            # themselves. Re-compacting would read the LIVE copy
-            # (pinned only in non-fault-tolerant localCheckpoint
-            # storage) and mode('overwrite') the same directory — a
-            # write failure in that window would destroy the corpus
-            # while the marker still points at it. Nothing to fold:
-            # no-op.
-            return epoch
-        for name in self._TABLES:
-            df = spark.read.parquet(*self._slice_paths(name))
-            # pin the read BEFORE overwriting anything under the table
-            df = df.localCheckpoint(eager=True)
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/{name}/compacted_v={epoch}"
-            )
-        self._finish_compaction(epoch, prev_epoch, self._TABLES)
-        return epoch
-
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
-        """The per-batch routing decision (id, status, dup_of) — the
-        subclass seam the Bloom-prefiltered sink narrows. MUST return
-        the same decisions :func:`incremental_dedup_status_indexed`
-        would (the certified semantics); only the probe COST may
-        change."""
         from ..operators.dedup import incremental_dedup_status_indexed
 
         return incremental_dedup_status_indexed(
-            self.corpus(spark).select(self.id_col, self.text_col),
+            self.corpus(spark).select(*self._cols),
             self._index(spark, "fp_index"),
             self._index(spark, "band_index"),
             inc,
-            self.id_col,
-            self.text_col,
+            *self._cols,
             **self.dedup_kwargs,
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._geometry_guard(**self._geometry_fields())
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
-        inc = batch_df.select(self.id_col, self.text_col).localCheckpoint(
-            eager=True
-        )
-        status = self._status(spark, inc).localCheckpoint(eager=True)
-        status.write.mode("overwrite").parquet(
-            f"{self.root}/status/batch_id={batch_id}"
-        )
-        survivors = inc.join(
-            status.filter("status = 'new'").select(self.id_col),
-            self.id_col,
-        ).localCheckpoint(eager=True)  # feeds corpus AND index writes
-        survivors.write.mode("overwrite").parquet(
-            f"{self.root}/corpus/batch_id={batch_id}"
-        )
-        self._write_index_slices(survivors, batch_id)
-        # subclass hook — any extra per-batch state must land BEFORE the
-        # commit marker (same crash-safety ordering as the slices: a
-        # half-written batch stays invisible until its marker exists)
-        self._post_route(spark, inc, status, batch_id)
-        self._mark_committed(batch_id)
-        if self.compact_every is not None:
-            epoch = self._compact_epoch()
-            live = [
-                b
-                for b in self.committed_batches()
-                if epoch is None or b > epoch
-            ]
-            if len(live) >= self.compact_every:
-                self.compact(spark)
 
-    def _post_route(
-        self,
-        spark: SparkSession,
-        inc: DataFrame,
-        status: DataFrame,
-        batch_id: int,
+class _BloomPrefilter:
+    """A BLOOM PRE-FILTER in front of a dedup sink's index probe, mixed
+    in before the sink class. Each batch row first probes persisted
+    bitmaps of the corpus-side keys; a row whose every probed key
+    misses provably has no candidate in the corpus, so it routes
+    ``new`` without the index joins, and only the suspect sliver runs
+    the parent's probe. One-sided error keeps this exact: false
+    positives only send extra rows to the joins that then decide
+    correctly, never the reverse. A NULL flag (NULL text or vector)
+    routes to the suspect arm, so the parent decides it rather than
+    the row vanishing from both arms.
+
+    Bitmap slices persist per batch as mergeable ``(__word, __bits)``
+    tables built from the index slice they summarize, ride the same
+    commit markers and compaction (``_TABLES``), and fold with one
+    ``bit_or`` at read — total size is m_bits/8 bytes regardless of
+    corpus row count. ``bloom_m_bits`` is FIXED geometry (words must
+    align across slices). A saturated bitmap degrades safely to the
+    parent's behavior, paying only the bitmap scan.
+
+    A sink supplies ``_suspect_flags(spark, inc)``: one
+    ``(id, __suspect)`` row per increment row."""
+
+    def _arm_bloom(self, bloom_m_bits: int, bloom_k: int) -> None:
+        if bloom_m_bits < 64 or bloom_k < 1:
+            raise ValueError("bloom geometry: m_bits >= 64, k >= 1")
+        self.bloom_m_bits = bloom_m_bits
+        self.bloom_k = bloom_k
+        #: (n_cleared, n_suspect) prefilter telemetry of the last batch
+        self.last_prefilter_stats: tuple[int, int] | None = None
+
+    def _geometry_fields(self) -> dict:
+        return {
+            **super()._geometry_fields(),
+            "bloom_m_bits": self.bloom_m_bits,
+            "bloom_k": self.bloom_k,
+        }
+
+    def _write_bloom_slice(
+        self, spark: SparkSession, name: str, index: str, item, batch_id: int
     ) -> None:
-        """Per-batch extension point, called after the corpus/index
-        slices land and before the commit marker. No-op here."""
+        """Bitmap slice ``name`` of ``item`` over the ``index`` slice
+        just written for ``batch_id``."""
+        from ..operators.sketches import bloom_word_frame
+
+        bloom_word_frame(
+            spark.read.parquet(f"{self.root}/{index}/batch_id={batch_id}")
+            .select(item.alias("item")),
+            "item",
+            self.bloom_m_bits,
+            self.bloom_k,
+        ).write.mode("overwrite").parquet(
+            f"{self.root}/{name}/batch_id={batch_id}"
+        )
+
+    def _bloom_probe(
+        self, df: DataFrame, col: str, name: str, index: str, out: str
+    ) -> DataFrame:
+        """``df`` with ``out`` = might-contain of ``col`` in bitmap
+        ``name``, folded into the one-row DENSE-ARRAY form (positional
+        ``array<long>`` probe, not a linearly-scanned map).
+
+        Coverage check: the bitmap slices must cover exactly the slices
+        of the ``index`` table they summarize — a root seeded or
+        partially written by the non-Bloom parent class would silently
+        UNDER-filter (rows duplicating the uncovered slices would clear
+        as 'new'), so a mixed/legacy root fails loudly instead."""
+        from ..operators.sketches import bloom_dense_frame, bloom_probe
+
+        have, want = (
+            {p.rsplit("/", 1)[-1] for p in self._compacted_slice_paths(t)}
+            for t in (name, index)
+        )
+        if not have or have != want:
+            raise RuntimeError(
+                f"{type(self).__name__}: bloom slice dirs under "
+                f"{self.root}/{name} ({sorted(have)}) do not match the "
+                f"{index} slices ({sorted(want)}) — the root was seeded "
+                "or written without the Bloom subclass; probing this "
+                "partial bitmap would silently clear rows that "
+                "duplicate the uncovered slices. Re-seed with this sink "
+                "class (or compact with it) before streaming."
+            )
+        words = df.sparkSession.read.parquet(*self._slices(name))
+        return bloom_probe(
+            df,
+            col,
+            bloom_dense_frame(words, self.bloom_m_bits),
+            self.bloom_m_bits,
+            self.bloom_k,
+            out,
+        )
+
+    def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
+        flags = (
+            self._suspect_flags(spark, inc)
+            .select(
+                self.id_col,
+                F.coalesce("__suspect", F.lit(True)).alias("__suspect"),
+            )
+            .localCheckpoint(eager=True)  # feeds both arms + telemetry
+        )
+        # telemetry: ONE agg over the checkpointed flags (total +
+        # suspect count in the same cached-block scan)
+        trow = flags.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.sum(F.col("__suspect").cast("long")).alias("__ns"),
+        ).collect()[0]
+        n_suspect = int(trow["__ns"] or 0)
+        self.last_prefilter_stats = (int(trow["__n"]) - n_suspect, n_suspect)
+        suspects = inc.join(
+            flags.filter("__suspect").select(self.id_col), self.id_col
+        )
+        cleared = flags.filter(~F.col("__suspect")).select(
+            F.col(self.id_col),
+            F.lit("new").alias("status"),
+            F.lit(None)
+            .cast(dict(inc.dtypes)[self.id_col])
+            .alias("dup_of"),
+        )
+        return (
+            super()
+            ._status(spark, suspects)
+            .unionByName(cleared)
+            .orderBy(self.id_col)
+        )
 
 
 class BloomPrefilteredIncrementalDedupSink(
-    IndexedIncrementalDedupCorpusSink
+    _BloomPrefilter, IndexedIncrementalDedupCorpusSink
 ):
-    """The indexed sink with a BLOOM PRE-FILTER in front of both probe
-    joins — the 100 TB shape of "most of today's crawl is new": before
-    touching the fp/band indexes, each batch row probes two persisted
-    Bloom bitmaps (corpus fingerprints; corpus band keys). A row whose
-    fingerprint misses AND whose every band key misses provably has no
-    exact match and no LSH candidate in the corpus, so it routes
-    ``new`` without either index join; only the bloom-suspect sliver
-    runs the full indexed probe. One-sided error makes this exact:
-    false positives only send extra rows to the joins that then decide
-    correctly, never the reverse (equality with the unfiltered sink is
-    e2e-asserted in tests).
-
-    Bitmap slices persist per batch as mergeable ``(__word, __bits)``
-    tables (``bloom_fp/``, ``bloom_band/``), ride the same commit
-    markers and compaction as the other index tables (``_TABLES``),
-    and fold with one ``bit_or`` groupBy at read — total size is
-    m_bits/8 bytes regardless of corpus row count. ``bloom_m_bits`` is
-    FIXED geometry (words must align across slices): size it from the
-    corpus forecast (~16 bits per expected item). A saturated bitmap
-    degrades safely — everything probes as suspect and the sink
-    behaves exactly like the parent, paying only the bitmap scan.
+    """The indexed sink with a Bloom pre-filter (:class:`_BloomPrefilter`)
+    in front of both probe joins — the 100 TB shape of "most of today's
+    crawl is new": each batch row probes two persisted bitmaps (corpus
+    fingerprints, ``bloom_fp/``; corpus band keys, ``bloom_band/``). A
+    row whose fingerprint misses AND whose every band key misses has no
+    exact match and no LSH candidate, so it skips both index joins
+    (equality with the unfiltered sink is e2e-asserted in tests). Size
+    ``bloom_m_bits`` from the corpus forecast (~16 bits per expected
+    item).
 
     The batch-side signature computation is NOT saved (the band probe
     needs the increment's own band keys either way); the savings is
@@ -409,220 +539,110 @@ class BloomPrefilteredIncrementalDedupSink(
         super().__init__(
             root, id_col, text_col, compact_every, **dedup_kwargs
         )
-        if bloom_m_bits < 64 or bloom_k < 1:
-            raise ValueError("bloom geometry: m_bits >= 64, k >= 1")
-        self.bloom_m_bits = bloom_m_bits
-        self.bloom_k = bloom_k
-        #: (n_cleared, n_suspect) prefilter telemetry of the last batch
-        self.last_prefilter_stats: tuple[int, int] | None = None
-
-    def _geometry_fields(self) -> dict:
-        return {
-            **super()._geometry_fields(),
-            "bloom_m_bits": self.bloom_m_bits,
-            "bloom_k": self.bloom_k,
-        }
+        self._arm_bloom(bloom_m_bits, bloom_k)
 
     def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        from ..operators.sketches import bloom_word_frame
-
         super()._write_index_slices(docs, batch_id)
         spark = docs.sparkSession
-        fp = spark.read.parquet(
-            f"{self.root}/fp_index/batch_id={batch_id}"
+        self._write_bloom_slice(
+            spark, "bloom_fp", "fp_index", F.col("fp"), batch_id
         )
-        band = spark.read.parquet(
-            f"{self.root}/band_index/batch_id={batch_id}"
-        )
-        bloom_word_frame(
-            fp.select(F.col("fp").alias("item")),
-            "item",
-            self.bloom_m_bits,
-            self.bloom_k,
-        ).write.mode("overwrite").parquet(
-            f"{self.root}/bloom_fp/batch_id={batch_id}"
-        )
-        bloom_word_frame(
-            band.select(F.col("band_key").alias("item")),
-            "item",
-            self.bloom_m_bits,
-            self.bloom_k,
-        ).write.mode("overwrite").parquet(
-            f"{self.root}/bloom_band/batch_id={batch_id}"
+        self._write_bloom_slice(
+            spark, "bloom_band", "band_index", F.col("band_key"), batch_id
         )
 
-    def _bloom(self, spark: SparkSession, name: str) -> DataFrame:
-        """Committed bitmap slices folded into the one-row broadcastable
-        DENSE-ARRAY form (bit_or merge across slices — word-aligned by
-        the fixed geometry; positional ``array<long>`` probe, not a
-        linearly-scanned map — VERDICT r6 defect #1).
-
-        Coverage check (ADVICE r6): the bloom slices must cover exactly
-        the slices of the index table they summarize — a root seeded or
-        partially written by the non-Bloom parent class would silently
-        UNDER-filter (rows duplicating the uncovered slices would clear
-        as 'new'), so a mixed/legacy root fails loudly instead."""
-        from ..operators.sketches import bloom_dense_frame
-
-        index_of = {"bloom_fp": "fp_index", "bloom_band": "band_index"}
-        have = {p.rsplit("/", 1)[-1] for p in self._slice_paths(name)}
-        want = {
-            p.rsplit("/", 1)[-1]
-            for p in self._slice_paths(index_of[name])
-        }
-        if not have or have != want:
-            raise RuntimeError(
-                f"{type(self).__name__}: bloom slice dirs under "
-                f"{self.root}/{name} ({sorted(have)}) do not match the "
-                f"{index_of[name]} slices ({sorted(want)}) — the root "
-                "was seeded or written without the Bloom subclass; "
-                "probing this partial bitmap would silently clear rows "
-                "that duplicate the uncovered slices. Re-seed with this "
-                "sink class (or compact with it) before streaming."
-            )
-        words = spark.read.parquet(*self._slice_paths(name))
-        return bloom_dense_frame(words, self.bloom_m_bits)
-
-    def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
+    def _suspect_flags(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
         from ..operators.dedup import (
             fingerprint,
             melt_band_keys,
             minhash_signatures,
         )
-        from ..operators.sketches import bloom_probe
 
-        nh = self.dedup_kwargs.get("num_hashes", 12)
-        nb = self.dedup_kwargs.get("bands", 4)
-        sn = self.dedup_kwargs.get("shingle_n", 3)
-        fp_probe = bloom_probe(
+        g = self._geometry_fields()
+        fp_probe = self._bloom_probe(
             inc.select(
                 self.id_col,
                 fingerprint(F.col(self.text_col)).alias("__fp"),
             ),
             "__fp",
-            self._bloom(spark, "bloom_fp"),
-            self.bloom_m_bits,
-            self.bloom_k,
+            "bloom_fp",
+            "fp_index",
             "fp_hit",
         )
         melt_i = melt_band_keys(
-            minhash_signatures(inc, self.id_col, self.text_col, nh, sn),
+            minhash_signatures(
+                inc, *self._cols, g["num_hashes"], g["shingle_n"]
+            ),
             self.id_col,
-            nb,
-            nh // nb,
+            g["bands"],
+            g["num_hashes"] // g["bands"],
         )
         band_probe = (
-            bloom_probe(
-                melt_i,
-                "band_key",
-                self._bloom(spark, "bloom_band"),
-                self.bloom_m_bits,
-                self.bloom_k,
-                "band_hit",
+            self._bloom_probe(
+                melt_i, "band_key", "bloom_band", "band_index", "band_hit"
             )
             .groupBy(self.id_col)
             .agg(F.max("band_hit").alias("band_hit"))
         )
-        flags = (
+        # NULL text => NULL fingerprint => NULL flag: the mixin routes
+        # it to the suspect arm
+        return (
             fp_probe.select(self.id_col, "fp_hit")
             .join(band_probe, self.id_col, "left")
             .select(
                 self.id_col,
-                # NULL text => NULL fingerprint => NULL probe flag; the
-                # outer coalesce routes such rows to the SUSPECT arm so
-                # the parent probe decides them — without it the row
-                # fails both filter(__suspect) and filter(~__suspect)
-                # and silently vanishes from status and corpus,
-                # breaking the identical-decisions contract (ADVICE r6)
-                F.coalesce(
+                (
                     F.col("fp_hit")
-                    | F.coalesce(F.col("band_hit"), F.lit(False)),
-                    F.lit(True),
+                    | F.coalesce(F.col("band_hit"), F.lit(False))
                 ).alias("__suspect"),
             )
-            .localCheckpoint(eager=True)  # feeds both arms + telemetry
-        )
-        suspects = inc.join(
-            flags.filter("__suspect").select(self.id_col), self.id_col
-        )
-        cleared = flags.filter(~F.col("__suspect")).select(self.id_col)
-        # telemetry: ONE agg over the checkpointed flags (total +
-        # suspect count in the same cached-block scan — was two jobs)
-        trow = flags.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col("__suspect").cast("long")).alias("__ns"),
-        ).collect()[0]
-        n_suspect = int(trow["__ns"] or 0)
-        self.last_prefilter_stats = (
-            int(trow["__n"]) - n_suspect,
-            n_suspect,
-        )
-        st_clear = cleared.select(
-            F.col(self.id_col),
-            F.lit("new").alias("status"),
-            F.lit(None)
-            .cast(dict(inc.dtypes)[self.id_col])
-            .alias("dup_of"),
-        )
-        return (
-            super()
-            ._status(spark, suspects)
-            .unionByName(st_clear)
-            .orderBy(self.id_col)
         )
 
-class LeakageSafeSplitDedupSink(IndexedIncrementalDedupCorpusSink):
-    """The indexed daily-crawl sink PLUS leakage-safe train/val/test
-    assignment AT INGEST — the incremental form of the batch
-    ``dedup_leakage_safe_split`` query.
 
-    Assignment rule per routed doc:
+class _SplitLedger:
+    """Leakage-safe train/val/test assignment AT INGEST, mixed in before
+    a dedup sink class.
 
-    * ``exact_dup`` / ``near_dup`` → INHERIT the split already assigned
-      to ``dup_of`` (always an assigned corpus doc — disjoint id
-      spaces guarantee it), carrying its group id. A doc and its
-      verified duplicate can therefore never straddle a split boundary.
+    Assignment rule per routed row:
+
+    * a dup route → INHERIT the split already assigned to ``dup_of``
+      (always an assigned corpus row — disjoint id spaces guarantee
+      it), carrying its group id. A row and its verified duplicate can
+      therefore never straddle a split boundary. An orphaned dup route
+      (``dup_of`` with no committed assignment) fails the batch loudly:
+      a silently missing split row is the worst outcome for an
+      immutable-assignment ledger.
     * ``new`` survivors → component-routed assignment WITHIN the batch
-      (:func:`pipelines.ml.leakage_safe_assignments`): two new docs
-      that duplicate each other but nothing in the corpus found ONE
-      group and share a side (per-doc hashing here would be the
-      straddle bug in miniature).
+      (``_slice_assignments``): two new rows that duplicate each other
+      but nothing in the corpus found ONE group and share a side
+      (per-row hashing here would be the straddle bug in miniature).
 
     Assignments are IMMUTABLE once committed — split STABILITY is the
     contract a crawl pipeline needs (a doc that moves from train to
     test after a later component merge IS the leak, retroactively).
-    The corollary is honest: if a later bridge doc connects two
+    The corollary is honest: if a later bridge row connects two
     existing groups that landed on opposite sides, the bridge inherits
     its ``dup_of``'s side and its OTHER cross-group pairs straddle;
     the right production response is detect-and-quarantine (the
     straddle audit in the tests), never rewriting history. A
     from-scratch batch recompute after such a merge may legitimately
-    differ — the e2e test asserts equality exactly when no cross-batch
+    differ — the e2e tests assert equality exactly when no cross-batch
     merge occurred, and stability always.
 
     Layout adds ``splits/batch_id=<n>`` slices of
-    ``(doc_id, group_id, split)`` (seed = batch_id=-1), gated by the
-    same commit markers as the corpus slices.
-    """
+    ``(id, group_id, split)`` (seed = batch_id=-1), gated by the same
+    commit markers as the corpus slices; compaction does not touch
+    them. A sink supplies ``_slice_assignments(docs)``."""
 
     def seed(self, corpus: DataFrame) -> None:
         super().seed(corpus)
-        from ..pipelines.ml import leakage_safe_assignments
-
-        a = leakage_safe_assignments(
-            corpus.select(self.id_col, self.text_col),
-            self.id_col,
-            self.text_col,
-            **self.dedup_kwargs,
-        )
-        a.write.mode("overwrite").parquet(
+        self._slice_assignments(corpus).write.mode("overwrite").parquet(
             f"{self.root}/splits/batch_id=-1"
         )
 
     def assignments(self, spark: SparkSession) -> DataFrame:
-        """Every committed (doc_id, group_id, split) assignment —
-        seed plus committed batches (same slice discipline as the
-        corpus; compaction does not touch split slices)."""
+        """Every committed (id, group_id, split) assignment — seed plus
+        committed batches."""
         base = f"{self.root}/splits"
         paths = [f"{base}/batch_id=-1"] + [
             f"{base}/batch_id={b}"
@@ -631,7 +651,7 @@ class LeakageSafeSplitDedupSink(IndexedIncrementalDedupCorpusSink):
         present = [p for p in paths if pathlib.Path(p).exists()]
         if not present:
             raise RuntimeError(
-                f"LeakageSafeSplitDedupSink has no split slices under "
+                f"{type(self).__name__} has no split slices under "
                 f"{base}: call seed() before starting the stream."
             )
         return spark.read.parquet(*present)
@@ -642,20 +662,14 @@ class LeakageSafeSplitDedupSink(IndexedIncrementalDedupCorpusSink):
         inc: DataFrame,
         status: DataFrame,
         batch_id: int,
-    ) -> None:
-        from ..pipelines.ml import leakage_safe_assignments
-
+    ) -> DataFrame:
         prev = self.assignments(spark).select(
             F.col(self.id_col).alias("dup_of"),
             "group_id",
             "split",
         )
-        # LEFT join + loud failure (ADVICE r5): the disjoint-id
-        # contract says every dup_of is an already-assigned corpus doc;
-        # if an ingest bug or a missing split slice ever violates it,
-        # an inner join would silently drop the doc's split row — the
-        # worst outcome for an immutable-assignment ledger. Fail the
-        # batch instead so the broken contract surfaces at ingest.
+        # LEFT join + loud failure: an inner join would silently drop
+        # the split row of a dup whose target has no assignment
         inherited = (
             status.filter(F.col("status") != "new")
             .select(self.id_col, "dup_of")
@@ -665,29 +679,46 @@ class LeakageSafeSplitDedupSink(IndexedIncrementalDedupCorpusSink):
         n_orphans = inherited.filter(F.col("split").isNull()).count()
         if n_orphans:
             raise RuntimeError(
-                f"LeakageSafeSplitDedupSink batch {batch_id}: "
-                f"{n_orphans} dup-routed doc(s) point at a dup_of with "
-                "no committed split assignment — the disjoint-id "
-                "ingest contract is violated or a split slice is "
-                "missing; refusing to write a silent gap."
+                f"{type(self).__name__} batch {batch_id}: {n_orphans} "
+                "dup-routed row(s) point at a dup_of with no committed "
+                "split assignment — the disjoint-id ingest contract is "
+                "violated or a split slice is missing; refusing to "
+                "write a silent gap."
             )
-        inherited = inherited.select(self.id_col, "group_id", "split")
-        fresh_docs = inc.join(
-            status.filter(F.col("status") == "new").select(self.id_col),
-            self.id_col,
+        fresh = self._slice_assignments(
+            inc.join(
+                status.filter(F.col("status") == "new").select(self.id_col),
+                self.id_col,
+            )
         )
-        fresh = leakage_safe_assignments(
-            fresh_docs.select(self.id_col, self.text_col),
-            self.id_col,
-            self.text_col,
-            **self.dedup_kwargs,
+        out = inherited.select(self.id_col, "group_id", "split").unionByName(
+            fresh
         )
-        inherited.unionByName(fresh).write.mode("overwrite").parquet(
+        out.write.mode("overwrite").parquet(
             f"{self.root}/splits/batch_id={batch_id}"
         )
+        return out
 
 
-class IncrementalEmbeddingDedupSink(_CommitMarkerLedger):
+class LeakageSafeSplitDedupSink(
+    _SplitLedger, IndexedIncrementalDedupCorpusSink
+):
+    """The indexed daily-crawl sink PLUS leakage-safe train/val/test
+    assignment AT INGEST (:class:`_SplitLedger`) — the incremental form
+    of the batch ``dedup_leakage_safe_split`` query: ``exact_dup`` /
+    ``near_dup`` docs inherit their ``dup_of``'s split, ``new``
+    survivors are component-routed within the batch by
+    :func:`pipelines.ml.leakage_safe_assignments`."""
+
+    def _slice_assignments(self, docs: DataFrame) -> DataFrame:
+        from ..pipelines.ml import leakage_safe_assignments
+
+        return leakage_safe_assignments(
+            docs.select(*self._cols), *self._cols, **self.dedup_kwargs
+        )
+
+
+class IncrementalEmbeddingDedupSink(_SliceIngestSink):
     """The EMBEDDING ingest loop — daily re-embedded crawl batches
     deduped against the accumulated vector corpus, the SRP twin of
     :class:`IndexedIncrementalDedupCorpusSink`: each micro-batch of
@@ -702,25 +733,12 @@ class IncrementalEmbeddingDedupSink(_CommitMarkerLedger):
     when the corpus count crosses an ``srp_rows_per_band`` ladder step
     — one rebuild per ~256× corpus growth at the default target load.
 
-    Layout under ``root``::
-
-        corpus/batch_id=<n>      surviving vectors (seed = batch_id=-1)
-        band_index/batch_id=<n>  (id, band_idx, band_key) of slice n
-        status/batch_id=<n>      (id, status, dup_of) per increment row
-        _committed/<n>           commit marker (data first, marker after)
-
-    ``compact_every=K`` arms the same LSM-style compaction cadence the
-    text sink carries (round 6): corpus + index slices fold into one
-    consolidated ``compacted_v=<epoch>`` dir per table once K batch
-    slices accumulate, with the text sink's crash-safety ordering and
-    equal-epoch no-op. Status slices stay per-batch.
+    Layout adds ``band_index/batch_id=<n>`` — ``(id, band_idx,
+    band_key)`` of slice n — to the base's; ``compact_every=K`` arms
+    the base's compaction cadence.
     """
 
-    #: slice-table names compact() folds and cleans; subclasses that
-    #: persist extra per-batch tables extend this (status and split
-    #: slices stay per-batch — they are read by committed batch id,
-    #: and markers survive compaction)
-    _TABLES: tuple[str, ...] = ("corpus", "band_index")
+    _TABLES = ("corpus", "band_index")
 
     def __init__(
         self,
@@ -734,25 +752,30 @@ class IncrementalEmbeddingDedupSink(_CommitMarkerLedger):
         max_bucket_size: int | None = None,
         compact_every: int | None = None,
     ):
-        super().__init__(root)
-        self.id_col = id_col
+        super().__init__(root, id_col, vec_col)
+        self._arm_compaction(compact_every)
         self.vec_col = vec_col
         self.dim = dim
         self.threshold = threshold
         self.n_bits = n_bits
         self.bands = bands
         self.max_bucket_size = max_bucket_size
-        if compact_every is not None and compact_every < 1:
-            raise ValueError("compact_every must be >= 1 (or None)")
-        self.compact_every = compact_every
 
-    def _write_index_slice(self, docs: DataFrame, batch_id: int) -> None:
+    def _geometry_fields(self) -> dict:
+        """The SRP geometry the persisted band index is a pure function
+        of (threshold only shapes decisions, not the layout)."""
+        return {
+            "dim": self.dim,
+            "n_bits": self.n_bits,
+            "bands": self.bands,
+        }
+
+    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import embedding_band_index
 
         embedding_band_index(
-            docs.select(self.id_col, self.vec_col),
-            self.id_col,
-            self.vec_col,
+            docs.select(*self._cols),
+            *self._cols,
             dim=self.dim,
             n_bits=self.n_bits,
             bands=self.bands,
@@ -760,171 +783,39 @@ class IncrementalEmbeddingDedupSink(_CommitMarkerLedger):
             f"{self.root}/band_index/batch_id={batch_id}"
         )
 
-    def _geometry_fields(self) -> dict:
-        """Layout-shaping parameters the persisted SRP band index is a
-        pure function of (threshold only shapes decisions, not the
-        layout); the bloom subclass extends with its bitmap geometry.
-        Validated against ``_geometry.json`` on seed and every batch."""
-        return {
-            "dim": self.dim,
-            "n_bits": self.n_bits,
-            "bands": self.bands,
-        }
-
-    def seed(self, corpus: DataFrame) -> None:
-        """Write the pre-existing vector corpus + its band index as the
-        ``batch_id=-1`` slices (idempotent: overwrite)."""
-        self._geometry_guard(**self._geometry_fields())
-        corpus.write.mode("overwrite").parquet(
-            f"{self.root}/corpus/batch_id=-1"
-        )
-        self._write_index_slice(corpus, -1)
-
-    def _slices(self, name: str) -> list[str]:
-        """Committed data paths for ``name`` — the shared compaction-
-        aware read rule, with this sink's raise-on-empty contract."""
-        present = self._compacted_slice_paths(name)
-        if not present:
-            raise RuntimeError(
-                f"IncrementalEmbeddingDedupSink has no {name} slices "
-                f"under {self.root}/{name}: call seed() with the "
-                "pre-existing corpus before starting the stream."
-            )
-        return present
-
-    def compact(self, spark: SparkSession) -> int:
-        """Fold seed + committed slices of every ``_TABLES`` table into
-        one consolidated slice each, then drop the folded dirs —
-        bounding the per-batch read fan-in (one slice lands per crawl
-        day; the probe join's file-listing cost grows with that count).
-        Same crash-safety ordering as the text sink: consolidated data
-        first, epoch marker second, folded slices deleted last; equal
-        epoch (no batch since the last compaction) is a NO-OP so the
-        only persisted copy is never rewritten in place. Status and
-        split slices are untouched — they are read per committed batch
-        id, and batch COMMIT markers survive, so the exactly-once
-        replay drop still recognizes folded ids."""
-        committed = self.committed_batches()
-        if not committed:
-            raise RuntimeError(
-                "nothing to compact: no committed batches yet"
-            )
-        epoch = max(committed)
-        prev_epoch = self._compact_epoch()
-        if prev_epoch == epoch:
-            return epoch
-        for name in self._TABLES:
-            df = spark.read.parquet(*self._slices(name))
-            df = df.localCheckpoint(eager=True)  # pin before overwrite
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/{name}/compacted_v={epoch}"
-            )
-        self._finish_compaction(epoch, prev_epoch, self._TABLES)
-        return epoch
-
-    def corpus(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(*self._slices("corpus"))
-
-    def statuses(self, spark: SparkSession) -> DataFrame:
-        base = f"{self.root}/status"
-        paths = [
-            f"{base}/batch_id={b}" for b in sorted(self.committed_batches())
-        ]
-        if not paths:
-            raise RuntimeError(
-                "IncrementalEmbeddingDedupSink has no committed batches "
-                f"under {base} yet."
-            )
-        return spark.read.parquet(*paths)
-
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
         """The per-batch routing decision (id, status, dup_of) — the
-        subclass seam the Bloom-prefiltered sink narrows (same contract
-        as the text sink's hook: decisions must be identical, only the
-        probe COST may change)."""
+        seam the Bloom-prefiltered sink narrows (decisions must be
+        identical, only the probe COST may change)."""
         from ..operators.dedup import incremental_embedding_dedup_status
 
         return incremental_embedding_dedup_status(
-            self.corpus(spark).select(self.id_col, self.vec_col),
+            self.corpus(spark).select(*self._cols),
             inc,
-            self.id_col,
-            self.vec_col,
+            *self._cols,
             dim=self.dim,
             threshold=self.threshold,
             n_bits=self.n_bits,
             bands=self.bands,
             max_bucket_size=self.max_bucket_size,
-            corpus_band_index=spark.read.parquet(
-                *self._slices("band_index")
-            ),
+            corpus_band_index=self._index(spark, "band_index"),
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._geometry_guard(**self._geometry_fields())
-        if batch_id in self.committed_batches():
-            return  # replay of a committed batch — exactly-once drop
-        spark = batch_df.sparkSession
-        inc = batch_df.select(self.id_col, self.vec_col).localCheckpoint(
-            eager=True
-        )
-        status = self._status(spark, inc).localCheckpoint(eager=True)
-        status.write.mode("overwrite").parquet(
-            f"{self.root}/status/batch_id={batch_id}"
-        )
-        survivors = inc.join(
-            status.filter("status = 'new'").select(self.id_col),
-            self.id_col,
-        ).localCheckpoint(eager=True)  # feeds corpus AND index writes
-        survivors.write.mode("overwrite").parquet(
-            f"{self.root}/corpus/batch_id={batch_id}"
-        )
-        self._write_index_slice(survivors, batch_id)
-        # subclass hook — any extra per-batch state must land BEFORE
-        # the commit marker (same crash-safety ordering as the slices)
-        self._post_route(spark, inc, status, batch_id)
-        self._mark_committed(batch_id)
-        if self.compact_every is not None:
-            epoch = self._compact_epoch()
-            live = [
-                b
-                for b in self.committed_batches()
-                if epoch is None or b > epoch
-            ]
-            if len(live) >= self.compact_every:
-                self.compact(spark)
 
-    def _post_route(
-        self,
-        spark: SparkSession,
-        inc: DataFrame,
-        status: DataFrame,
-        batch_id: int,
-    ) -> None:
-        """Per-batch extension point, called after the corpus/index
-        slices land and before the commit marker. No-op here."""
-
-
-class BloomPrefilteredEmbeddingDedupSink(IncrementalEmbeddingDedupSink):
-    """The embedding ingest loop with an SRP band-key BLOOM PRE-FILTER
-    — the semantic twin of
-    :class:`BloomPrefilteredIncrementalDedupSink`: before probing the
-    persisted band index, each batch vector's band keys test a
-    persisted bitmap of the corpus's band keys; a vector whose EVERY
-    band key misses provably has no LSH candidate in the corpus (the
-    near probe is the only gate — embedding dedup has no exact arm)
-    and routes ``new`` without the index join. One-sided error keeps
-    routing identical to the parent (e2e-asserted).
-
-    Bitmap slices (``bloom_band/batch_id=<n>``, mergeable
-    ``(__word, __bits)`` rows) are written from each slice's band
-    index and ride the same commit markers. Geometry is fixed at
-    construction (words must align across slices); a saturated bitmap
-    degrades to the parent's exact behavior. The increment's
-    signatures are computed for the probe and again inside the parent
-    status for the suspect sliver — the signature cost is plan-compile
-    dominated locally (BASELINE.md r4) and batch-sized at scale; the
-    savings is the corpus-side index read + join, the term that grows
-    with corpus size.
+class BloomPrefilteredEmbeddingDedupSink(
+    _BloomPrefilter, IncrementalEmbeddingDedupSink
+):
+    """The embedding ingest loop with an SRP band-key Bloom pre-filter
+    (:class:`_BloomPrefilter`) — the semantic twin of
+    :class:`BloomPrefilteredIncrementalDedupSink`: a vector whose EVERY
+    positioned band key misses the ``bloom_band/`` bitmap has no LSH
+    candidate in the corpus (the near probe is the only gate —
+    embedding dedup has no exact arm) and skips the index join. The
+    increment's signatures are computed for the probe and again inside
+    the parent status for the suspect sliver — the signature cost is
+    plan-compile dominated locally (BASELINE.md r4) and batch-sized at
+    scale; the savings is the corpus-side index read + join, the term
+    that grows with corpus size.
 
     The prefilter's yield tracks BAND WIDTH, exactly like bucket load:
     8-bit bands (2^8 keys) saturate at a few hundred corpus vectors —
@@ -960,77 +851,27 @@ class BloomPrefilteredEmbeddingDedupSink(IncrementalEmbeddingDedupSink):
             max_bucket_size,
             compact_every,
         )
-        if bloom_m_bits < 64 or bloom_k < 1:
-            raise ValueError("bloom geometry: m_bits >= 64, k >= 1")
-        self.bloom_m_bits = bloom_m_bits
-        self.bloom_k = bloom_k
-        #: (n_cleared, n_suspect) prefilter telemetry of the last batch
-        self.last_prefilter_stats: tuple[int, int] | None = None
+        self._arm_bloom(bloom_m_bits, bloom_k)
 
-    def _geometry_fields(self) -> dict:
-        return {
-            **super()._geometry_fields(),
-            "bloom_m_bits": self.bloom_m_bits,
-            "bloom_k": self.bloom_k,
-        }
-
-    def _write_index_slice(self, docs: DataFrame, batch_id: int) -> None:
-        from ..operators.sketches import bloom_word_frame
-
-        super()._write_index_slice(docs, batch_id)
-        spark = docs.sparkSession
-        band = spark.read.parquet(
-            f"{self.root}/band_index/batch_id={batch_id}"
-        )
+    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
+        super()._write_index_slices(docs, batch_id)
         # item = band_idx|band_key: the raw SRP band key is a sig
         # substring whose meaning depends on its position, so the
         # bitmap item must carry the position (the text-side keys embed
         # it in the md5 already)
-        bloom_word_frame(
-            band.select(
-                F.concat_ws(
-                    "|", F.col("band_idx"), F.col("band_key")
-                ).alias("item")
-            ),
-            "item",
-            self.bloom_m_bits,
-            self.bloom_k,
-        ).write.mode("overwrite").parquet(
-            f"{self.root}/bloom_band/batch_id={batch_id}"
+        self._write_bloom_slice(
+            docs.sparkSession,
+            "bloom_band",
+            "band_index",
+            F.concat_ws("|", F.col("band_idx"), F.col("band_key")),
+            batch_id,
         )
 
-    def _bloom(self, spark: SparkSession) -> DataFrame:
-        """Dense positional-array bitmap (VERDICT r6 defect #1 — probe
-        via O(1) ``element_at`` on ArrayType, not a linearly-scanned
-        map), with the same slice-coverage check as the text sink
-        (ADVICE r6): bloom slices must match the band-index slices or
-        the prefilter would silently under-filter a mixed/legacy root."""
-        from ..operators.sketches import bloom_dense_frame
-
-        have = {
-            p.rsplit("/", 1)[-1] for p in self._slices("bloom_band")
-        }
-        want = {
-            p.rsplit("/", 1)[-1] for p in self._slices("band_index")
-        }
-        if not have or have != want:
-            raise RuntimeError(
-                f"{type(self).__name__}: bloom slice dirs under "
-                f"{self.root}/bloom_band ({sorted(have)}) do not match "
-                f"the band_index slices ({sorted(want)}) — re-seed or "
-                "compact with this sink class before streaming."
-            )
-        words = spark.read.parquet(*self._slices("bloom_band"))
-        return bloom_dense_frame(words, self.bloom_m_bits)
-
-    def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
+    def _suspect_flags(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
         from ..operators.dedup import hyperplane_signatures
-        from ..operators.sketches import bloom_probe
 
         rows = self.n_bits // self.bands
-        sig_i = hyperplane_signatures(
-            inc, self.id_col, self.vec_col, self.dim, self.n_bits
-        )
+        sig_i = hyperplane_signatures(inc, *self._cols, self.dim, self.n_bits)
         melt_i = sig_i.select(
             F.col(self.id_col),
             F.explode(
@@ -1039,161 +880,44 @@ class BloomPrefilteredEmbeddingDedupSink(IncrementalEmbeddingDedupSink):
                         F.concat_ws(
                             "|",
                             F.lit(j),
-                            F.substring(
-                                F.col("sig"), j * rows + 1, rows
-                            ),
+                            F.substring(F.col("sig"), j * rows + 1, rows),
                         )
                         for j in range(self.bands)
                     ]
                 )
             ).alias("band_key"),
         )
-        flags = (
-            bloom_probe(
-                melt_i,
-                "band_key",
-                self._bloom(spark),
-                self.bloom_m_bits,
-                self.bloom_k,
-                "band_hit",
+        return (
+            self._bloom_probe(
+                melt_i, "band_key", "bloom_band", "band_index", "band_hit"
             )
             .groupBy(self.id_col)
             .agg(F.max("band_hit").alias("__suspect"))
-            .localCheckpoint(eager=True)  # feeds both arms + telemetry
-        )
-        suspects = inc.join(
-            flags.filter("__suspect").select(self.id_col), self.id_col
-        )
-        # ONE agg for both telemetry counts (see the text sink above)
-        trow = flags.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col("__suspect").cast("long")).alias("__ns"),
-        ).collect()[0]
-        n_suspect = int(trow["__ns"] or 0)
-        self.last_prefilter_stats = (
-            int(trow["__n"]) - n_suspect,
-            n_suspect,
-        )
-        st_clear = flags.filter(~F.col("__suspect")).select(
-            F.col(self.id_col),
-            F.lit("new").alias("status"),
-            F.lit(None)
-            .cast(dict(inc.dtypes)[self.id_col])
-            .alias("dup_of"),
-        )
-        return (
-            super()
-            ._status(spark, suspects)
-            .unionByName(st_clear)
-            .orderBy(self.id_col)
         )
 
 
-class SemanticLeakageSplitDedupSink(IncrementalEmbeddingDedupSink):
+class SemanticLeakageSplitDedupSink(
+    _SplitLedger, IncrementalEmbeddingDedupSink
+):
     """The embedding ingest loop PLUS leakage-safe train/val/test
-    assignment AT INGEST — the incremental form of the batch
-    ``dedup_semantic_leakage_split`` query, and the semantic twin of
-    :class:`LeakageSafeSplitDedupSink` (VERDICT r5 "What's missing"
-    #3): a real crawl pipeline re-embeds every day's batch and needs
-    the SEMANTIC split (paraphrases, re-encodings) maintained
-    incrementally, not recomputed corpus-wide per day.
-
-    Assignment rule per routed vector:
-
-    * ``near_dup`` → INHERIT the split already assigned to ``dup_of``
-      (always an assigned corpus vector — disjoint id spaces), carrying
-      its group id; a vector and its verified semantic duplicate can
-      never straddle a split boundary. An orphaned dup route (dup_of
-      with no committed assignment) fails the batch loudly — same
-      broken-contract policy as the text sink (ADVICE r5).
-    * ``new`` survivors → component-routed assignment WITHIN the batch
-      (:func:`pipelines.ml.semantic_leakage_safe_assignments`): two new
-      vectors that duplicate each other but nothing in the corpus
-      found ONE group and share a side.
-
-    Assignments are IMMUTABLE once committed — the same stability
-    contract, merge honesty, and detect-and-quarantine posture as the
-    text sink's docstring spells out; a from-scratch recompute may
-    legitimately differ after a cross-batch component merge, and the
-    e2e test asserts equality exactly when none occurred.
-
-    Layout adds ``splits/batch_id=<n>`` slices of
-    ``(vec_id, group_id, split)`` (seed = batch_id=-1), gated by the
-    same commit markers as the corpus slices.
-    """
+    assignment AT INGEST (:class:`_SplitLedger`) — the incremental form
+    of the batch ``dedup_semantic_leakage_split`` query and the
+    semantic twin of :class:`LeakageSafeSplitDedupSink`: a real crawl
+    pipeline re-embeds every day's batch and needs the SEMANTIC split
+    (paraphrases, re-encodings) maintained incrementally, not
+    recomputed corpus-wide per day. ``near_dup`` vectors inherit their
+    ``dup_of``'s split; ``new`` survivors are component-routed within
+    the batch by :func:`pipelines.ml.semantic_leakage_safe_assignments`."""
 
     def _slice_assignments(self, vecs: DataFrame) -> DataFrame:
         from ..pipelines.ml import semantic_leakage_safe_assignments
 
         return semantic_leakage_safe_assignments(
-            vecs.select(self.id_col, self.vec_col),
-            self.id_col,
-            self.vec_col,
+            vecs.select(*self._cols),
+            *self._cols,
             self.dim,
             threshold=self.threshold,
             n_bits=self.n_bits,
             bands=self.bands,
             max_bucket_size=self.max_bucket_size,
-        )
-
-    def seed(self, corpus: DataFrame) -> None:
-        super().seed(corpus)
-        self._slice_assignments(corpus).write.mode("overwrite").parquet(
-            f"{self.root}/splits/batch_id=-1"
-        )
-
-    def assignments(self, spark: SparkSession) -> DataFrame:
-        """Every committed (vec_id, group_id, split) assignment — seed
-        plus committed batches (same slice discipline as the corpus)."""
-        base = f"{self.root}/splits"
-        paths = [f"{base}/batch_id=-1"] + [
-            f"{base}/batch_id={b}"
-            for b in sorted(self.committed_batches())
-        ]
-        present = [p for p in paths if pathlib.Path(p).exists()]
-        if not present:
-            raise RuntimeError(
-                f"SemanticLeakageSplitDedupSink has no split slices "
-                f"under {base}: call seed() before starting the stream."
-            )
-        return spark.read.parquet(*present)
-
-    def _post_route(
-        self,
-        spark: SparkSession,
-        inc: DataFrame,
-        status: DataFrame,
-        batch_id: int,
-    ) -> None:
-        prev = self.assignments(spark).select(
-            F.col(self.id_col).alias("dup_of"),
-            "group_id",
-            "split",
-        )
-        # LEFT join + loud failure: same rationale as the text sink —
-        # a silently missing split row is the worst outcome for an
-        # immutable-assignment ledger (ADVICE r5).
-        inherited = (
-            status.filter(F.col("status") != "new")
-            .select(self.id_col, "dup_of")
-            .join(prev, "dup_of", "left")
-            .localCheckpoint(eager=True)  # count + write read one scan
-        )
-        n_orphans = inherited.filter(F.col("split").isNull()).count()
-        if n_orphans:
-            raise RuntimeError(
-                f"SemanticLeakageSplitDedupSink batch {batch_id}: "
-                f"{n_orphans} dup-routed vector(s) point at a dup_of "
-                "with no committed split assignment — the disjoint-id "
-                "ingest contract is violated or a split slice is "
-                "missing; refusing to write a silent gap."
-            )
-        inherited = inherited.select(self.id_col, "group_id", "split")
-        fresh_vecs = inc.join(
-            status.filter(F.col("status") == "new").select(self.id_col),
-            self.id_col,
-        )
-        fresh = self._slice_assignments(fresh_vecs)
-        inherited.unionByName(fresh).write.mode("overwrite").parquet(
-            f"{self.root}/splits/batch_id={batch_id}"
         )

@@ -103,6 +103,17 @@ class _CommitMarkerLedger:
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_text(json.dumps(want))
 
+    def _geometry_fields(self) -> dict:
+        """Layout-shaping parameters the persisted state depends on;
+        none by default."""
+        return {}
+
+    def _check_geometry(self) -> None:
+        """Run :meth:`_geometry_guard` when the sink declares geometry."""
+        fields = self._geometry_fields()
+        if fields:
+            self._geometry_guard(**fields)
+
     # -- shared compaction machinery (one implementation for the three
     # -- compacting layouts: text dedup sink, embedding dedup sink,
     # -- novelty monitor — review finding r7: the read rule and the
@@ -278,10 +289,6 @@ class _VersionedStateSink(_CommitMarkerLedger):
         super().__init__(root)
         self.keep_versions = keep_versions
 
-    def _geometry_fields(self) -> dict:
-        """Layout-shaping parameters the persisted state depends on."""
-        return {}
-
     def _path(self, table: str, version: int) -> str:
         return f"{self.root}/{table + '/' if table else ''}v={version}"
 
@@ -306,9 +313,7 @@ class _VersionedStateSink(_CommitMarkerLedger):
         return self._latest(spark)[1][0]
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        fields = self._geometry_fields()
-        if fields:
-            self._geometry_guard(**fields)
+        self._check_geometry()
         if batch_id in self.committed_batches():
             return  # replay of a committed batch — exactly-once drop
         part = self.partial(batch_df)

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
+
 from mknssh_11_bigdata_spark.operators.dedup import (
     incremental_dedup_status,
 )
@@ -450,9 +452,15 @@ def test_compact_cadence_bounds_slice_count(spark, tmp_path):
     plain = IndexedIncrementalDedupCorpusSink(str(tmp_path / "plain"))
     auto.seed(seed)
     plain.seed(seed)
+    jsc = spark.sparkContext._jsc
     for i, b in enumerate(batches):
+        pinned = set(jsc.getPersistentRDDs().keys())
         auto(b, i)
         plain(b, i)
+        # each sink frees its own pins and compaction pins nothing; the
+        # one left per call is the operator's signature checkpoint
+        # behind its candidate checkpoint
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 2
         for name in ("corpus", "fp_index", "band_index"):
             dirs = [
                 p.name
@@ -1006,7 +1014,12 @@ def test_bloom_prefiltered_embedding_sink_matches_parent(spark, tmp_path):
         bloom_m_bits=64, **kw
     )
     tiny.seed(seed)
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keys())
     tiny(incs[0].localCheckpoint(eager=True), 0)
+    # the input's own checkpoint, plus the operator's signature pin
+    # behind its candidate checkpoint; the sink frees the rest
+    assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 2
     st0 = incremental_embedding_dedup_status(
         seed, incs[0], "vec_id", "embedding", **kw
     )
@@ -1265,3 +1278,77 @@ def test_dedup_sink_geometry_guard(spark, tmp_path):
     again = BloomPrefilteredIncrementalDedupSink(root, bloom_m_bits=1 << 18)
     again(incs[1].localCheckpoint(eager=True), 1)
     assert again.committed_batches() == {0, 1}
+
+
+@pytest.mark.parametrize("kind", ["indexed_text", "embedding"])
+def test_crash_before_marker_is_invisible_and_replays_clean(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A crash after a batch's data writes but before its commit marker
+    must leave nothing visible: corpus() and statuses() read committed
+    slices only. Replaying the batch id then overwrites the partial
+    slices, and the ledger equals a run that never crashed."""
+    from pyspark.sql import functions as F
+
+    from mknssh_11_bigdata_spark.streaming.incremental import (
+        IncrementalEmbeddingDedupSink,
+        IndexedIncrementalDedupCorpusSink,
+    )
+
+    if kind == "indexed_text":
+        seed, incs = _slices(spark)
+        inc = incs[0]
+
+        def make(name):
+            return IndexedIncrementalDedupCorpusSink(str(tmp_path / name))
+    else:
+        emb = load_table(spark, SF_SMOKE, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        seed = emb.filter("vec_id < 200")
+        inc = emb.filter("vec_id >= 200 AND vec_id < 300").unionByName(
+            seed.filter("vec_id = 0").select(
+                F.lit(1_000_000).cast("long").alias("vec_id"), "embedding"
+            )
+        )
+
+        def make(name):
+            return IncrementalEmbeddingDedupSink(
+                str(tmp_path / name), "vec_id", "embedding",
+                dim=64, threshold=0.4, n_bits=32, bands=4,
+            )
+
+    def ids(df):
+        return {r[0] for r in df.select(df.columns[0]).collect()}
+
+    def ledger(sink):
+        return (
+            sink.committed_batches(),
+            {tuple(r) for r in sink.statuses(spark).collect()},
+            ids(sink.corpus(spark)),
+        )
+
+    clean = make("clean")
+    clean.seed(seed)
+    clean(inc, 0)
+
+    crashed = make("crashed")
+    crashed.seed(seed)
+    seed_ids = ids(crashed.corpus(spark))
+
+    def crash(batch_id):
+        raise OSError("crash before the commit marker")
+
+    monkeypatch.setattr(crashed, "_mark_committed", crash)
+    with pytest.raises(OSError, match="crash"):
+        crashed(inc, 0)
+    # the data slices landed, yet no reader sees them
+    assert pathlib.Path(f"{crashed.root}/status/batch_id=0").exists()
+    assert pathlib.Path(f"{crashed.root}/corpus/batch_id=0").exists()
+    assert ids(crashed.corpus(spark)) == seed_ids
+    with pytest.raises(RuntimeError, match="no committed batches"):
+        crashed.statuses(spark)
+
+    monkeypatch.undo()
+    crashed(inc, 0)  # the replay overwrites the half-written batch
+    assert ledger(crashed) == ledger(clean)
