@@ -9,6 +9,10 @@ Reference citations point into /root/reference/ and mark which inventory
 row (SURVEY.md §2) a function re-expresses; ⚠ rows are places where the
 reference's implementation was an anti-pattern and this module implements
 the *intent* with a scale-safe primitive (SURVEY.md §4.4).
+
+It also holds the scoring that a batch query and its streaming twin
+share (``hourly_anomaly_from_counts``, ``zipf_drift_from_source_counts``)
+and the hash-bucket ``deterministic_split``.
 """
 
 from __future__ import annotations
@@ -18,6 +22,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.numeric import nz
 
 __all__ = [
     "conditional_counts",
@@ -31,8 +37,11 @@ __all__ = [
     "histogram",
     "global_rank_cumsum",
     "global_running_max",
+    "deterministic_split",
     "sql_literal",
     "sql_ident",
+    "hourly_anomaly_from_counts",
+    "zipf_drift_from_source_counts",
 ]
 
 
@@ -526,3 +535,175 @@ def global_running_max(
         )
         .drop("__pid")
     )
+
+
+ANOMALY_TRAIL = 24  # trailing observed hours in the baseline frame
+ANOMALY_Z = 3.0
+
+
+def hourly_anomaly_from_counts(hourly: DataFrame) -> DataFrame:
+    """The anomaly scoring downstream of the (event_type, hour_ts,
+    n_events) spine — trailing-{ANOMALY_TRAIL}-hour mean/stddev frame,
+    z-score, threshold flag. Shared by the batch query
+    ``event_hourly_anomaly`` and the streaming
+    ``HourlyAnomalySink`` (which maintains the spine incrementally),
+    so the two twins cannot drift expression-by-expression."""
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("hour_ts")
+        .rowsBetween(-ANOMALY_TRAIL, -1)
+    )
+    scored = hourly.select(
+        "event_type",
+        "hour_ts",
+        "n_events",
+        F.avg("n_events").over(w).alias("base_mean"),
+        F.stddev("n_events").over(w).alias("base_std"),
+    )
+    z = (F.col("n_events") - F.col("base_mean")) / F.col("base_std")
+    return (
+        scored.filter(
+            F.col("base_std").isNotNull() & (F.col("base_std") > 0)
+        )
+        .select(
+            "event_type",
+            "hour_ts",
+            "n_events",
+            F.round(F.col("base_mean"), 4).alias("base_mean"),
+            nz(F.round(z, 4)).alias("zscore"),
+            (F.abs(z) >= ANOMALY_Z).alias("is_anomaly"),
+        )
+        .orderBy("event_type", "hour_ts")
+    )
+
+
+#: doc_id-mod-N crawl shards of ``doc_source_quality_drift`` and its
+#: streaming twin ``SourceQualityDriftSink``.
+_DRIFT_SHARDS = 5
+
+
+def zipf_drift_from_source_counts(sfreq: DataFrame) -> DataFrame:
+    """The Zipf-drift computation downstream of the (source, token, f)
+    count table — per-source exact-integer OLS fits, corpus-wide fit
+    from a second-stage rollup of the SAME counts, drift as raw-slope
+    subtraction before one final rounding. Shared by the batch query
+    ``corpus_zipf_source_drift`` and the streaming
+    ``ZipfSourceDriftSink`` (which maintains ``sfreq`` incrementally),
+    so the two twins cannot drift expression-by-expression."""
+
+    def _pts(ranked_df):
+        return ranked_df.select(
+            "*",
+            F.round(F.log(F.col("r").cast("double")) * 1000000, 0)
+            .cast("long")
+            .alias("x"),
+            F.round(F.log(F.col("f").cast("double")) * 1000000, 0)
+            .cast("long")
+            .alias("y"),
+        )
+
+    _sums = [
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+    ]
+
+    def _slope():
+        return (
+            F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
+        ).cast("double") / (
+            F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+        ).cast(
+            "double"
+        )
+
+    w = Window.partitionBy("source").orderBy(
+        F.col("f").desc(), F.col("token").asc()
+    )
+    fits = (
+        _pts(sfreq.withColumn("r", F.row_number().over(w).cast("long")))
+        .groupBy("source")
+        .agg(*_sums)
+        .select("source", "n", _slope().alias("slope"))
+    )
+    gfreq = sfreq.groupBy("token").agg(F.sum("f").cast("long").alias("f"))
+    granked = global_rank_cumsum(
+        gfreq,
+        [F.col("f").desc(), F.col("token").asc()],
+        "f",
+        rank_out="r",
+        cum_out="__cum",
+    )
+    gfit = _pts(granked).agg(*_sums).select(_slope().alias("gslope"))
+    return (
+        fits.crossJoin(F.broadcast(gfit))
+        .select(
+            "source",
+            F.col("n").alias("n_terms"),
+            nz(F.round(F.col("slope"), 6)).alias("zipf_slope"),
+            nz(F.round(F.col("slope") - F.col("gslope"), 6)).alias(
+                "slope_drift"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+def deterministic_split(
+    df: DataFrame,
+    id_col: str,
+    splits: list[tuple[str, int]] | None = None,
+    salt: str = "v1",
+    split_col: str = "split",
+) -> DataFrame:
+    """Reproducible train/val/test assignment by hashed-id bucket.
+
+    The scale-path counterpart of :func:`pipelines.ml.train_test_split`
+    (reference ``model_train_explain.py:60-83`` splits a collected
+    pandas frame — impossible at 100 TB). Each row's split is a pure
+    function of (salt, id): md5-prefix integer mod 100 → contiguous
+    percentile buckets. Properties a production curation pipeline needs:
+
+    * deterministic across runs/cluster sizes/partitionings (no RNG,
+      no ``rand()`` re-rolling per retry);
+    * stable under data growth — a doc keeps its split when new docs
+      arrive (unlike percentile ranks or ``randomSplit``);
+    * narrow-only: no shuffle, no sample pass; the assignment inlines
+      into whatever scan reads the table;
+    * ``salt`` versions the assignment so a re-split is an explicit,
+      auditable choice.
+
+    ``splits`` is a list of (name, percent) summing to 100, default
+    80/10/10 train/val/test.
+    """
+    if splits is None:
+        splits = [("train", 80), ("val", 10), ("test", 10)]
+    if sum(p for _, p in splits) != 100:
+        raise ValueError(f"split percents must sum to 100: {splits}")
+    bucket = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        "|", F.lit(salt), F.col(id_col).cast("string")
+                    )
+                ),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 100
+    )
+    expr = F.lit(splits[-1][0])  # last split takes the remainder
+    cum = 0
+    conds = []
+    for name, pct in splits[:-1]:
+        cum += pct
+        conds.append((cum, name))
+    for cum, name in reversed(conds):
+        expr = F.when(bucket < cum, F.lit(name)).otherwise(expr)
+    return df.withColumn(split_col, expr)

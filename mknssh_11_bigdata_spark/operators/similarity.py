@@ -22,13 +22,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..functions.vectors import (
     cosine_similarity,
+    dot,
+    int_dot,
+    l2_norm,
     lit_double_array,
     lit_double_matrix,
     lit_int_array,
+    max_abs,
+    quantize_int8,
 )
 from ..plans.layout import spread
 
@@ -70,8 +82,6 @@ def nearest_centroid_expr(
     returned id's type to what the caller's schema contract expects
     (``int`` for dense 0..k-1 model ids, ``long`` for corpus-row ids).
     """
-    from ..functions.vectors import cosine_similarity as _cos
-
     ordered = sorted(cents, key=lambda t: t[0])
     ids = [int(cid) for cid, _ in ordered]
     matrix = [[float(x) for x in cvec] for _, cvec in ordered]
@@ -79,7 +89,7 @@ def nearest_centroid_expr(
     # costs one driver round-trip per ELEMENT (~0.4 s per 8x64 model —
     # measured r8), which dominated every literal-model query's wall.
     mat = lit_double_matrix(matrix)
-    sims = F.transform(mat, lambda c: F.round(_cos(vec, c), 6))
+    sims = F.transform(mat, lambda c: F.round(cosine_similarity(vec, c), 6))
     # First occurrence of the max = smallest position; with centroids
     # sorted by id, that reproduces max_by(struct(sim, -cid))'s
     # smaller-id tie-break exactly. A zero-norm vector yields all-NULL
@@ -163,14 +173,6 @@ def kmeans_centroids(
     iff ``id % sample_mod == 0``); assignment quality needs a sample,
     not the corpus.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     spark = corpus.sparkSession
     fit = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
@@ -369,8 +371,6 @@ def quantized_topk(
     scored rows. Zero vectors (amax == 0) are unquantizable and are
     dropped from both sides, mirrored by the oracle.
     """
-    from ..functions.vectors import int_dot, max_abs, quantize_int8
-
     def q8(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
         amax = max_abs(F.col(vec_col))
         return (
@@ -436,8 +436,6 @@ def ivf_int8_topk(
 
     Output: ``(query_id, rank, neighbor_id, qdot, qcos)``.
     """
-    from ..functions.vectors import int_dot, max_abs, quantize_int8
-
     def q8(df: DataFrame, out_id: str) -> DataFrame:
         amax = max_abs(F.col(vec_col))
         return (
@@ -992,8 +990,6 @@ def pq_topk(
     Approximate RECALL (quantization error), deterministic OUTPUT;
     recall vs :func:`brute_force_topk` is asserted in
     tests/test_similarity.py."""
-    from ..functions.vectors import dot, l2_norm
-
     if dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub_dim = dim // n_sub
@@ -1107,8 +1103,6 @@ def ivf_pq_topk(
 
     Deterministic end-to-end like both parents; same-oracle
     hash-certified via ``embedding_topk_ivf_pq``."""
-    from ..functions.vectors import dot, l2_norm
-
     if dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub_dim = dim // n_sub
@@ -1169,13 +1163,11 @@ def ivf_pq_topk(
     # see ivf_topk's probe note) + ADC LUTs
     cent_mat = lit_double_matrix([cv for _, cv in sorted(cents)])
     cent_ids = lit_int_array([cid for cid, _ in sorted(cents)])
-    from ..functions.vectors import cosine_similarity as _cos
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     sims = F.transform(
-        cent_mat, lambda cv: F.round(_cos(F.col("__qv"), cv), 6)
+        cent_mat, lambda cv: F.round(cosine_similarity(F.col("__qv"), cv), 6)
     )
     ranked_cells = F.slice(
         F.array_sort(

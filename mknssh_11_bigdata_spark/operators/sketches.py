@@ -1,5 +1,6 @@
-"""Bounded-memory sketch operators: Bloom-filter membership and
-Misra-Gries heavy hitters.
+"""Bounded-memory sketch operators: Bloom-filter membership,
+Misra-Gries heavy hitters, KMV/HLL distinct counts, count-min and
+bottom-k quantile samples.
 
 Two scale patterns a 100 TB curation pass needs that nothing else in
 the tree provides:
@@ -33,15 +34,19 @@ rescore, so its candidate set never shows in the output.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..plans.layout import broadcast_if_small
+
 __all__ = [
     "bloom_bit_positions",
     "bloom_word_frame",
+    "BLOOM_WORDS_SCHEMA",
     "bloom_dense_frame",
     "bloom_build",
     "bloom_probe",
@@ -57,6 +62,10 @@ __all__ = [
     "bottom_k_sample",
     "bottom_k_rows",
     "kmv_pair_overlap",
+    "HLL_M",
+    "HLL_SALT",
+    "QSK_K",
+    "QSK_SALT",
 ]
 
 #: Range of the portable 60-bit md5 hash (first 15 hex chars), as the
@@ -89,6 +98,11 @@ def bloom_bit_positions(item: Column, m_bits: int, k: int) -> list[Column]:
         ).alias(f"__pos{j}")
         for j in range(k)
     ]
+
+
+#: Schema of :func:`bloom_word_frame`'s output, for reading persisted
+#: word tables without inferring it from the files.
+BLOOM_WORDS_SCHEMA = "__word BIGINT, __bits BIGINT"
 
 
 def bloom_word_frame(
@@ -502,8 +516,6 @@ def cms_estimate(
     Absent cells (possible when the probe universe is disjoint from the
     build stream) coalesce to 0, the sketch's honest answer for a
     bucket nothing hashed into."""
-    from ..plans.layout import broadcast_if_small
-
     probes = universe.select(
         F.col(item_col),
         F.posexplode(
@@ -671,3 +683,99 @@ def kmv_pair_overlap(
         ).cast("long").alias("overlap_est"),
         F.round(shared.cast("double") / den, 6).alias("jaccard_est"),
     )
+
+
+# Portable HyperLogLog and bottom-k quantile geometry, shared by the
+# batch queries (queries_events) and their streaming monitor sinks.
+
+HLL_M = 64  # registers (p = 6 index bits off the 60-bit portable hash)
+HLL_SALT = "hll-v1"
+#: Rank cap. The remainder field is 54 bits so true ranks run 1..55;
+#: capping at 50 keeps the integer harmonic fold in BIGINT (sum of
+#: 2^(50-rank) over 64 registers <= 2^56) and is unreachable noise in
+#: practice — rank 50 needs ~2^49 distinct values PER REGISTER. The cap
+#: also absorbs the rem=0 corner (bin('0') has length 1) without a
+#: special case: LEAST(55 - 1, 50) = 50.
+_HLL_RANK_CAP = 50
+#: alpha_64 * m^2 * 2^cap as ONE Python-computed literal, so both
+#: engines' estimate is a single double division + ROUND — the KMV
+#: estimator's cross-engine-determinism recipe.
+_HLL_NUM = 0.7213 / (1 + 1.079 / HLL_M) * HLL_M * HLL_M * float(
+    1 << _HLL_RANK_CAP
+)
+#: Linear-counting lookup m*ln(m/V) for V=1..64, precomputed to INTEGERS
+#: at import so neither engine evaluates ln() at query time (cross-engine
+#: libm ULP drift is the one nondeterminism this family must not admit).
+_HLL_LC = tuple(
+    int(round(HLL_M * math.log(HLL_M / v))) for v in range(1, HLL_M + 1)
+)
+
+
+def _hll_registers(h: DataFrame, key: str) -> DataFrame:
+    """``(key, reg, mreg)`` register maxima from a ``(key, h)`` frame —
+    the Spark twin of ``queries_events._hll_reg_cte``'s r/m stages,
+    shared by the per-type and sliding-window HLL queries and the HLL
+    monitor sink so the register construction cannot drift."""
+    r = h.select(
+        key,
+        (F.col("h") % HLL_M).alias("reg"),
+        F.least(
+            F.lit(55) - F.length(F.bin(F.expr(f"h DIV {HLL_M}"))),
+            F.lit(_HLL_RANK_CAP),
+        ).alias("rank"),
+    )
+    return r.groupBy(key, "reg").agg(F.max("rank").alias("mreg"))
+
+
+def _hll_estimate_frame(m: DataFrame, key: str) -> DataFrame:
+    """``(key, hll_estimate, n_empty_registers)`` from a register
+    frame — the integer harmonic fold, one-division raw estimate, and
+    linear-counting arm of ``queries_events._hll_fold_cte`` and
+    ``_hll_est_case``, as one shared Spark implementation."""
+    cap = _HLL_RANK_CAP
+    s = m.groupBy(key).agg(
+        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {cap} - mreg)"))
+        .cast("long")
+        .alias("s_present"),
+        F.count(F.lit(1)).cast("long").alias("n_regs"),
+    )
+    v = (F.lit(HLL_M) - F.col("n_regs")).cast("int")
+    s_total = F.col("s_present") + v.cast("long") * F.lit(
+        1 << cap
+    ).cast("long")
+    raw = F.round(F.lit(_HLL_NUM) / s_total, 0).cast("long")
+    lc = F.expr("array(" + ",".join(f"{int(x)}L" for x in _HLL_LC) + ")")
+    est = F.when(
+        (raw <= F.lit(5 * HLL_M // 2)) & (v > F.lit(0)),
+        F.element_at(lc, v),
+    ).otherwise(raw)
+    return s.select(
+        key,
+        est.alias("hll_estimate"),
+        v.cast("long").alias("n_empty_registers"),
+    )
+
+
+QSK_K = 256
+QSK_SALT = "qsk-v1"
+#: (name, numerator, denominator) for the probed quantiles; the order
+#: statistic index is ceil(p*n) = (num*n + den - 1) DIV den — pure
+#: integer, so both engines pick the identical rank.
+_QSK_PS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
+
+
+def _qsk_est_cols(vals: F.Column) -> list[F.Column]:
+    """Sample order-statistic estimate columns over a SORTED value
+    array — the Spark twin of ``queries_events._qsk_est_sql``, shared
+    by the per-type and sliding quantile queries and the quantile
+    monitor sink."""
+    ns = F.size(vals)
+    return [
+        F.element_at(
+            vals,
+            ((F.lit(num) * ns + F.lit(den) - 1) / F.lit(den)).cast(
+                "int"
+            ),
+        ).alias(f"{name}_est")
+        for name, num, den in _QSK_PS
+    ]

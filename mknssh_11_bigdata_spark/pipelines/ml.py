@@ -39,7 +39,6 @@ __all__ = [
     "pca_reduce",
     "tsne_2d",
     "train_test_split",
-    "deterministic_split",
     "train_model",
     "score_model",
     "explain_model",
@@ -138,149 +137,6 @@ def train_test_split(
         test_idx.append(idx[: max(1, int(round(len(idx) * test_frac)))])
     test_mask = pdf.index.isin(np.concatenate(test_idx))
     return pdf[~test_mask], pdf[test_mask]
-
-
-def deterministic_split(
-    df: DataFrame,
-    id_col: str,
-    splits: list[tuple[str, int]] | None = None,
-    salt: str = "v1",
-    split_col: str = "split",
-) -> DataFrame:
-    """Reproducible train/val/test assignment by hashed-id bucket.
-
-    The scale-path counterpart of :func:`train_test_split` (reference
-    ``model_train_explain.py:60-83`` splits a collected pandas frame —
-    impossible at 100 TB). Each row's split is a pure function of
-    (salt, id): md5-prefix integer mod 100 → contiguous percentile
-    buckets. Properties a production curation pipeline needs:
-
-    * deterministic across runs/cluster sizes/partitionings (no RNG,
-      no ``rand()`` re-rolling per retry);
-    * stable under data growth — a doc keeps its split when new docs
-      arrive (unlike percentile ranks or ``randomSplit``);
-    * narrow-only: no shuffle, no sample pass; the assignment inlines
-      into whatever scan reads the table;
-    * ``salt`` versions the assignment so a re-split is an explicit,
-      auditable choice.
-
-    ``splits`` is a list of (name, percent) summing to 100, default
-    80/10/10 train/val/test.
-    """
-    if splits is None:
-        splits = [("train", 80), ("val", 10), ("test", 10)]
-    if sum(p for _, p in splits) != 100:
-        raise ValueError(f"split percents must sum to 100: {splits}")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(salt), F.col(id_col).cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    expr = F.lit(splits[-1][0])  # last split takes the remainder
-    cum = 0
-    conds = []
-    for name, pct in splits[:-1]:
-        cum += pct
-        conds.append((cum, name))
-    for cum, name in reversed(conds):
-        expr = F.when(bucket < cum, F.lit(name)).otherwise(expr)
-    return df.withColumn(split_col, expr)
-
-
-def leakage_safe_assignments(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    splits: list[tuple[str, int]] | None = None,
-    salt: str = "v1",
-    **dedup_kwargs,
-) -> DataFrame:
-    """Component-routed :func:`deterministic_split` over an arbitrary
-    docs frame: every near-dup GROUP (exact ∪ near components from
-    :func:`operators.dedup.near_dup_components`) shares one split, so
-    a test doc's near-verbatim twin can never sit in train. Returns
-    ``(id_col, group_id, split)``; group_id = component min-id for dup
-    members, own id otherwise. The corpus-level registered query
-    (``dedup_leakage_safe_split``) uses the persisted pair-graph
-    artifact instead; this form serves arbitrary slices — seed corpora
-    and micro-batches in the incremental split sink. The component-map
-    join hint is measured-count guarded (VERDICT r5 #1): micro-batches
-    always fit, but a corpus-sized seed on dup-heavy data must not
-    force the broadcast."""
-    from ..operators.dedup import near_dup_components
-    from ..plans.layout import broadcast_if_small
-
-    comp = near_dup_components(docs, id_col, text_col, **dedup_kwargs)
-    g = docs.select(id_col).join(
-        broadcast_if_small(
-            comp.withColumnRenamed("component", "group_id")
-        ),
-        id_col,
-        "left",
-    ).select(
-        id_col, F.coalesce("group_id", F.col(id_col)).alias("group_id")
-    )
-    return deterministic_split(g, "group_id", splits=splits, salt=salt)
-
-
-def semantic_leakage_safe_assignments(
-    vecs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    splits: list[tuple[str, int]] | None = None,
-    salt: str = "v1",
-    **dedup_kwargs,
-) -> DataFrame:
-    """The embedding-side twin of :func:`leakage_safe_assignments`:
-    component-routed :func:`deterministic_split` over an arbitrary
-    vector frame, where components come from the SRP-LSH verified
-    cosine pair graph (:func:`operators.dedup.embedding_near_dup_pairs`
-    → :func:`operators.dedup.duplicate_components`). Two embeddings of
-    the same content — paraphrases, re-encodings — share one group and
-    therefore one split side. Returns ``(id_col, group_id, split)``;
-    group_id = component min-id for dup members, own id otherwise.
-
-    The corpus-level registered query
-    (``dedup_semantic_leakage_split``) routes via the persisted SRP
-    pair-graph artifact; this form serves arbitrary slices — seed
-    corpora and micro-batches in
-    :class:`streaming.incremental.SemanticLeakageSplitDedupSink`. The
-    component-map join hint is measured-count guarded (VERDICT r5 #1)."""
-    from ..operators.dedup import (
-        duplicate_components,
-        embedding_near_dup_pairs,
-    )
-    from ..plans.layout import broadcast_if_small
-
-    pairs = embedding_near_dup_pairs(
-        vecs.select(id_col, vec_col), id_col, vec_col, dim, **dedup_kwargs
-    )
-    comp = duplicate_components(pairs)
-    g = vecs.select(id_col).join(
-        broadcast_if_small(
-            comp.select(
-                F.col("doc_id").alias(id_col),
-                F.col("component").alias("group_id"),
-            )
-        ),
-        id_col,
-        "left",
-    ).select(
-        id_col, F.coalesce("group_id", F.col(id_col)).alias("group_id")
-    )
-    return deterministic_split(g, "group_id", splits=splits, salt=salt)
 
 
 class _NumpyLogReg:

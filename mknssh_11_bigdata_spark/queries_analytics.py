@@ -24,7 +24,12 @@ from pyspark.sql import functions as F
 
 from .functions import text as TX
 from .functions.numeric import nz
-from .operators.relational import global_rank_cumsum
+from .operators.relational import (
+    _DRIFT_SHARDS,
+    deterministic_split,
+    global_rank_cumsum,
+    zipf_drift_from_source_counts,
+)
 from .registry import register
 from .sources.readers import load_table
 
@@ -1099,19 +1104,14 @@ def curation_decontaminated_assignments(
     graph → component-routed hash split with the contamination
     quarantine override (any group holding a hard eval-n-gram hit
     routes whole to ``quarantine``)."""
-    from .pipelines.ml import deterministic_split
     from .operators.dedup import (
+        component_groups,
         duplicate_components,
         minhash_dedup_pairs,
     )
     from .plans.layout import broadcast_if_small
     from .queries_curation import funnel_pass
-    from .queries_llm import (
-        BANDS,
-        JACCARD_THRESHOLD,
-        LSH_MAX_BUCKET,
-        NUM_HASHES,
-    )
+    from .queries_llm import LSH_CHAIN
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     is_eval = (F.col("doc_id") % _CONTAM_EVAL_MOD) == _CONTAM_EVAL_REM
@@ -1120,27 +1120,10 @@ def curation_decontaminated_assignments(
         q,
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
     comp = duplicate_components(pairs)
-    g = (
-        q.select("doc_id")
-        .join(
-            broadcast_if_small(
-                comp.withColumnRenamed("component", "group_id")
-            ),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce("group_id", F.col("doc_id")).alias("group_id"),
-        )
-    )
+    g = component_groups(q, "doc_id", comp).drop("is_dup_member")
     base = _contamination_base(spark, sf_dir).select("doc_id", "nhit")
     # inner join: survivors only (all non-eval by construction). The
     # frame feeds the group-max agg AND the split projection — narrow
@@ -1258,8 +1241,6 @@ def curation_decontaminated_split(
 # ---------------------------------------------------------------------------
 # Per-source quality drift across crawl shards
 # ---------------------------------------------------------------------------
-
-_DRIFT_SHARDS = 5
 
 
 def _drift_oracle() -> str:
@@ -3443,76 +3424,6 @@ def dedup_label_propagation_convergence(
 # Per-source Zipf drift: the corpus_zipf_fit health check, per crawl
 # source, with drift against the corpus-wide fit
 # ---------------------------------------------------------------------------
-
-
-def zipf_drift_from_source_counts(sfreq: DataFrame) -> DataFrame:
-    """The Zipf-drift computation downstream of the (source, token, f)
-    count table — per-source exact-integer OLS fits, corpus-wide fit
-    from a second-stage rollup of the SAME counts, drift as raw-slope
-    subtraction before one final rounding. Shared by the batch query
-    ``corpus_zipf_source_drift`` and the streaming
-    ``ZipfSourceDriftSink`` (which maintains ``sfreq`` incrementally),
-    so the two twins cannot drift expression-by-expression."""
-    from .operators.relational import global_rank_cumsum
-
-    def _pts(ranked_df):
-        return ranked_df.select(
-            "*",
-            F.round(F.log(F.col("r").cast("double")) * 1000000, 0)
-            .cast("long")
-            .alias("x"),
-            F.round(F.log(F.col("f").cast("double")) * 1000000, 0)
-            .cast("long")
-            .alias("y"),
-        )
-
-    _sums = [
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    ]
-
-    def _slope():
-        return (
-            F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-        ).cast("double") / (
-            F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-        ).cast(
-            "double"
-        )
-
-    w = Window.partitionBy("source").orderBy(
-        F.col("f").desc(), F.col("token").asc()
-    )
-    fits = (
-        _pts(sfreq.withColumn("r", F.row_number().over(w).cast("long")))
-        .groupBy("source")
-        .agg(*_sums)
-        .select("source", "n", _slope().alias("slope"))
-    )
-    gfreq = sfreq.groupBy("token").agg(F.sum("f").cast("long").alias("f"))
-    granked = global_rank_cumsum(
-        gfreq,
-        [F.col("f").desc(), F.col("token").asc()],
-        "f",
-        rank_out="r",
-        cum_out="__cum",
-    )
-    gfit = _pts(granked).agg(*_sums).select(_slope().alias("gslope"))
-    return (
-        fits.crossJoin(F.broadcast(gfit))
-        .select(
-            "source",
-            F.col("n").alias("n_terms"),
-            nz(F.round(F.col("slope"), 6)).alias("zipf_slope"),
-            nz(F.round(F.col("slope") - F.col("gslope"), 6)).alias(
-                "slope_drift"
-            ),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .functions import text as TX
 from .functions.numeric import nz
+from .operators.relational import deterministic_split
 from .registry import register
 from .sources.readers import load_table
 
@@ -223,8 +224,8 @@ def stratified_sample(
     md5-derived bucket (pure function of salt+id, 0..999) falls under
     the stratum's keep-rate. No RNG state, no shuffle, reproducible
     under data growth and re-runs — the same hash-bucket trick as
-    ``pipelines.ml.deterministic_split``, generalized to per-group
-    rates. Rows whose stratum has no configured rate are dropped.
+    ``operators.relational.deterministic_split``, generalized to
+    per-group rates. Rows whose stratum has no configured rate are dropped.
 
     Scale note: this is a map-only filter. At 100 TB it composes with
     the scan (predicate stays a Column expression) and never moves data.
@@ -1249,12 +1250,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     loser count (VERDICT r5 #1 — dup-heavy crawls make it corpus-scale)."""
     from .operators.dedup import duplicate_components, minhash_dedup_pairs
     from .plans.layout import broadcast_if_small
-    from .queries_llm import (
-        BANDS,
-        JACCARD_THRESHOLD,
-        LSH_MAX_BUCKET,
-        NUM_HASHES,
-    )
+    from .queries_llm import LSH_CHAIN
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     q = d.filter(funnel_pass(F.col("text")))
@@ -1262,11 +1258,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         q,
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
     comp = duplicate_components(pairs)
     losers = comp.filter(F.col("component") != F.col("doc_id")).select(
@@ -1330,15 +1322,12 @@ def curation_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`broadcast_if_small`, VERDICT r5 #1 — dup members can be a
     large fraction of a crawl corpus, so the hint must never be
     unconditional); the split expression is narrow-only."""
-    from .operators.dedup import duplicate_components, minhash_dedup_pairs
-    from .pipelines.ml import deterministic_split
-    from .plans.layout import broadcast_if_small
-    from .queries_llm import (
-        BANDS,
-        JACCARD_THRESHOLD,
-        LSH_MAX_BUCKET,
-        NUM_HASHES,
+    from .operators.dedup import (
+        component_groups,
+        duplicate_components,
+        minhash_dedup_pairs,
     )
+    from .queries_llm import LSH_CHAIN
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     q = d.filter(funnel_pass(F.col("text")))
@@ -1346,25 +1335,10 @@ def curation_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         q,
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
     comp = duplicate_components(pairs)
-    g = q.select("doc_id").join(
-        broadcast_if_small(
-            comp.withColumnRenamed("component", "group_id")
-        ),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id",
-        F.coalesce("group_id", F.col("doc_id")).alias("group_id"),
-        F.col("group_id").isNotNull().alias("is_dup_member"),
-    )
-    a = deterministic_split(g, "group_id")
+    a = deterministic_split(component_groups(q, "doc_id", comp), "group_id")
     return (
         a.groupBy("split")
         .agg(

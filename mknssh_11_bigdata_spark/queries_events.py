@@ -13,10 +13,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.numeric import nz
+from .operators.relational import (
+    ANOMALY_TRAIL,
+    ANOMALY_Z,
+    hourly_anomaly_from_counts,
+)
+from .operators.sketches import (
+    HLL_M,
+    HLL_SALT,
+    QSK_K,
+    QSK_SALT,
+    _HLL_LC,
+    _HLL_NUM,
+    _HLL_RANK_CAP,
+    _QSK_PS,
+    _hll_estimate_frame,
+    _hll_registers,
+    _qsk_est_cols,
+)
 from .registry import register
 from .sources.readers import load_table
-from .streaming.windows import hourly_tumbling_agg, session_counts
+from .streaming.windows import (
+    hourly_tumbling_agg,
+    session_counts,
+    trailing_window_explode,
+    trailing_window_spine,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -574,46 +596,6 @@ def event_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-
-
-ANOMALY_TRAIL = 24  # trailing observed hours in the baseline frame
-ANOMALY_Z = 3.0
-
-
-def hourly_anomaly_from_counts(hourly: DataFrame) -> DataFrame:
-    """The anomaly scoring downstream of the (event_type, hour_ts,
-    n_events) spine — trailing-{ANOMALY_TRAIL}-hour mean/stddev frame,
-    z-score, threshold flag. Shared by the batch query
-    ``event_hourly_anomaly`` and the streaming
-    ``HourlyAnomalySink`` (which maintains the spine incrementally),
-    so the two twins cannot drift expression-by-expression."""
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_ts")
-        .rowsBetween(-ANOMALY_TRAIL, -1)
-    )
-    scored = hourly.select(
-        "event_type",
-        "hour_ts",
-        "n_events",
-        F.avg("n_events").over(w).alias("base_mean"),
-        F.stddev("n_events").over(w).alias("base_std"),
-    )
-    z = (F.col("n_events") - F.col("base_mean")) / F.col("base_std")
-    return (
-        scored.filter(
-            F.col("base_std").isNotNull() & (F.col("base_std") > 0)
-        )
-        .select(
-            "event_type",
-            "hour_ts",
-            "n_events",
-            F.round(F.col("base_mean"), 4).alias("base_mean"),
-            nz(F.round(z, 4)).alias("zscore"),
-            (F.abs(z) >= ANOMALY_Z).alias("is_anomaly"),
-        )
-        .orderBy("event_type", "hour_ts")
     )
 
 
@@ -1959,30 +1941,6 @@ def kmv_overlap_with_exact(
 # Portable HyperLogLog distinct-count sketch with exact audit (round 8)
 # ---------------------------------------------------------------------------
 
-HLL_M = 64  # registers (p = 6 index bits off the 60-bit portable hash)
-HLL_SALT = "hll-v1"
-#: Rank cap. The remainder field is 54 bits so true ranks run 1..55;
-#: capping at 50 keeps the integer harmonic fold in BIGINT (sum of
-#: 2^(50-rank) over 64 registers <= 2^56) and is unreachable noise in
-#: practice — rank 50 needs ~2^49 distinct values PER REGISTER. The cap
-#: also absorbs the rem=0 corner (bin('0') has length 1) without a
-#: special case: LEAST(55 - 1, 50) = 50.
-_HLL_RANK_CAP = 50
-#: alpha_64 * m^2 * 2^cap as ONE Python-computed literal, so both
-#: engines' estimate is a single double division + ROUND — the KMV
-#: estimator's cross-engine-determinism recipe.
-_HLL_NUM = 0.7213 / (1 + 1.079 / HLL_M) * HLL_M * HLL_M * float(
-    1 << _HLL_RANK_CAP
-)
-#: Linear-counting lookup m*ln(m/V) for V=1..64, precomputed to INTEGERS
-#: at import so neither engine evaluates ln() at query time (cross-engine
-#: libm ULP drift is the one nondeterminism this family must not admit).
-import math as _math  # noqa: E402
-
-_HLL_LC = tuple(
-    int(round(HLL_M * _math.log(HLL_M / v))) for v in range(1, HLL_M + 1)
-)
-
 
 def _hll_reg_cte(key_sql: str, key: str) -> str:
     """h/r/m CTE text parametrized on the grouping-key expression —
@@ -2113,92 +2071,8 @@ def event_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hll_registers(h: DataFrame, key: str) -> DataFrame:
-    """``(key, reg, mreg)`` register maxima from a ``(key, h)`` frame —
-    the Spark twin of :func:`_hll_reg_cte`'s r/m stages, shared by the
-    per-type and sliding-window HLL queries so the register
-    construction cannot drift between them."""
-    r = h.select(
-        key,
-        (F.col("h") % HLL_M).alias("reg"),
-        F.least(
-            F.lit(55) - F.length(F.bin(F.expr(f"h DIV {HLL_M}"))),
-            F.lit(_HLL_RANK_CAP),
-        ).alias("rank"),
-    )
-    return r.groupBy(key, "reg").agg(F.max("rank").alias("mreg"))
-
-
-def _hll_estimate_frame(m: DataFrame, key: str) -> DataFrame:
-    """``(key, hll_estimate, n_empty_registers)`` from a register
-    frame — the integer harmonic fold, one-division raw estimate, and
-    linear-counting arm of :func:`_hll_fold_cte`/:func:`_hll_est_case`,
-    as one shared Spark implementation."""
-    cap = _HLL_RANK_CAP
-    s = m.groupBy(key).agg(
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {cap} - mreg)"))
-        .cast("long")
-        .alias("s_present"),
-        F.count(F.lit(1)).cast("long").alias("n_regs"),
-    )
-    v = (F.lit(HLL_M) - F.col("n_regs")).cast("int")
-    s_total = F.col("s_present") + v.cast("long") * F.lit(
-        1 << cap
-    ).cast("long")
-    raw = F.round(F.lit(_HLL_NUM) / s_total, 0).cast("long")
-    lc = F.expr("array(" + ",".join(f"{int(x)}L" for x in _HLL_LC) + ")")
-    est = F.when(
-        (raw <= F.lit(5 * HLL_M // 2)) & (v > F.lit(0)),
-        F.element_at(lc, v),
-    ).otherwise(raw)
-    return s.select(
-        key,
-        est.alias("hll_estimate"),
-        v.cast("long").alias("n_empty_registers"),
-    )
-
-
 #: Sliding-window length in days for the HLL bucket-merge query.
 HLL_WIN_DAYS = 7
-
-
-def trailing_window_explode(
-    df: DataFrame, day_col: str, window: int, days: DataFrame
-) -> DataFrame:
-    """Explode each row to the ``window`` trailing target days it
-    contributes to, keeping only targets present in ``days`` (the
-    observed-bucket set, column ``day_col``) — the ONE windowing block
-    every sliding bucket-merge member shares (sliding HLL and
-    quantiles, their monitor views, the per-window audit arms, and
-    the n_days spine: 9 call sites, previously 9 inline copies).
-    Returns ``df``'s other columns keyed by the target day under the
-    same ``day_col`` name."""
-    other = [c for c in df.columns if c != day_col]
-    wday = F.explode(
-        F.sequence(
-            F.col(day_col), F.date_add(F.col(day_col), window - 1)
-        )
-    ).alias("__wday")
-    return (
-        df.select(wday, *other)
-        .join(days, F.col("__wday") == days[day_col])
-        .select(F.col("__wday").alias(day_col), *other)
-    )
-
-
-def trailing_window_spine(
-    days: DataFrame, day_col: str, window: int
-) -> DataFrame:
-    """``(day, n_days_in_window)`` — how many observed buckets each
-    trailing window actually merges (honest partial-head-window
-    accounting), via the same explode."""
-    return (
-        trailing_window_explode(
-            days.select(day_col), day_col, window, days
-        )
-        .groupBy(day_col)
-        .agg(F.count(F.lit(1)).cast("int").alias("n_days_in_window"))
-    )
 
 
 def _trailing_spine_cte(w: int) -> str:
@@ -2328,13 +2202,6 @@ def event_hll_sliding_distinct(
 # ---------------------------------------------------------------------------
 # Bounded-memory quantile sketch: bottom-k uniform row sample (round 8)
 # ---------------------------------------------------------------------------
-
-QSK_K = 256
-QSK_SALT = "qsk-v1"
-#: (name, numerator, denominator) for the probed quantiles; the order
-#: statistic index is ceil(p*n) = (num*n + den - 1) DIV den — pure
-#: integer, so both engines pick the identical rank.
-_QSK_PS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
 
 
 def _qsk_est_sql() -> str:
@@ -2475,22 +2342,6 @@ def event_value_quantile_sketch(
         )
         .orderBy("event_type")
     )
-
-
-def _qsk_est_cols(vals: F.Column) -> list[F.Column]:
-    """Sample order-statistic estimate columns over a SORTED value
-    array — the Spark twin of :func:`_qsk_est_sql`, shared by the
-    per-type and sliding quantile queries."""
-    ns = F.size(vals)
-    return [
-        F.element_at(
-            vals,
-            ((F.lit(num) * ns + F.lit(den) - 1) / F.lit(den)).cast(
-                "int"
-            ),
-        ).alias(f"{name}_est")
-        for name, num, den in _QSK_PS
-    ]
 
 
 def _qsk_exact_cols() -> list[F.Column]:

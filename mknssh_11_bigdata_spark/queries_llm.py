@@ -16,6 +16,9 @@ from pyspark.sql.window import Window
 from .functions import text as TX
 from .functions.numeric import nz
 from .operators.dedup import (
+    EMB_DIM,
+    NUM_HASHES,
+    SRP_BITS,
     embedding_cosine_pairs,
     embedding_near_dup_pairs,
     exact_duplicate_groups,
@@ -23,6 +26,7 @@ from .operators.dedup import (
     minhash_dedup_pairs,
     simhash,
 )
+from .operators.relational import deterministic_split
 from .operators.similarity import brute_force_topk, ivf_topk
 from .registry import register
 from .sources.readers import load_table
@@ -44,7 +48,6 @@ SQL_SHINGLES3 = (
 
 _STOPS_SQL = ", ".join(f"'{s}'" for s in TX.EN_STOPWORDS)
 
-NUM_HASHES = 12
 BANDS = 4
 ROWS_PER_BAND = NUM_HASHES // BANDS
 JACCARD_THRESHOLD = 0.8
@@ -52,8 +55,24 @@ NGRAM_JACCARD_THRESHOLD = 0.5
 SIMHASH_BITS = 32
 TOPK = 5
 N_QUERY_VECS = 10
-EMB_DIM = 64
 COSINE_DUP_THRESHOLD = 0.4  # synthetic embeddings: max pair ≈ 0.51 @ sf0.01
+
+#: Hot-bucket guard cap, armed on every registered LSH query. Far above
+#: any bucket at test SFs (max observed: 36 at sf0.1), so local output
+#: stays exact and oracle-checked — while the anti-join guard path is
+#: exercised by the driver gate. At 100 TB tune per corpus (a 10⁶-doc
+#: boilerplate cluster in one bucket would alone emit 5·10¹¹ pairs).
+LSH_MAX_BUCKET = 1000
+
+#: The registered text-dedup chain (MinHash bands, LSH, Jaccard verify)
+#: as keyword arguments, shared by every query that runs it.
+LSH_CHAIN = dict(
+    num_hashes=NUM_HASHES,
+    bands=BANDS,
+    shingle_n=3,
+    threshold=JACCARD_THRESHOLD,
+    max_bucket_size=LSH_MAX_BUCKET,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -161,11 +180,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
 
 
@@ -213,11 +228,7 @@ def minhash_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             _t(spark, sf_dir, "documents"),
             "doc_id",
             "text",
-            num_hashes=NUM_HASHES,
-            bands=BANDS,
-            shingle_n=3,
-            threshold=JACCARD_THRESHOLD,
-            max_bucket_size=LSH_MAX_BUCKET,
+            **LSH_CHAIN,
         ).write.mode("overwrite").parquet(str(path))
     return spark.read.parquet(str(path))
 
@@ -356,11 +367,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc,
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
 
 
@@ -403,11 +410,7 @@ def dedup_incremental_indexed(
         inc,
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
 
 
@@ -753,15 +756,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         threshold=COSINE_DUP_THRESHOLD,
     )
-
-
-SRP_BITS = 32
-#: Hot-bucket guard cap, armed on every registered LSH query. Far above
-#: any bucket at test SFs (max observed: 36 at sf0.1), so local output
-#: stays exact and oracle-checked — while the anti-join guard path is
-#: exercised by the driver gate. At 100 TB tune per corpus (a 10⁶-doc
-#: boilerplate cluster in one bucket would alone emit 5·10¹¹ pairs).
-LSH_MAX_BUCKET = 1000
 
 
 #: Auto-geometry switch points (mirror operators.dedup.srp_rows_per_band
@@ -1228,18 +1222,11 @@ def leakage_safe_split_assignments(
     the map is a sliver and broadcasts; on a crawl where dup members
     are 30–50% of the corpus the map is corpus-scale, the hint stays
     off, and AQE picks the join strategy from runtime stats."""
-    from .operators.dedup import duplicate_components
-    from .pipelines.ml import deterministic_split
-    from .plans.layout import broadcast_if_small
+    from .operators.dedup import component_groups, duplicate_components
 
     comp = duplicate_components(minhash_pair_graph(spark, sf_dir))
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    g = d.join(broadcast_if_small(comp), "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("component", "doc_id").alias("group_id"),
-        F.col("component").isNotNull().alias("is_dup_member"),
-    )
-    return deterministic_split(g, "group_id")
+    d = _t(spark, sf_dir, "documents")
+    return deterministic_split(component_groups(d, "doc_id", comp), "group_id")
 
 
 def _leakage_split_oracle() -> str:
@@ -1448,11 +1435,7 @@ def dedup_collapsed_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         "doc_id",
         "text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
+        **LSH_CHAIN,
     )
 
 
@@ -2387,13 +2370,11 @@ GROUP BY 1
 @register("doc_deterministic_split", _SPLIT_ORACLE)
 def doc_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible 80/10/10 train/val/test assignment over the corpus
-    (``pipelines.ml.deterministic_split``): split is a pure function of
-    (salt, doc_id) — no RNG, no shuffle, stable under data growth. The
-    scale path for the reference's collected-pandas split
+    (``operators.relational.deterministic_split``): split is a pure
+    function of (salt, doc_id) — no RNG, no shuffle, stable under data
+    growth. The scale path for the reference's collected-pandas split
     (``model_train_explain.py:60-83``). Hash-checked: DuckDB reproduces
     the md5-bucket assignment exactly."""
-    from .pipelines.ml import deterministic_split
-
     d = _t(spark, sf_dir, "documents")
     return (
         deterministic_split(d, "doc_id")
@@ -4052,20 +4033,11 @@ def dedup_semantic_leakage_split(
     only; the vectors themselves are never touched). The component-map
     hint is measured-count guarded (VERDICT r5 #1) — semantic dup
     members can be a large corpus fraction on paraphrase-heavy data."""
-    from .operators.dedup import duplicate_components
-    from .pipelines.ml import deterministic_split
-    from .plans.layout import broadcast_if_small
+    from .operators.dedup import component_groups, duplicate_components
 
-    comp = duplicate_components(srp_pair_graph(spark, sf_dir)).select(
-        F.col("doc_id").alias("vec_id"), "component"
-    )
-    e = _t(spark, sf_dir, "embeddings").select("vec_id")
-    g = e.join(broadcast_if_small(comp), "vec_id", "left").select(
-        "vec_id",
-        F.coalesce("component", F.col("vec_id")).alias("group_id"),
-        F.col("component").isNotNull().alias("is_dup_member"),
-    )
-    a = deterministic_split(g, "group_id")
+    comp = duplicate_components(srp_pair_graph(spark, sf_dir))
+    e = _t(spark, sf_dir, "embeddings")
+    a = deterministic_split(component_groups(e, "vec_id", comp), "group_id")
     return (
         a.groupBy("split")
         .agg(

@@ -43,6 +43,25 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import fingerprint
+from ..operators.dedup import (
+    corpus_dedup_indexes,
+    embedding_band_index,
+    hyperplane_signatures,
+    incremental_dedup_status,
+    incremental_dedup_status_indexed,
+    incremental_embedding_dedup_status,
+    leakage_safe_assignments,
+    melt_band_keys,
+    minhash_signatures,
+    semantic_leakage_safe_assignments,
+)
+from ..operators.sketches import (
+    BLOOM_WORDS_SCHEMA,
+    bloom_dense_frame,
+    bloom_probe,
+    bloom_word_frame,
+)
 from ..session import release_checkpoint
 from .sinks import _CommitMarkerLedger
 
@@ -108,9 +127,12 @@ class _SliceIngestSink(_CommitMarkerLedger):
             batch_id,
         )
 
-    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        """Write slice ``batch_id`` of every probe table ``docs`` feeds.
-        None here."""
+    def _write_index_slices(
+        self, docs: DataFrame, batch_id: int
+    ) -> dict[str, DataFrame]:
+        """Write slice ``batch_id`` of every probe table ``docs`` feeds
+        and return each table's frame as written. None here."""
+        return {}
 
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
         """The per-batch routing decision ``(id, status, dup_of)``."""
@@ -277,8 +299,6 @@ class IncrementalDedupCorpusSink(_SliceIngestSink):
         seam the indexed and Bloom sinks narrow. They MUST return the
         decisions :func:`incremental_dedup_status` returns (the
         certified semantics); only the probe COST may change."""
-        from ..operators.dedup import incremental_dedup_status
-
         return incremental_dedup_status(
             self.corpus(spark).select(*self._cols),
             inc,
@@ -341,9 +361,9 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
             "shingle_n": self.dedup_kwargs.get("shingle_n", 3),
         }
 
-    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import corpus_dedup_indexes
-
+    def _write_index_slices(
+        self, docs: DataFrame, batch_id: int
+    ) -> dict[str, DataFrame]:
         g = self._geometry_fields()
         fp, band = corpus_dedup_indexes(
             docs.select(*self._cols),
@@ -352,16 +372,14 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
             g["bands"],
             g["shingle_n"],
         )
-        fp.write.mode("overwrite").parquet(
-            f"{self.root}/fp_index/batch_id={batch_id}"
-        )
-        band.write.mode("overwrite").parquet(
-            f"{self.root}/band_index/batch_id={batch_id}"
-        )
+        written = {"fp_index": fp, "band_index": band}
+        for name, df in written.items():
+            df.write.mode("overwrite").parquet(
+                f"{self.root}/{name}/batch_id={batch_id}"
+            )
+        return written
 
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
-        from ..operators.dedup import incremental_dedup_status_indexed
-
         return incremental_dedup_status_indexed(
             self.corpus(spark).select(*self._cols),
             self._index(spark, "fp_index"),
@@ -411,14 +429,14 @@ class _BloomPrefilter:
         }
 
     def _write_bloom_slice(
-        self, spark: SparkSession, name: str, index: str, item, batch_id: int
+        self, name: str, index: DataFrame, table: str, item, batch_id: int
     ) -> None:
-        """Bitmap slice ``name`` of ``item`` over the ``index`` slice
-        just written for ``batch_id``."""
-        from ..operators.sketches import bloom_word_frame
-
+        """Bitmap slice ``name`` of ``item`` over slice ``batch_id`` of
+        ``table``, just written from ``index``: read back with that
+        frame's schema, so no job infers it from the footers."""
         bloom_word_frame(
-            spark.read.parquet(f"{self.root}/{index}/batch_id={batch_id}")
+            index.sparkSession.read.schema(index.schema)
+            .parquet(f"{self.root}/{table}/batch_id={batch_id}")
             .select(item.alias("item")),
             "item",
             self.bloom_m_bits,
@@ -439,8 +457,6 @@ class _BloomPrefilter:
         partially written by the non-Bloom parent class would silently
         UNDER-filter (rows duplicating the uncovered slices would clear
         as 'new'), so a mixed/legacy root fails loudly instead."""
-        from ..operators.sketches import bloom_dense_frame, bloom_probe
-
         have, want = (
             {p.rsplit("/", 1)[-1] for p in self._compacted_slice_paths(t)}
             for t in (name, index)
@@ -455,7 +471,9 @@ class _BloomPrefilter:
                 "duplicate the uncovered slices. Re-seed with this sink "
                 "class (or compact with it) before streaming."
             )
-        words = df.sparkSession.read.parquet(*self._slices(name))
+        words = df.sparkSession.read.schema(BLOOM_WORDS_SCHEMA).parquet(
+            *self._slices(name)
+        )
         return bloom_probe(
             df,
             col,
@@ -541,23 +559,20 @@ class BloomPrefilteredIncrementalDedupSink(
         )
         self._arm_bloom(bloom_m_bits, bloom_k)
 
-    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        super()._write_index_slices(docs, batch_id)
-        spark = docs.sparkSession
-        self._write_bloom_slice(
-            spark, "bloom_fp", "fp_index", F.col("fp"), batch_id
-        )
-        self._write_bloom_slice(
-            spark, "bloom_band", "band_index", F.col("band_key"), batch_id
-        )
+    def _write_index_slices(
+        self, docs: DataFrame, batch_id: int
+    ) -> dict[str, DataFrame]:
+        written = super()._write_index_slices(docs, batch_id)
+        for name, table, item in (
+            ("bloom_fp", "fp_index", "fp"),
+            ("bloom_band", "band_index", "band_key"),
+        ):
+            self._write_bloom_slice(
+                name, written[table], table, F.col(item), batch_id
+            )
+        return written
 
     def _suspect_flags(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
-        from ..operators.dedup import (
-            fingerprint,
-            melt_band_keys,
-            minhash_signatures,
-        )
-
         g = self._geometry_fields()
         fp_probe = self._bloom_probe(
             inc.select(
@@ -708,11 +723,9 @@ class LeakageSafeSplitDedupSink(
     of the batch ``dedup_leakage_safe_split`` query: ``exact_dup`` /
     ``near_dup`` docs inherit their ``dup_of``'s split, ``new``
     survivors are component-routed within the batch by
-    :func:`pipelines.ml.leakage_safe_assignments`."""
+    :func:`operators.dedup.leakage_safe_assignments`."""
 
     def _slice_assignments(self, docs: DataFrame) -> DataFrame:
-        from ..pipelines.ml import leakage_safe_assignments
-
         return leakage_safe_assignments(
             docs.select(*self._cols), *self._cols, **self.dedup_kwargs
         )
@@ -770,25 +783,25 @@ class IncrementalEmbeddingDedupSink(_SliceIngestSink):
             "bands": self.bands,
         }
 
-    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import embedding_band_index
-
-        embedding_band_index(
+    def _write_index_slices(
+        self, docs: DataFrame, batch_id: int
+    ) -> dict[str, DataFrame]:
+        band = embedding_band_index(
             docs.select(*self._cols),
             *self._cols,
             dim=self.dim,
             n_bits=self.n_bits,
             bands=self.bands,
-        ).write.mode("overwrite").parquet(
+        )
+        band.write.mode("overwrite").parquet(
             f"{self.root}/band_index/batch_id={batch_id}"
         )
+        return {"band_index": band}
 
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
         """The per-batch routing decision (id, status, dup_of) — the
         seam the Bloom-prefiltered sink narrows (decisions must be
         identical, only the probe COST may change)."""
-        from ..operators.dedup import incremental_embedding_dedup_status
-
         return incremental_embedding_dedup_status(
             self.corpus(spark).select(*self._cols),
             inc,
@@ -853,23 +866,24 @@ class BloomPrefilteredEmbeddingDedupSink(
         )
         self._arm_bloom(bloom_m_bits, bloom_k)
 
-    def _write_index_slices(self, docs: DataFrame, batch_id: int) -> None:
-        super()._write_index_slices(docs, batch_id)
+    def _write_index_slices(
+        self, docs: DataFrame, batch_id: int
+    ) -> dict[str, DataFrame]:
+        written = super()._write_index_slices(docs, batch_id)
         # item = band_idx|band_key: the raw SRP band key is a sig
         # substring whose meaning depends on its position, so the
         # bitmap item must carry the position (the text-side keys embed
         # it in the md5 already)
         self._write_bloom_slice(
-            docs.sparkSession,
             "bloom_band",
+            written["band_index"],
             "band_index",
             F.concat_ws("|", F.col("band_idx"), F.col("band_key")),
             batch_id,
         )
+        return written
 
     def _suspect_flags(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
-        from ..operators.dedup import hyperplane_signatures
-
         rows = self.n_bits // self.bands
         sig_i = hyperplane_signatures(inc, *self._cols, self.dim, self.n_bits)
         melt_i = sig_i.select(
@@ -907,11 +921,10 @@ class SemanticLeakageSplitDedupSink(
     (paraphrases, re-encodings) maintained incrementally, not
     recomputed corpus-wide per day. ``near_dup`` vectors inherit their
     ``dup_of``'s split; ``new`` survivors are component-routed within
-    the batch by :func:`pipelines.ml.semantic_leakage_safe_assignments`."""
+    the batch by
+    :func:`operators.dedup.semantic_leakage_safe_assignments`."""
 
     def _slice_assignments(self, vecs: DataFrame) -> DataFrame:
-        from ..pipelines.ml import semantic_leakage_safe_assignments
-
         return semantic_leakage_safe_assignments(
             vecs.select(*self._cols),
             *self._cols,

@@ -29,13 +29,41 @@ never the table root.
 
 from __future__ import annotations
 
+import json
 import pathlib
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
 from ..functions.numeric import nz
+from ..operators.relational import (
+    _DRIFT_SHARDS,
+    hourly_anomaly_from_counts,
+    zipf_drift_from_source_counts,
+)
+from ..operators.sketches import (
+    HLL_M,
+    KMV_HASH_RANGE,
+    _HLL_RANK_CAP,
+    _QSK_PS,
+    _hll_estimate_frame,
+    _hll_registers,
+    _qsk_est_cols,
+    bloom_dense_frame,
+    bloom_probe,
+    bloom_word_frame,
+    bottom_k_rows,
+    bottom_k_values,
+    cms_build,
+    cms_estimate,
+    kmv_hash,
+    kmv_pair_overlap,
+)
+from ..plans.layout import broadcast_if_small
 from ..session import release_checkpoint
+from .windows import trailing_window_explode
 
 
 class _CommitMarkerLedger:
@@ -83,8 +111,6 @@ class _CommitMarkerLedger:
         genuinely unchanged — only a REAL mismatch stays loud (review
         finding, r8: adding ``source_col`` must not make every
         pre-r8 sourceless novelty root permanently unwritable)."""
-        import json
-
         p = pathlib.Path(self.root) / "_geometry.json"
         want = {k: fields[k] for k in sorted(fields)}
         if p.exists():
@@ -166,8 +192,6 @@ class _CommitMarkerLedger:
         leaves stale dirs readers already ignore). Batch COMMIT
         markers are never touched, so exactly-once replay drops still
         recognize folded batch ids."""
-        import shutil
-
         marker = pathlib.Path(self.root) / "_compacted"
         marker.mkdir(parents=True, exist_ok=True)
         (marker / str(epoch)).touch()
@@ -330,8 +354,6 @@ class _VersionedStateSink(_CommitMarkerLedger):
             )
 
     def _prune(self) -> None:
-        import shutil
-
         for old in sorted(self.committed_batches())[: -self.keep_versions]:
             for t in self._tables:
                 shutil.rmtree(self._path(t, old), ignore_errors=True)
@@ -377,8 +399,6 @@ class LatestSnapshotSink(_VersionedStateSink):
         return batch_df
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         if prev is not None:
             part = prev.unionByName(part.select(*prev.columns))
         w = Window.partitionBy(*self.key_cols).orderBy(
@@ -524,16 +544,12 @@ class SourceQualityDriftSink(_VersionedStateSink):
         )
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        from ..functions.text import quality_score
-
-        # the batch query's constant, imported so the twins can't drift
-        from ..queries_analytics import _DRIFT_SHARDS as shards
-
+        # the batch query's constant, so the twins can't drift
         return (
             batch_df.select(
                 "source",
-                (F.col("doc_id") % shards).alias("shard"),
-                quality_score(F.col("text")).alias("q"),
+                (F.col("doc_id") % _DRIFT_SHARDS).alias("shard"),
+                TX.quality_score(F.col("text")).alias("q"),
             )
             .groupBy("source", "shard")
             .agg(
@@ -559,7 +575,7 @@ class ZipfSourceDriftSink(_VersionedStateSink):
     which makes the additive per-batch merge equal to the batch
     query's one-pass counts under ANY batch split. The fit view
     derives at read time through the SAME shared plan the batch query
-    uses (:func:`queries_analytics.zipf_drift_from_source_counts`), so
+    uses (:func:`operators.relational.zipf_drift_from_source_counts`), so
     the streamed answer is bit-identical to the batch answer
     (e2e-tested), not merely approximate.
 
@@ -593,8 +609,6 @@ class ZipfSourceDriftSink(_VersionedStateSink):
         cached snapshot, not an accumulating block per call. A view
         returned by an earlier call stays valid until the next
         committed version supersedes it."""
-        from ..queries_analytics import zipf_drift_from_source_counts
-
         version, _ = self._latest(spark, ())
         if version is None:
             return None
@@ -608,8 +622,6 @@ class ZipfSourceDriftSink(_VersionedStateSink):
         return zipf_drift_from_source_counts(self._drift_ckpt)
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        from ..functions import text as TX
-
         return (
             batch_df.select(
                 "source",
@@ -634,7 +646,7 @@ class HourlyAnomalySink(_VersionedStateSink):
     spine itself: counts are exact integers, so the additive per-batch
     merge equals the batch query's one-pass groupBy under ANY batch
     split, and the trailing-window z-score view derives at read time
-    through the SAME shared plan (:func:`queries_events.
+    through the SAME shared plan (:func:`operators.relational.
     hourly_anomaly_from_counts`) — streamed ≡ batch bit-for-bit
     (e2e-tested). State is types×hours-sized (a few rows per hour),
     bounded regardless of event volume.
@@ -647,8 +659,6 @@ class HourlyAnomalySink(_VersionedStateSink):
         """The scored view — column-identical to
         ``event_hourly_anomaly`` (event_type, hour_ts, n_events,
         base_mean, zscore, is_anomaly)."""
-        from ..queries_events import hourly_anomaly_from_counts
-
         counts = self.counts(spark)
         if counts is None:
             return None
@@ -744,8 +754,6 @@ class HeavyHittersMonitorSink(_VersionedStateSink):
         ).orderBy(F.col("est").desc(), "item")
 
     def partial(self, batch_df: DataFrame):
-        from ..functions import text as TX
-
         part = (
             batch_df.select(
                 F.explode(TX.tokens(F.col("text"))).alias("item")
@@ -858,8 +866,6 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
         estimate column: n_state <= k => exact (the state is the
         whole distinct-hash set, hk NULL); n_state = k+1 => the
         (k-1) * 2^60 / h_k estimator with h_k = k-th smallest."""
-        from ..operators.sketches import KMV_HASH_RANGE
-
         s = self.state(spark)
         if s is None:
             return None
@@ -894,8 +900,6 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
         ``event_kmv_type_overlap`` sketch columns on the same streamed
         rows (e2e-tested) because the streamed state IS the batch
         bottom-(k+1) (the multiset-merge invariance)."""
-        from ..operators.sketches import kmv_pair_overlap
-
         s = self.state(spark)
         if s is None:
             return None
@@ -906,8 +910,6 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
         ).orderBy("key_a", "key_b")
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        from ..operators.sketches import kmv_hash
-
         hcol = self.id_col + "_h"
         hashed = (
             batch_df.select(self.key_col, self.id_col)
@@ -925,8 +927,6 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
         return self._bottom(part if prev is None else prev.unionByName(part))
 
     def _bottom(self, df: DataFrame) -> DataFrame:
-        from ..operators.sketches import bottom_k_values
-
         return bottom_k_values(
             df, self.key_col, self.id_col + "_h", self.k + 1
         )
@@ -970,21 +970,16 @@ class HllDistinctMonitorSink(_VersionedStateSink):
     state = _VersionedStateSink._state
 
     def _geometry_fields(self) -> dict:
-        from ..queries_events import HLL_M, _HLL_RANK_CAP
-
         # register maxima are comparable only under ONE (m, cap, salt):
         # a mismatched reopen would fold incomparable registers
         return {"m": HLL_M, "rank_cap": _HLL_RANK_CAP, "salt": self.salt}
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        from ..operators.sketches import kmv_hash
-        from ..queries_events import _hll_registers
-
         h = batch_df.select(
             F.col(self.key_col),
             kmv_hash(F.col(self.id_col), self.salt).alias("h"),
         )
-        # the SHARED register construction (queries_events._hll_registers)
+        # the SHARED register construction (operators.sketches._hll_registers)
         # — streamed registers are the batch query's bit-for-bit
         return _hll_registers(h, self.key_col)
 
@@ -997,8 +992,6 @@ class HllDistinctMonitorSink(_VersionedStateSink):
         n_empty_registers)`` — the batch query's estimate/arm
         arithmetic (the SHARED ``_hll_estimate_frame``), evaluated
         over the persisted register maxima."""
-        from ..queries_events import _hll_estimate_frame
-
         s = self.state(spark)
         if s is None:
             return None
@@ -1018,12 +1011,6 @@ class HllDistinctMonitorSink(_VersionedStateSink):
         buckets emit rows, identical to the batch query's day-set join
         (e2e-tested bit-equal on the same streamed rows). Returns
         ``(key, hll_estimate, n_empty_registers)``."""
-        from ..plans.layout import broadcast_if_small
-        from ..queries_events import (
-            _hll_estimate_frame,
-            trailing_window_explode,
-        )
-
         s = self.state(spark)
         if s is None:
             return None
@@ -1096,8 +1083,6 @@ class CmsFrequencyMonitorSink(_VersionedStateSink):
         arithmetic as the batch query (``cms_estimate``), so streamed
         estimates equal the batch query's bit-for-bit on the same
         data."""
-        from ..operators.sketches import cms_estimate
-
         s = self.sketch(universe.sparkSession)
         if s is None:
             return None
@@ -1106,9 +1091,6 @@ class CmsFrequencyMonitorSink(_VersionedStateSink):
         )
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        from ..functions import text as TX
-        from ..operators.sketches import cms_build
-
         items = batch_df.select(
             F.explode(TX.tokens(F.col("text"))).alias("item")
         )
@@ -1195,8 +1177,6 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         # rows differ on id — a .distinct() here would full-shuffle the
         # batch's widest frame every micro-batch for zero effect
         # (review finding, r7)
-        from ..functions import text as TX
-
         cols = [self.id_col] + (
             [self.source_col] if self.source_col else []
         )
@@ -1215,8 +1195,6 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         return self._compacted_slice_paths("bloom", include_seed=False)
 
     def _prior_bloom(self, spark: SparkSession) -> DataFrame | None:
-        from ..operators.sketches import bloom_dense_frame
-
         paths = self._bloom_paths()
         if not paths:
             return None
@@ -1320,8 +1298,6 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.sketches import bloom_probe, bloom_word_frame
-
         # reopening with a different m/k/shingle geometry would probe
         # old slices at the wrong positions — false NEGATIVES, i.e. the
         # one-sided contract INVERTED (over-reported novelty) — so the
@@ -1461,8 +1437,6 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
         """``(key, n_rows, n_sample, p50_est, p90_est, p99_est)`` — the
         batch query's sketch-arm arithmetic (same probed quantiles,
         same integer ceil-rank) over a sample and its row counts."""
-        from ..queries_events import _QSK_PS, _qsk_est_cols
-
         key = self.key_col
         agg = sample.groupBy(key).agg(
             F.array_sort(F.collect_list(self.val_col)).alias("__vals")
@@ -1503,10 +1477,6 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
         over the same observed-bucket set. Returns ``(key, n_rows,
         n_sample, p50_est, p90_est, p99_est)`` (e2e bit-equal to the
         batch sliding query's sketch columns)."""
-        from ..operators.sketches import bottom_k_rows
-        from ..plans.layout import broadcast_if_small
-        from ..queries_events import trailing_window_explode
-
         _, (s, n) = self._latest(spark, self._tables)
         if s is None:
             return None
@@ -1523,8 +1493,6 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
         )
 
     def partial(self, batch_df: DataFrame):
-        from ..operators.sketches import kmv_hash
-
         part = batch_df.select(
             self.key_col,
             kmv_hash(F.col(self.id_col), self.salt).alias("__h"),
@@ -1543,6 +1511,4 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
         return self._bottom(sample), _fold(prev_n, n, [self.key_col], "n_rows")
 
     def _bottom(self, df: DataFrame) -> DataFrame:
-        from ..operators.sketches import bottom_k_rows
-
         return bottom_k_rows(df, self.key_col, "__h", self.val_col, self.k)

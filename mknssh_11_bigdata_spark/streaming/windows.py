@@ -8,7 +8,9 @@ streaming use; on a static frame it is a no-op marker.
 Scale: windowed aggregation shuffles on (window, keys); watermarking
 bounds state size — without it a 100 TB stream's window state grows
 unboundedly. Session windows use Spark's native gap-merging state
-operator.
+operator. ``trailing_window_explode``/``trailing_window_spine`` are the
+trailing-day bucket merge that the sliding sketch queries and their
+monitor sinks share.
 """
 
 from __future__ import annotations
@@ -20,12 +22,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import NANOS_TS_COLUMNS, normalize_event_time
+
 __all__ = [
     "tumbling_agg",
     "sliding_agg",
     "hourly_tumbling_agg",
     "session_counts",
     "stream_from_parquet_events",
+    "trailing_window_explode",
+    "trailing_window_spine",
 ]
 
 
@@ -113,8 +119,6 @@ def stream_from_parquet_events(
     Handles the table's TIMESTAMP(NANOS) column the same way the batch
     reader does (sources/readers.py NANOS_TS_COLUMNS).
     """
-    from ..sources.readers import NANOS_TS_COLUMNS, normalize_event_time
-
     nanos_cols = NANOS_TS_COLUMNS.get(table, ())
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -134,3 +138,42 @@ def stream_from_parquet_events(
         .parquet(stage)
     )
     return normalize_event_time(stream, nanos_cols)
+
+
+def trailing_window_explode(
+    df: DataFrame, day_col: str, window: int, days: DataFrame
+) -> DataFrame:
+    """Explode each row to the ``window`` trailing target days it
+    contributes to, keeping only targets present in ``days`` (the
+    observed-bucket set, column ``day_col``) — the ONE windowing block
+    every sliding bucket-merge member shares (sliding HLL and
+    quantiles, their monitor views, the per-window audit arms, and
+    the n_days spine: 9 call sites, previously 9 inline copies).
+    Returns ``df``'s other columns keyed by the target day under the
+    same ``day_col`` name."""
+    other = [c for c in df.columns if c != day_col]
+    wday = F.explode(
+        F.sequence(
+            F.col(day_col), F.date_add(F.col(day_col), window - 1)
+        )
+    ).alias("__wday")
+    return (
+        df.select(wday, *other)
+        .join(days, F.col("__wday") == days[day_col])
+        .select(F.col("__wday").alias(day_col), *other)
+    )
+
+
+def trailing_window_spine(
+    days: DataFrame, day_col: str, window: int
+) -> DataFrame:
+    """``(day, n_days_in_window)`` — how many observed buckets each
+    trailing window actually merges (honest partial-head-window
+    accounting), via the same explode."""
+    return (
+        trailing_window_explode(
+            days.select(day_col), day_col, window, days
+        )
+        .groupBy(day_col)
+        .agg(F.count(F.lit(1)).cast("int").alias("n_days_in_window"))
+    )

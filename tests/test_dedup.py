@@ -937,7 +937,9 @@ def test_leakage_safe_split_components_never_straddle(spark):
     runs. The naive per-doc hash split demonstrably violates this on
     the same graph — asserted too, so the test proves the query adds
     a real property, not a vacuous one."""
-    from mknssh_11_bigdata_spark.pipelines.ml import deterministic_split
+    from mknssh_11_bigdata_spark.operators.relational import (
+        deterministic_split,
+    )
     from mknssh_11_bigdata_spark.queries_llm import (
         leakage_safe_split_assignments,
         minhash_pair_graph,
@@ -986,7 +988,9 @@ def test_semantic_leakage_split_components_never_straddle(spark):
     from mknssh_11_bigdata_spark.operators.dedup import (
         duplicate_components,
     )
-    from mknssh_11_bigdata_spark.pipelines.ml import deterministic_split
+    from mknssh_11_bigdata_spark.operators.relational import (
+        deterministic_split,
+    )
     from mknssh_11_bigdata_spark.queries_llm import srp_pair_graph
     from mknssh_11_bigdata_spark.sources.readers import load_table
 

@@ -692,7 +692,7 @@ def test_split_queries_carry_no_unconditional_component_broadcast():
         queries_curation,
         queries_llm,
     )
-    from mknssh_11_bigdata_spark.pipelines import ml
+    from mknssh_11_bigdata_spark.operators import dedup
 
     for fn in [
         queries_llm.leakage_safe_split_assignments,
@@ -702,11 +702,15 @@ def test_split_queries_carry_no_unconditional_component_broadcast():
         queries_curation.corpus_curation_pipeline,
         queries_curation.embedding_label_outliers,
         queries_analytics.dedup_component_label_consensus,
-        ml.leakage_safe_assignments,
+        dedup.leakage_safe_assignments,
+        dedup.component_groups,
     ]:
         src = inspect.getsource(fn)
         assert "F.broadcast(" not in src, fn.__name__
-        assert "broadcast_if_small(" in src, fn.__name__
+        # component_groups is the one guarded component-map join
+        assert "broadcast_if_small(" in src or "component_groups(" in src, (
+            fn.__name__
+        )
 
 
 def test_bloom_membership_probe_is_map_side(spark):

@@ -159,7 +159,9 @@ def test_deterministic_split_properties(spark):
     """Split must be a pure function of (salt, id): identical across
     runs and partitionings, all rows covered, salt changes the
     assignment, and rows keep their split when the table grows."""
-    from mknssh_11_bigdata_spark.pipelines.ml import deterministic_split
+    from mknssh_11_bigdata_spark.operators.relational import (
+        deterministic_split,
+    )
 
     df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
     a = deterministic_split(df, "doc_id")
@@ -198,14 +200,42 @@ def test_driver_window_registry_ordering():
     that would otherwise starve) fits the driver's ~50-row window.
     Fresh names (never seen by the driver) may overflow; they wait one
     round by construction."""
-    from mknssh_11_bigdata_spark.queries import (
-        QUERIES,
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    if str(root) not in sys.path:  # the driver shim lives at the repo root
+        sys.path.insert(0, str(root))
+    from __spark_entry__ import (
         _RECERTIFY,
         _driver_certified,
         _scan_correctness,
+        queries,
     )
 
-    names = list(QUERIES)
+    from mknssh_11_bigdata_spark.queries import QUERIES
+
+    # the driver order recorded before the ordering moved out of the
+    # library: md5 of the "\n"-joined queries() and oracle_sql() keys,
+    # taken the driver's way — a fresh process that imports the shim
+    # first (here, a test may have imported a queries_* module before
+    # queries.py, and registration order follows import order)
+    probe = (
+        "import hashlib, sys; sys.path.insert(0, sys.argv[1]); "
+        "import __spark_entry__ as e; "
+        "print(*(hashlib.md5('\\n'.join(keys).encode()).hexdigest() "
+        "for keys in (e.queries(), e.oracle_sql())))"
+    )
+    digest = subprocess.run(
+        [sys.executable, "-c", probe, str(root)],
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert digest == [
+        "b3b67f68b9777c57ca93c8fdebd9f095",
+        "f54cce653c2e9ff0a026f423784735c8",
+    ]
+    names = list(queries())
     recorded, certified = _scan_correctness()
     assert certified == _driver_certified()
     front = [n for n in names if n not in certified]
@@ -219,9 +249,6 @@ def test_driver_window_registry_ordering():
     assert front == pending + fresh  # pending band strictly first
     # recertify semantics: a name required to re-certify in a round for
     # which no CORRECTNESS record exists yet must sort into the front
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
     rounds = set()
     for p in root.glob("CORRECTNESS_r*.json"):
         import re

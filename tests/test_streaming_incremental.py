@@ -457,10 +457,9 @@ def test_compact_cadence_bounds_slice_count(spark, tmp_path):
         pinned = set(jsc.getPersistentRDDs().keys())
         auto(b, i)
         plain(b, i)
-        # each sink frees its own pins and compaction pins nothing; the
-        # one left per call is the operator's signature checkpoint
-        # behind its candidate checkpoint
-        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 2
+        # each sink frees its own pins, the status operator frees its
+        # signature checkpoint, and compaction pins nothing
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) == 0
         for name in ("corpus", "fp_index", "band_index"):
             dirs = [
                 p.name
@@ -495,7 +494,7 @@ def test_leakage_safe_split_sink_invariants(spark, tmp_path):
     must found ONE group (per-doc hashing here would straddle)."""
     from pyspark.sql import functions as F
 
-    from mknssh_11_bigdata_spark.pipelines.ml import (
+    from mknssh_11_bigdata_spark.operators.dedup import (
         leakage_safe_assignments,
     )
     from mknssh_11_bigdata_spark.streaming.incremental import (
@@ -655,7 +654,7 @@ def test_semantic_split_sink_contracts(spark, tmp_path):
     that match nothing in the corpus must found ONE group."""
     from pyspark.sql import functions as F
 
-    from mknssh_11_bigdata_spark.pipelines.ml import (
+    from mknssh_11_bigdata_spark.operators.dedup import (
         semantic_leakage_safe_assignments,
     )
     from mknssh_11_bigdata_spark.streaming.incremental import (
@@ -1017,9 +1016,9 @@ def test_bloom_prefiltered_embedding_sink_matches_parent(spark, tmp_path):
     jsc = spark.sparkContext._jsc
     pinned = set(jsc.getPersistentRDDs().keys())
     tiny(incs[0].localCheckpoint(eager=True), 0)
-    # the input's own checkpoint, plus the operator's signature pin
-    # behind its candidate checkpoint; the sink frees the rest
-    assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 2
+    # only the input's own checkpoint: the sink frees its pins and the
+    # operator its signature checkpoint
+    assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 1
     st0 = incremental_embedding_dedup_status(
         seed, incs[0], "vec_id", "embedding", **kw
     )

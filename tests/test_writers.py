@@ -18,6 +18,9 @@ from conftest import SF_SMOKE
 
 
 def test_write_parquet_partitioned_layout(spark, tmp_path):
+    # the memoized plan holds its session, so a live memo entry keeps
+    # the session alive and the id(spark) in its key is never reused
+    assert load_table(spark, SF_SMOKE, "orders").sparkSession is spark
     orders = load_table(spark, SF_SMOKE, "orders").withColumn(
         "year", F.year("o_orderdate")
     )
