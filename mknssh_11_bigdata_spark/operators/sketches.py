@@ -58,6 +58,7 @@ __all__ = [
     "KMV_HASH_RANGE",
     "cms_bucket_columns",
     "cms_build",
+    "cms_cells",
     "cms_estimate",
     "bottom_k_sample",
     "bottom_k_rows",
@@ -479,17 +480,29 @@ def cms_build(
     over disjoint batches merge by summing aligned cells — the
     mergeable-summaries property the streaming twin
     (``streaming/sinks.py CmsFrequencyMonitorSink``) rides."""
+    return (
+        cms_cells(items, item_col, depth, width, salt)
+        .groupBy("d", "bucket")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
+
+
+def cms_cells(
+    items: DataFrame, item_col: str, depth: int, width: int, salt: str
+) -> DataFrame:
+    """``(d, bucket, cnt = 1)`` per (item row, depth): each item's
+    counter increments, in the matrix's shape, before the additive
+    fold. :func:`cms_build` is this projection summed per cell; the
+    streaming twin sums it once over (previous matrix ∪ batch)."""
     if depth < 1 or width < 1:
         raise ValueError("depth and width must be >= 1")
-    pairs = items.select(
+    return items.select(
         F.posexplode(
             F.array(
                 *cms_bucket_columns(F.col(item_col), depth, width, salt)
             )
-        ).alias("d", "bucket")
-    )
-    return pairs.groupBy("d", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
+        ).alias("d", "bucket"),
+        F.lit(1).cast("long").alias("cnt"),
     )
 
 
@@ -711,20 +724,33 @@ _HLL_LC = tuple(
 )
 
 
-def _hll_registers(h: DataFrame, key: str) -> DataFrame:
-    """``(key, reg, mreg)`` register maxima from a ``(key, h)`` frame —
-    the Spark twin of ``queries_events._hll_reg_cte``'s r/m stages,
-    shared by the per-type and sliding-window HLL queries and the HLL
-    monitor sink so the register construction cannot drift."""
-    r = h.select(
+def _hll_ranks(h: DataFrame, key: str) -> DataFrame:
+    """``(key, reg, mreg)`` per ROW of a ``(key, h)`` frame: the
+    register each hash lands in and its rank — a one-row register value
+    that the MAX fold over rows turns into the register maxima. The
+    Spark twin of ``queries_events._hll_reg_cte``'s r stage; the HLL
+    monitor sink projects its batches with it and folds once, over
+    (previous state ∪ batch)."""
+    return h.select(
         key,
         (F.col("h") % HLL_M).alias("reg"),
         F.least(
             F.lit(55) - F.length(F.bin(F.expr(f"h DIV {HLL_M}"))),
             F.lit(_HLL_RANK_CAP),
-        ).alias("rank"),
+        ).alias("mreg"),
     )
-    return r.groupBy(key, "reg").agg(F.max("rank").alias("mreg"))
+
+
+def _hll_registers(h: DataFrame, key: str) -> DataFrame:
+    """``(key, reg, mreg)`` register maxima from a ``(key, h)`` frame —
+    :func:`_hll_ranks` folded under MAX (``_hll_reg_cte``'s r/m
+    stages), shared by the per-type and sliding-window HLL queries so
+    the register construction cannot drift from the monitor sink's."""
+    return (
+        _hll_ranks(h, key)
+        .groupBy(key, "reg")
+        .agg(F.max("mreg").alias("mreg"))
+    )
 
 
 def _hll_estimate_frame(m: DataFrame, key: str) -> DataFrame:

@@ -62,7 +62,10 @@ def run_pipeline(
     with_emb = add_title_embeddings(dataset, text_col="primaryTitle")
     write_parquet(with_emb, out_path)
 
-    pdf = add_label(spark.read.parquet(out_path)).toPandas()
+    # read back with the schema just written: no inference job
+    pdf = add_label(
+        spark.read.schema(with_emb.schema).parquet(out_path)
+    ).toPandas()
     # toPandas row order follows task completion order — nondeterministic
     # across runs. Everything downstream (positional index shuffle in
     # train_test_split, PCA summation) keys off row order, so pin it to

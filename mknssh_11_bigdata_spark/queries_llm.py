@@ -184,6 +184,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Schemas the persisted pair graphs are written with, declared so a
+#: read of the artifact runs no footer-inference job.
+MINHASH_PAIRS_SCHEMA = "id_a BIGINT, id_b BIGINT, jaccard DOUBLE"
+SRP_PAIRS_SCHEMA = "id_a BIGINT, id_b BIGINT, cosine DOUBLE"
+
+
 def minhash_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified near-dup pair graph as a PERSISTED artifact
     (id_a, id_b, jaccard), built once per source-corpus content and
@@ -230,7 +236,7 @@ def minhash_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             **LSH_CHAIN,
         ).write.mode("overwrite").parquet(str(path))
-    return spark.read.parquet(str(path))
+    return spark.read.schema(MINHASH_PAIRS_SCHEMA).parquet(str(path))
 
 
 #: Planted "re-crawl" id offset for the incremental-dedup query —
@@ -894,7 +900,7 @@ def srp_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands=None,
             max_bucket_size=LSH_MAX_BUCKET,
         ).write.mode("overwrite").parquet(str(path))
-    return spark.read.parquet(str(path))
+    return spark.read.schema(SRP_PAIRS_SCHEMA).parquet(str(path))
 
 
 # --- Fine-band SRP geometry over planted near-duplicates -------------------

@@ -44,19 +44,20 @@ from ..operators.relational import (
     zipf_drift_from_source_counts,
 )
 from ..operators.sketches import (
+    BLOOM_WORDS_SCHEMA,
     HLL_M,
     KMV_HASH_RANGE,
     _HLL_RANK_CAP,
     _QSK_PS,
     _hll_estimate_frame,
-    _hll_registers,
+    _hll_ranks,
     _qsk_est_cols,
     bloom_dense_frame,
     bloom_probe,
     bloom_word_frame,
     bottom_k_rows,
     bottom_k_values,
-    cms_build,
+    cms_cells,
     cms_estimate,
     kmv_hash,
     kmv_pair_overlap,
@@ -258,15 +259,12 @@ class IdempotentParquetSink(_CommitMarkerLedger):
 
 def _fold(prev, part: DataFrame, keys, *cols, agg=F.sum) -> DataFrame:
     """The additive merge (idempotent with ``agg=F.max``): ``agg`` of
-    each of ``cols`` per ``keys`` over ``prev ∪ part``. Before the first
-    commit the partial, already aggregated, is the state."""
-    if prev is None:
-        return part
-    return (
-        prev.unionByName(part)
-        .groupBy(*keys)
-        .agg(*[agg(c).alias(c) for c in cols])
-    )
+    each of ``cols`` per ``keys`` over ``prev ∪ part`` — the one
+    reduction of a call. ``part`` is the batch projected into the
+    state's shape, unreduced; before the first commit it is reduced
+    alone."""
+    rows = part if prev is None else prev.unionByName(part)
+    return rows.groupBy(*keys).agg(*[agg(c).alias(c) for c in cols])
 
 
 class _VersionedStateSink(_CommitMarkerLedger):
@@ -276,13 +274,20 @@ class _VersionedStateSink(_CommitMarkerLedger):
     tree.
     A subclass supplies only that algebra and its read views:
 
-    * ``partial(batch_df)`` — the batch's own partial state;
-    * ``merge(*prev, part)`` — the previous committed tables (in
-      ``_tables`` order, each None before the first commit) folded with
-      the partial into the new state.
+    * ``partial(batch_df)`` — the batch PROJECTED into the state's
+      shape (one state row per input row: a count of 1, a register
+      rank, a hash), with no reduction of its own;
+    * ``merge(*prev, part)`` — the ONE reduction of the call, over
+      ``prev ∪ part``: the previous committed tables (in ``_tables``
+      order, each None before the first commit) and the projection. It
+      runs before the first commit too, over the projection alone.
 
-    With sidecars, ``merge`` returns a tuple, one entry per table, for
-    ``_write``.
+    Because the state is a mergeable aggregate, re-reducing a reduced
+    state with fresh rows equals reducing the rows it came from:
+    reduce(prev ∪ reduce(batch)) = reduce(prev ∪ batch). So a call
+    shuffles once, and Spark's map-side partial aggregation still
+    shrinks the batch before that exchange. With sidecars, ``merge``
+    returns a tuple, one entry per table, for ``_write``.
 
     Everything else happens here, once:
 
@@ -303,7 +308,10 @@ class _VersionedStateSink(_CommitMarkerLedger):
       again. A marker is an empty file, noise next to the state pruned;
     * reads — :meth:`_latest` lists the markers once and reads every
       requested table at that ONE version, so a view spanning the state
-      and a sidecar never pairs two versions while a batch commits.
+      and a sidecar never pairs two versions while a batch commits. A
+      table this instance wrote is read with the schema it was written
+      with, so the read runs no footer-inference job; only a version
+      another instance wrote is inferred.
     """
 
     #: tables under the root: ``""`` is the state, the rest sidecars
@@ -312,9 +320,18 @@ class _VersionedStateSink(_CommitMarkerLedger):
     def __init__(self, root: str, keep_versions: int = 2):
         super().__init__(root)
         self.keep_versions = keep_versions
+        #: (table, version) -> schema of each table this instance wrote
+        self._schemas: dict = {}
 
     def _path(self, table: str, version: int) -> str:
         return f"{self.root}/{table + '/' if table else ''}v={version}"
+
+    def _read(
+        self, spark: SparkSession, table: str, version: int
+    ) -> DataFrame:
+        schema = self._schemas.get((table, version))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._path(table, version))
 
     def _latest(self, spark: SparkSession, tables=("",)):
         """``(version, [frame per table])`` at the newest committed
@@ -325,12 +342,11 @@ class _VersionedStateSink(_CommitMarkerLedger):
         if not committed:
             return None, [None] * len(tables)
         v = max(committed)
-        paths = [(t, self._path(t, v)) for t in tables]
         return v, [
-            spark.read.parquet(p)
-            if not t or pathlib.Path(p).exists()
+            self._read(spark, t, v)
+            if not t or pathlib.Path(self._path(t, v)).exists()
             else None
-            for t, p in paths
+            for t in tables
         ]
 
     def _state(self, spark: SparkSession) -> DataFrame | None:
@@ -349,14 +365,17 @@ class _VersionedStateSink(_CommitMarkerLedger):
     def _write(self, batch_id: int, state) -> None:
         frames = state if isinstance(state, tuple) else (state,)
         for t, df in zip(self._tables, frames):
-            (df.coalesce(1) if t else df).write.mode("overwrite").parquet(
-                self._path(t, batch_id)
-            )
+            self._write_table(t, batch_id, df.coalesce(1) if t else df)
+
+    def _write_table(self, table: str, version: int, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(self._path(table, version))
+        self._schemas[table, version] = df.schema
 
     def _prune(self) -> None:
         for old in sorted(self.committed_batches())[: -self.keep_versions]:
             for t in self._tables:
                 shutil.rmtree(self._path(t, old), ignore_errors=True)
+                self._schemas.pop((t, old), None)
 
 
 class LatestSnapshotSink(_VersionedStateSink):
@@ -545,17 +564,12 @@ class SourceQualityDriftSink(_VersionedStateSink):
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
         # the batch query's constant, so the twins can't drift
-        return (
-            batch_df.select(
-                "source",
-                (F.col("doc_id") % _DRIFT_SHARDS).alias("shard"),
-                TX.quality_score(F.col("text")).alias("q"),
-            )
-            .groupBy("source", "shard")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("q").alias("sq"),  # quarter-points: exact sum
-            )
+        return batch_df.select(
+            "source",
+            (F.col("doc_id") % _DRIFT_SHARDS).alias("shard"),
+            F.lit(1).cast("long").alias("n"),
+            # quarter-points: the sum is exact in any order
+            TX.quality_score(F.col("text")).alias("sq"),
         )
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
@@ -615,20 +629,16 @@ class ZipfSourceDriftSink(_VersionedStateSink):
         if self._drift_ckpt_version != version:
             if self._drift_ckpt is not None:
                 release_checkpoint(self._drift_ckpt)
-            self._drift_ckpt = spark.read.parquet(
-                self._path("", version)
-            ).localCheckpoint(eager=True)
+            counts = self._read(spark, "", version)
+            self._drift_ckpt = counts.localCheckpoint(eager=True)
             self._drift_ckpt_version = version
         return zipf_drift_from_source_counts(self._drift_ckpt)
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.select(
-                "source",
-                F.explode(TX.tokens(F.col("text"))).alias("token"),
-            )
-            .groupBy("source", "token")
-            .agg(F.count(F.lit(1)).cast("long").alias("f"))
+        return batch_df.select(
+            "source",
+            F.explode(TX.tokens(F.col("text"))).alias("token"),
+            F.lit(1).cast("long").alias("f"),
         )
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
@@ -665,12 +675,10 @@ class HourlyAnomalySink(_VersionedStateSink):
         return hourly_anomaly_from_counts(counts)
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.select(
-                "event_type", F.date_trunc("hour", "ts").alias("hour_ts")
-            )
-            .groupBy("event_type", "hour_ts")
-            .agg(F.count(F.lit(1)).alias("n_events"))
+        return batch_df.select(
+            "event_type",
+            F.date_trunc("hour", "ts").alias("hour_ts"),
+            F.lit(1).cast("long").alias("n_events"),
         )
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
@@ -684,11 +692,12 @@ class HeavyHittersMonitorSink(_VersionedStateSink):
     a crawl pipeline keeps running without ever materializing the full
     (item, count) table.
 
-    Per batch: exact batch token counts merge additively into the
-    summary, then the mergeable-summaries MERGE truncation (subtract
-    the (capacity+1)-th largest counter, drop non-positives — Agarwal
-    et al., the same step ``operators/sketches.misra_gries_candidates``
-    applies per Arrow batch). Error composes additively across batches:
+    Per batch: the batch's tokens count additively into the summary
+    (one sum over summary ∪ token rows), then the mergeable-summaries
+    MERGE truncation (subtract the (capacity+1)-th largest counter,
+    drop non-positives — Agarwal et al., the same step
+    ``operators/sketches.misra_gries_candidates`` applies per Arrow
+    batch). Error composes additively across batches:
     total undercount <= sum_b n_b/(capacity+1) = n/(capacity+1), so
     after ANY number of micro-batches every item with true stream count
     > n/(capacity+1) is present with
@@ -754,14 +763,11 @@ class HeavyHittersMonitorSink(_VersionedStateSink):
         ).orderBy(F.col("est").desc(), "item")
 
     def partial(self, batch_df: DataFrame):
-        part = (
-            batch_df.select(
-                F.explode(TX.tokens(F.col("text"))).alias("item")
-            )
-            .groupBy("item")
-            .agg(F.count(F.lit(1)).cast("long").alias("est"))
+        items = batch_df.select(
+            F.explode(TX.tokens(F.col("text"))).alias("item"),
+            F.lit(1).cast("long").alias("est"),
         )
-        return part, part.agg(F.sum("est").cast("long")).collect()[0][0] or 0
+        return items, items.count()
 
     def merge(self, prev: DataFrame | None, side: DataFrame | None, part):
         counts, batch_n = part
@@ -793,12 +799,10 @@ class HeavyHittersMonitorSink(_VersionedStateSink):
         else:
             final = merged
         n = F.lit(n_now).cast("long").alias("n_total")
-        final.select("*", n).write.mode("overwrite").parquet(
-            self._path("", batch_id)
+        self._write_table("", batch_id, final.select("*", n))
+        self._write_table(
+            "n", batch_id, merged.sparkSession.range(1).select(n).coalesce(1)
         )
-        merged.sparkSession.range(1).select(n).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self._path("n", batch_id))
         release_checkpoint(merged)
 
 
@@ -812,11 +816,11 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
     seen so far (``operators/sketches.kmv_hash`` — the same expression
     the batch query evaluates, so streamed h_k IS the batch h_k
     bit-for-bit). Bottom-(k+1) over distinct hashes is an associative,
-    commutative set merge — the mergeable-sketch property — so each
-    batch contributes its own bottom-(k+1)
+    commutative set merge — the mergeable-sketch property — so one
+    bottom-(k+1) over (state ∪ the batch's hashes)
     (:func:`operators.sketches.bottom_k_values`, the partial-agg form,
-    never a window) and the union re-reduces with the same operator;
-    batch arrival order cannot change the state.
+    never a window) is the bottom-(k+1) of every hash seen; batch
+    arrival order cannot change the state.
 
     Why k+1 and not k: the batch query switches arms at n_exact <= k
     (exact count) vs > k (estimator). A k-slot state cannot tell
@@ -910,25 +914,23 @@ class KmvDistinctMonitorSink(_VersionedStateSink):
         ).orderBy("key_a", "key_b")
 
     def partial(self, batch_df: DataFrame) -> DataFrame:
-        hcol = self.id_col + "_h"
-        hashed = (
-            batch_df.select(self.key_col, self.id_col)
-            .distinct()
-            .select(
-                self.key_col,
-                kmv_hash(F.col(self.id_col), self.salt).alias(hcol),
-            )
+        # no distinct() pre-shuffle: bottom_k_values keeps DISTINCT
+        # hashes, so repeated ids collapse inside the one reduction
+        return batch_df.select(
+            self.key_col,
+            kmv_hash(F.col(self.id_col), self.salt).alias(
+                self.id_col + "_h"
+            ),
         )
-        return self._bottom(hashed)
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
-        # state re-reduces with the same bottom-(k+1) operator it was
-        # built with; (key x (k+1))-sized, so this merge is sliver work
-        return self._bottom(part if prev is None else prev.unionByName(part))
-
-    def _bottom(self, df: DataFrame) -> DataFrame:
+        # the committed state is (key x (k+1))-sized: it joins the
+        # batch's hashes in one bottom-(k+1) reduction
         return bottom_k_values(
-            df, self.key_col, self.id_col + "_h", self.k + 1
+            part if prev is None else prev.unionByName(part),
+            self.key_col,
+            self.id_col + "_h",
+            self.k + 1,
         )
 
 
@@ -938,11 +940,11 @@ class HllDistinctMonitorSink(_VersionedStateSink):
     register maxima per key — beside ``KmvDistinctMonitorSink`` this is
     the second cardinality monitor, and the one whose per-batch work
     needs NO distinct() pre-shuffle: registers fold under plain MAX, so
-    each micro-batch contributes its own (key, reg, mreg) maxima
-    (map-side partial agg, geometry-sized exchange) and the persisted
-    state re-reduces with the same MAX — associative, commutative,
-    idempotent, the strongest merge in the monitor family (even
-    re-delivered ROWS, not just replayed batches, cannot corrupt it).
+    each micro-batch's per-row register ranks fold with the persisted
+    state in one MAX (map-side partial agg, geometry-sized exchange) —
+    associative, commutative, idempotent, the strongest merge in the
+    monitor family (even re-delivered ROWS, not just replayed batches,
+    cannot corrupt it).
 
     :meth:`estimates` reproduces the batch query's arithmetic exactly —
     same integer harmonic fold, same one-division estimator literal,
@@ -979,12 +981,13 @@ class HllDistinctMonitorSink(_VersionedStateSink):
             F.col(self.key_col),
             kmv_hash(F.col(self.id_col), self.salt).alias("h"),
         )
-        # the SHARED register construction (operators.sketches._hll_registers)
-        # — streamed registers are the batch query's bit-for-bit
-        return _hll_registers(h, self.key_col)
+        # the SHARED per-row rank projection (operators.sketches
+        # ._hll_ranks) that the batch query's _hll_registers folds —
+        # streamed registers are the batch query's bit-for-bit
+        return _hll_ranks(h, self.key_col)
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
-        # (keys x 64)-sized — sliver work
+        # the register MAX fold over (keys x 64 state ∪ batch ranks)
         return _fold(prev, part, [self.key_col, "reg"], "mreg", agg=F.max)
 
     def estimates(self, spark: SparkSession) -> DataFrame | None:
@@ -1035,12 +1038,13 @@ class CmsFrequencyMonitorSink(_VersionedStateSink):
     table.
 
     Counters are plain additive counts, so the merge is the simplest
-    in the monitor family: per batch, build the batch's own sketch
-    (``operators/sketches.cms_build`` — the same bucket hashes the
-    batch query evaluates) and SUM aligned cells into the persisted
-    matrix. No truncation step, no error growth across batches: the
-    streamed sketch is bit-for-bit the sketch of the concatenated
-    stream (e2e-tested against the batch query), and the Count-Min
+    in the monitor family: per batch, project the batch's counter
+    increments (``operators/sketches.cms_cells`` — the same bucket
+    hashes the batch query's ``cms_build`` sums) and SUM them with the
+    persisted matrix's aligned cells. No truncation step, no error
+    growth across batches: the streamed sketch is bit-for-bit the
+    sketch of the concatenated stream (e2e-tested against the batch
+    query), and the Count-Min
     guarantee (estimate >= true count, one-sided) holds at every
     prefix.
 
@@ -1094,10 +1098,10 @@ class CmsFrequencyMonitorSink(_VersionedStateSink):
         items = batch_df.select(
             F.explode(TX.tokens(F.col("text"))).alias("item")
         )
-        return cms_build(items, "item", self.depth, self.width, self.salt)
+        return cms_cells(items, "item", self.depth, self.width, self.salt)
 
     def merge(self, prev: DataFrame | None, part: DataFrame) -> DataFrame:
-        # geometry-sized (<= depth x width rows) — sliver work
+        # map-side partial sums leave <= depth x width rows a partition
         return _fold(prev, part, ["d", "bucket"], "cnt")
 
 
@@ -1198,7 +1202,8 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         paths = self._bloom_paths()
         if not paths:
             return None
-        return bloom_dense_frame(spark.read.parquet(*paths), self.m_bits)
+        words = spark.read.schema(BLOOM_WORDS_SCHEMA).parquet(*paths)
+        return bloom_dense_frame(words, self.m_bits)
 
     def compact(self, spark: SparkSession) -> int:
         """Fold every committed bitmap slice into ONE consolidated
@@ -1220,7 +1225,8 @@ class NoveltyMonitorSink(_CommitMarkerLedger):
         if prev_epoch == epoch:
             return epoch
         folded = (
-            spark.read.parquet(*self._bloom_paths())
+            spark.read.schema(BLOOM_WORDS_SCHEMA)
+            .parquet(*self._bloom_paths())
             .groupBy("__word")
             .agg(F.expr("bit_or(__bits)").alias("__bits"))
             .localCheckpoint(eager=True)  # pin before any overwrite
@@ -1374,10 +1380,10 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
     plus one additive row-count sidecar (``n/v=<batchId>``, the
     HeavyHitters discipline: a count must survive independently of the
     sample rows). Bottom-k over row multisets is an associative,
-    commutative merge, so each micro-batch contributes its own
-    bottom-k and the union re-reduces with the same operator — batch
-    arrival order cannot change the state, and the streamed sample IS
-    the batch query's sample bit-for-bit on the same rows
+    commutative merge, so one bottom-k over (state ∪ the batch's rows)
+    is the sample of everything seen — batch arrival order cannot
+    change the state, and the streamed sample IS the batch query's
+    sample bit-for-bit on the same rows
     (e2e-tested: estimates equal ``event_value_quantile_sketch``'s
     sketch-arm columns exactly).
 
@@ -1493,22 +1499,21 @@ class QuantileSketchMonitorSink(_VersionedStateSink):
         )
 
     def partial(self, batch_df: DataFrame):
-        part = batch_df.select(
+        return batch_df.select(
             self.key_col,
             kmv_hash(F.col(self.id_col), self.salt).alias("__h"),
             F.col(self.val_col),
-        )
-        return self._bottom(part), part.groupBy(self.key_col).agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows")
+        ), batch_df.select(
+            self.key_col, F.lit(1).cast("long").alias("n_rows")
         )
 
     def merge(self, prev: DataFrame | None, prev_n: DataFrame | None, part):
-        # state re-reduces with the same bottom-k operator it was
-        # built with; (key x k)-sized, so this merge is sliver work
-        sample, n = part
+        # the (key x k)-sized sample joins the batch rows in one
+        # bottom-k reduction; n sums once over (prev_n ∪ batch ones)
+        rows, n = part
         if prev is not None:
-            sample = prev.unionByName(sample)
-        return self._bottom(sample), _fold(prev_n, n, [self.key_col], "n_rows")
-
-    def _bottom(self, df: DataFrame) -> DataFrame:
-        return bottom_k_rows(df, self.key_col, "__h", self.val_col, self.k)
+            rows = prev.unionByName(rows)
+        return (
+            bottom_k_rows(rows, self.key_col, "__h", self.val_col, self.k),
+            _fold(prev_n, n, [self.key_col], "n_rows"),
+        )

@@ -692,6 +692,30 @@ def test_minhash_pair_graph_artifact_semantics(spark, tmp_path):
         shutil.rmtree(p, ignore_errors=True)
 
 
+def test_pair_graph_declared_schemas_match_the_artifacts(spark):
+    """The persisted pair graphs are read with DECLARED schemas, so the
+    read runs no footer-inference job. Each declared schema must equal
+    the one in the artifact's files, or a change to the chain's output
+    types would be read back wrongly without anyone noticing."""
+    from mknssh_11_bigdata_spark.queries_llm import (
+        MINHASH_PAIRS_SCHEMA,
+        SRP_PAIRS_SCHEMA,
+        minhash_pair_graph,
+        srp_pair_graph,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    for graph, declared in (
+        (minhash_pair_graph, MINHASH_PAIRS_SCHEMA),
+        (srp_pair_graph, SRP_PAIRS_SCHEMA),
+    ):
+        files = graph(spark, sf).inputFiles()
+        assert (
+            spark.read.schema(declared).parquet(*files).schema
+            == spark.read.parquet(*files).schema
+        )
+
+
 def test_hash_family_digest_keys_the_artifact(monkeypatch):
     """ADVICE r3: the pair-graph cache key must change when the
     code-level hash-family constants change (seed stream, modulus,

@@ -333,6 +333,53 @@ def test_drift_sink_pruned_batch_replay_still_drops(spark, tmp_path, name):
     assert {tuple(r) for r in read(spark).collect()} == before
 
 
+#: sink -> (constructor args, Spark jobs its second call may launch)
+_JOBS_PER_CALL = {
+    # the write
+    "IdempotentParquetSink": ((), 1),
+    # the rank-1 window's exchange, the write
+    "LatestSnapshotSink": ((["user_id"], ["ts", "event_id"]), 2),
+    # the register MAX's exchange, the write
+    "HllDistinctMonitorSink": ((), 2),
+    # bottom_k_values' two exchanges, the write
+    "KmvDistinctMonitorSink": ((), 3),
+    # bottom_k_rows' two exchanges, the n sum's one, two writes
+    "QuantileSketchMonitorSink": ((), 5),
+}
+
+
+def test_sink_calls_launch_only_the_jobs_their_result_needs(spark, tmp_path):
+    """One reduction per call, and state reads that carry their schema:
+    on a second batch each sink launches no more jobs than its one
+    reduction and its writes need; reading the state it just wrote
+    launches none (no footer inference); and a fresh instance that
+    reopens the root, and so infers the schema, reads the same state."""
+    from collections import Counter
+
+    from mknssh_11_bigdata_spark.streaming import sinks as S
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    events = load_table(spark, SF_SMOKE, "events")
+    for name, (args, most) in _JOBS_PER_CALL.items():
+        cls = getattr(S, name)
+        sink = cls(str(tmp_path / name), *args)
+        sink(events.filter("event_id % 2 = 0"), 0)
+        j0 = sched.nextJobId()
+        sink(events.filter("event_id % 2 = 1"), 1)
+        assert sched.nextJobId() - j0 <= most, name
+        if not isinstance(sink, S._VersionedStateSink):
+            continue
+        j0 = sched.nextJobId()
+        _, mine = sink._latest(spark, sink._tables)
+        assert sched.nextJobId() - j0 == 0, name
+        _, theirs = cls(sink.root, *args)._latest(spark, sink._tables)
+        for a, b in zip(mine, theirs):
+            assert a.schema == b.schema, name
+            assert Counter(map(tuple, a.collect())) == Counter(
+                map(tuple, b.collect())
+            ), name
+
+
 def test_two_table_views_read_one_version(spark, tmp_path, monkeypatch):
     """A view over the state AND its count sidecar must read both at
     ONE committed version. The race is simulated: the marker listing
