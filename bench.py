@@ -15,8 +15,13 @@ headline number:
 Execution is measured with the ``noop`` sink (full plan runs, nothing is
 collected to the driver) so numbers reflect engine work, not Arrow
 transfer. One untimed full sweep (after the page-cache warm scan)
-absorbs per-query codegen/first-run cost before the timed reps, so
-medians aren't skewed by cold samples (VERDICT r2 #7).
+absorbs per-query first-run cost (JIT, plan caches) before the timed
+reps, so medians aren't skewed by cold samples (VERDICT r2 #7). It does
+not absorb codegen: a sweep generates ~2.5k distinct sources (2516 at
+sf0.001), ten times what the session's code cache holds
+(``session.CODEGEN_CACHE_ENTRIES``), so every timed sweep recompiles
+nearly all of them (3404 compiles in a warm sweep, 3443 in the cold
+one; BASELINE.md).
 """
 
 from __future__ import annotations
@@ -91,8 +96,10 @@ def main() -> int:
 
     load_before = _loadavg()
     samples: dict[str, list[float]] = {name: [] for name in bench_queries}
-    # Sweep 0 is the untimed warmup (codegen + any first-run plan cost);
-    # sweeps 1..reps are recorded. Skippable for quick local iteration.
+    # Sweep 0 is the untimed warmup (first-run plan cost; not codegen,
+    # whose working set here outgrows the code cache — see the module
+    # docstring); sweeps 1..reps are recorded. Skippable for quick
+    # local iteration.
     warmup = os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
     from mknssh_11_bigdata_spark.session import release_checkpoints
 

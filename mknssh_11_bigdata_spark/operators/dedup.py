@@ -803,6 +803,7 @@ def embedding_near_dup_pairs(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    release_checkpoint(sigs)  # read only by the materialized `cands`
     return embedding_cosine_pairs(
         df, id_col, vec_col, threshold, candidates=cands
     )
@@ -947,7 +948,9 @@ def duplicate_components(
     # post-round review finding; the round-bound tests pin the
     # distributed arm and deserve the arm they asked for).
     if 0 < limit and prev_n <= limit:
-        return _driver_components(edges, _stats)
+        comp = _driver_components(edges, _stats)
+        release_checkpoint(edges)  # collected: the labels are local rows
+        return comp
     converged = False
     rounds = 0
     for rounds in range(1, max_iters + 1):
@@ -962,6 +965,8 @@ def duplicate_components(
             n == prev_n
             and new_edges.exceptAll(edges).limit(1).count() == 0
         )
+        # superseded: the materialized round no longer reads it
+        release_checkpoint(edges)
         edges = new_edges
         prev_n = n
         if converged:
@@ -1064,6 +1069,7 @@ def minhash_dedup_pairs(
     cands = lsh_candidate_pairs(
         sigs, id_col, bands, rows, max_bucket_size=max_bucket_size
     ).localCheckpoint(eager=True)
+    release_checkpoint(sigs)  # read only by the materialized `cands`
     return jaccard_pairs(
         df, id_col, text_col, shingle_n, threshold, candidates=cands
     )

@@ -28,6 +28,14 @@ ROCKSDB_STATE_CONF = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
 )
 
+#: Entries in Spark's compiled-code cache (Spark's default is 100).
+#: Measured distinct sources per pass (tools/codegen_passes.py): 159 for
+#: a small_jobs bench pass, 89 for an imdb_pipeline pass, so both fit
+#: with room for the cache's uneven split over its 4 segments. A full
+#: registry sweep (bench.py) generates 2516 at sf0.001 and does not fit;
+#: sizing for it waits on a peak-RSS measurement (BASELINE.md).
+CODEGEN_CACHE_ENTRIES = 256
+
 
 def get_spark(
     app_name: str = "mknssh11-spark",
@@ -91,6 +99,23 @@ def get_spark(
         # Don't let tiny files create thousands of tasks at small SF, and
         # keep partitions <= 128MB at large SF (the default); both matter.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Reuse compiled code across passes that run the same plan
+        # shapes (sink micro-batches, repeated pipeline calls). Spark
+        # keeps compiled classes in a cache keyed by the generated
+        # source, 100 entries by default; a small_jobs bench pass
+        # generates 159 distinct sources, so each was evicted before its
+        # next use and every warm pass recompiled 177 of them (1.0-1.2 s).
+        # CODEGEN_CACHE_ENTRIES holds that working set. The cache is a
+        # static conf: builder-only.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers codegen stages as it re-plans, differently from
+        # pass to pass, and the number was part of the generated class
+        # name, so the same stage produced a new source (and a cache
+        # miss) on each pass. Without it the source depends on the plan
+        # alone; the stage id stays in the source's `codegenStageId`
+        # comment. Trade-off: JVM profiler frames read
+        # `GeneratedIterator`, not `GeneratedIteratorForCodegenStage<N>`.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if master.startswith("local"):
         # In local mode all "executor" threads share ONE driver JVM heap;

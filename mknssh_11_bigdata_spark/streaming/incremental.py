@@ -42,6 +42,7 @@ import pathlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.text import fingerprint
 from ..operators.dedup import (
@@ -104,6 +105,28 @@ class _SliceIngestSink(_CommitMarkerLedger):
         super().__init__(root)
         self.id_col = id_col
         self._cols = (id_col, value_col)
+        #: slice dir -> schema of the frame this instance wrote there,
+        #: every column nullable, as a Parquet read gives it back
+        self._schemas: dict = {}
+
+    def _write_slice(self, df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
+        self._schemas[path] = StructType(
+            [StructField(f.name, f.dataType) for f in df.schema]
+        )
+
+    def _read_slices(self, spark: SparkSession, paths, **options) -> DataFrame:
+        """``paths`` read with the schema this instance wrote to every
+        one of them, so no job infers it from a footer. A path written
+        by another instance, or slices written with differing schemas,
+        leave the schema to inference."""
+        schema = self._schemas.get(paths[0])
+        reader = spark.read.options(**options)
+        if schema is not None and all(
+            self._schemas.get(p) == schema for p in paths
+        ):
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
 
     def _arm_compaction(self, compact_every: int | None) -> None:
         if compact_every is not None and compact_every < 1:
@@ -119,7 +142,7 @@ class _SliceIngestSink(_CommitMarkerLedger):
 
     def _write_slices(self, docs: DataFrame, batch_id: int) -> None:
         path = f"{self.root}/corpus/batch_id={batch_id}"
-        docs.write.mode("overwrite").parquet(path)
+        self._write_slice(docs, path)
         # the index slices read the corpus slice back: nothing is pinned
         # for the two writes, and the schema is known (no footer job)
         self._write_index_slices(
@@ -167,9 +190,7 @@ class _SliceIngestSink(_CommitMarkerLedger):
             pins.append(routing)
             status = routing.localCheckpoint(eager=True)  # ledger AND filter
             pins.append(status)
-            status.write.mode("overwrite").parquet(
-                f"{self.root}/status/batch_id={batch_id}"
-            )
+            self._write_slice(status, f"{self.root}/status/batch_id={batch_id}")
             self._write_slices(
                 inc.join(
                     status.filter("status = 'new'").select(self.id_col),
@@ -212,7 +233,7 @@ class _SliceIngestSink(_CommitMarkerLedger):
     def _index(self, spark: SparkSession, name: str) -> DataFrame:
         # leaf dirs read WITHOUT basePath: no partition-column
         # inference, so batch_id= and compacted_v= dirs mix freely
-        return spark.read.parquet(*self._slices(name))
+        return self._read_slices(spark, self._slices(name))
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         """The accumulated deduped corpus: seed + committed survivors,
@@ -232,7 +253,7 @@ class _SliceIngestSink(_CommitMarkerLedger):
                 f"{base} yet — statuses() is only meaningful after at "
                 "least one micro-batch commits."
             )
-        return spark.read.option("basePath", base).parquet(*paths)
+        return self._read_slices(spark, paths, basePath=base)
 
     def compact(self, spark: SparkSession) -> int:
         """Fold the seed + every committed slice of each ``_TABLES``
@@ -270,10 +291,14 @@ class _SliceIngestSink(_CommitMarkerLedger):
             # Nothing to fold: no-op.
             return epoch
         for name in self._TABLES:
-            self._index(spark, name).write.mode("overwrite").parquet(
-                f"{self.root}/{name}/compacted_v={epoch}"
+            self._write_slice(
+                self._index(spark, name),
+                f"{self.root}/{name}/compacted_v={epoch}",
             )
         self._finish_compaction(epoch, prev_epoch, self._TABLES)
+        self._schemas = {
+            p: v for p, v in self._schemas.items() if pathlib.Path(p).exists()
+        }
         return epoch
 
 
@@ -374,9 +399,7 @@ class IndexedIncrementalDedupCorpusSink(IncrementalDedupCorpusSink):
         )
         written = {"fp_index": fp, "band_index": band}
         for name, df in written.items():
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/{name}/batch_id={batch_id}"
-            )
+            self._write_slice(df, f"{self.root}/{name}/batch_id={batch_id}")
         return written
 
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:
@@ -434,16 +457,15 @@ class _BloomPrefilter:
         """Bitmap slice ``name`` of ``item`` over slice ``batch_id`` of
         ``table``, just written from ``index``: read back with that
         frame's schema, so no job infers it from the footers."""
-        bloom_word_frame(
+        words = bloom_word_frame(
             index.sparkSession.read.schema(index.schema)
             .parquet(f"{self.root}/{table}/batch_id={batch_id}")
             .select(item.alias("item")),
             "item",
             self.bloom_m_bits,
             self.bloom_k,
-        ).write.mode("overwrite").parquet(
-            f"{self.root}/{name}/batch_id={batch_id}"
         )
+        self._write_slice(words, f"{self.root}/{name}/batch_id={batch_id}")
 
     def _bloom_probe(
         self, df: DataFrame, col: str, name: str, index: str, out: str
@@ -651,8 +673,8 @@ class _SplitLedger:
 
     def seed(self, corpus: DataFrame) -> None:
         super().seed(corpus)
-        self._slice_assignments(corpus).write.mode("overwrite").parquet(
-            f"{self.root}/splits/batch_id=-1"
+        self._write_slice(
+            self._slice_assignments(corpus), f"{self.root}/splits/batch_id=-1"
         )
 
     def assignments(self, spark: SparkSession) -> DataFrame:
@@ -669,7 +691,7 @@ class _SplitLedger:
                 f"{type(self).__name__} has no split slices under "
                 f"{base}: call seed() before starting the stream."
             )
-        return spark.read.parquet(*present)
+        return self._read_slices(spark, present)
 
     def _post_route(
         self,
@@ -709,9 +731,7 @@ class _SplitLedger:
         out = inherited.select(self.id_col, "group_id", "split").unionByName(
             fresh
         )
-        out.write.mode("overwrite").parquet(
-            f"{self.root}/splits/batch_id={batch_id}"
-        )
+        self._write_slice(out, f"{self.root}/splits/batch_id={batch_id}")
         return out
 
 
@@ -793,9 +813,7 @@ class IncrementalEmbeddingDedupSink(_SliceIngestSink):
             n_bits=self.n_bits,
             bands=self.bands,
         )
-        band.write.mode("overwrite").parquet(
-            f"{self.root}/band_index/batch_id={batch_id}"
-        )
+        self._write_slice(band, f"{self.root}/band_index/batch_id={batch_id}")
         return {"band_index": band}
 
     def _status(self, spark: SparkSession, inc: DataFrame) -> DataFrame:

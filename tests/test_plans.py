@@ -881,3 +881,49 @@ def test_sliding_quantiles_merges_day_samples_not_rescans(spark):
     plan = _plan(spark, "event_value_sliding_quantiles")
     assert plan.count("events.parquet") <= 2, plan
     assert "CartesianProduct" not in plan
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM: every cache miss of Spark's
+    compiled-code cache, whole-stage and expression code alike."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_round_of_many_plans_compiles_nothing(spark):
+    """A second run of the same plan shapes reuses their compiled code,
+    also when one round has more distinct sources than Spark's default
+    100-entry cache holds (it evicted each source before its next use,
+    and a small_jobs bench pass recompiled 177 of them). Each plan here
+    compiles two sources, 120 in all."""
+    plans = [spark.range(8).selectExpr(f"id * {i} + 7919 AS x")
+             for i in range(2, 62)]
+    for df in plans:
+        _noop(df)
+    c0 = _compiles(spark)
+    for df in plans:
+        _noop(df)
+    assert _compiles(spark) - c0 == 0
+
+
+def test_same_stage_under_another_codegen_id_compiles_once(spark):
+    """A stage's source must not depend on the codegen stage id the
+    plan gives it: the same aggregate, planned on its own (ids from 1)
+    and then as a union's second branch (ids after the first branch's),
+    compiles once."""
+    from pyspark.sql import functions as F
+
+    def agg(mod):
+        return (spark.range(64).groupBy((F.col("id") % mod).alias("k"))
+                .agg(F.sum("id").alias("s")))
+
+    first, second = agg(7877), agg(7879)
+    _noop(first)
+    _noop(second)
+    c0 = _compiles(spark)
+    _noop(first.unionByName(second))
+    assert _compiles(spark) - c0 == 0

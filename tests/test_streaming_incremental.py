@@ -517,8 +517,15 @@ def test_leakage_safe_split_sink_invariants(spark, tmp_path):
     sink = LeakageSafeSplitDedupSink(str(tmp_path / "out"))
     sink.seed(seed)
     snapshots = []
+    jsc = spark.sparkContext._jsc
     for i, b in enumerate(incs):
+        pinned = set(jsc.getPersistentRDDs().keys())
         sink(b, i)
+        # left pinned per batch: the LSH candidates, and the component
+        # maps behind the split's checkpointed group map (5 while
+        # duplicate_components kept its edges and minhash_dedup_pairs
+        # its signatures)
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 3
         snapshots.append(
             {r["doc_id"]: (r["group_id"], r["split"])
              for r in sink.assignments(spark).collect()}
@@ -691,8 +698,14 @@ def test_semantic_split_sink_contracts(spark, tmp_path):
     )
     sink.seed(seed)
     snapshots = []
+    jsc = spark.sparkContext._jsc
     for i, b in enumerate(incs):
+        pinned = set(jsc.getPersistentRDDs().keys())
         sink(b, i)
+        # left pinned per batch: the SRP candidates only (3 while
+        # duplicate_components kept its edges and the pair search its
+        # signatures)
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 1
         snapshots.append(
             {r["vec_id"]: (r["group_id"], r["split"])
              for r in sink.assignments(spark).collect()}

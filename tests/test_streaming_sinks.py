@@ -353,7 +353,8 @@ def test_sink_calls_launch_only_the_jobs_their_result_needs(spark, tmp_path):
     on a second batch each sink launches no more jobs than its one
     reduction and its writes need; reading the state it just wrote
     launches none (no footer inference); and a fresh instance that
-    reopens the root, and so infers the schema, reads the same state."""
+    reopens the root, and so infers the schema, reads the same state.
+    The same holds for the incremental dedup sinks' slice reads."""
     from collections import Counter
 
     from mknssh_11_bigdata_spark.streaming import sinks as S
@@ -378,6 +379,35 @@ def test_sink_calls_launch_only_the_jobs_their_result_needs(spark, tmp_path):
             assert Counter(map(tuple, a.collect())) == Counter(
                 map(tuple, b.collect())
             ), name
+
+    # the incremental slice ledger: every committed-slice read of the
+    # instance that wrote the slices carries their schema too
+    from mknssh_11_bigdata_spark.streaming.incremental import (
+        LeakageSafeSplitDedupSink,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    split = LeakageSafeSplitDedupSink(str(tmp_path / "split"))
+    split.seed(docs.filter("doc_id < 60"))
+    split(docs.filter("doc_id >= 60 AND doc_id < 90"), 0)
+
+    def slice_reads(sink):
+        return [
+            sink.corpus(spark),
+            sink._index(spark, "fp_index"),
+            sink._index(spark, "band_index"),
+            sink.statuses(spark),
+            sink.assignments(spark),
+        ]
+
+    j0 = sched.nextJobId()
+    mine = slice_reads(split)
+    assert sched.nextJobId() - j0 == 0
+    for a, b in zip(mine, slice_reads(LeakageSafeSplitDedupSink(split.root))):
+        assert a.schema == b.schema
+        assert Counter(map(tuple, a.collect())) == Counter(
+            map(tuple, b.collect())
+        )
 
 
 def test_two_table_views_read_one_version(spark, tmp_path, monkeypatch):

@@ -1,10 +1,14 @@
 """Per-query profile: driver-side construction time (incl. fit actions)
 vs noop-sink execution time, plus job counts. Usage:
     python tools/query_profile.py name1 name2 ... [--sf DIR]
-Prints one line per query: name construct_s exec_s jobs — a true median
-of 3 recorded passes after one warmup pass (ADVICE r8: 2 recorded
-samples made sorted[n//2] the MAX); jobs columns are from the first
-recorded pass only (job counts are deterministic per query shape)."""
+Prints one line per query: name construct_s exec_s jobs compiles — a
+true median of 3 recorded passes after one warmup pass (ADVICE r8: 2
+recorded samples made sorted[n//2] the MAX); the jobs and compiles
+columns are from the first recorded pass only (job counts are
+deterministic per query shape). ``compiles`` counts the Janino compiles
+of that warm pass, construction and execution together: a query whose
+warm pass still compiles pays again for code its first pass compiled
+(evicted from the code cache, or generated as a different source)."""
 import os, sys, time
 
 sys.path.insert(0, "/root/repo")
@@ -20,6 +24,7 @@ for a in sys.argv[1:]:
 
 spark = get_spark(app_name="query-profile")
 sc = spark.sparkContext
+codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
 from mknssh_11_bigdata_spark.sources.readers import TESTDATA_TABLES, load_table
 for t in TESTDATA_TABLES:
     load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
@@ -27,6 +32,7 @@ for t in TESTDATA_TABLES:
 def one(name):
     spec = QUERIES[name]
     release_checkpoints(spark)
+    c0 = codegen.METRIC_COMPILATION_TIME().getCount()
     j0 = sc._jsc.sc().dagScheduler().nextJobId()
     t0 = time.perf_counter()
     df = spec.spark(spark, sf_dir)
@@ -35,7 +41,8 @@ def one(name):
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
     j2 = sc._jsc.sc().dagScheduler().nextJobId()
-    return t1 - t0, t2 - t1, j1 - j0, j2 - j1
+    c = codegen.METRIC_COMPILATION_TIME().getCount() - c0
+    return t1 - t0, t2 - t1, j1 - j0, j2 - j1, c
 
 results = {}
 for sweep in range(4):  # 1 warmup + 3 recorded: odd count => true median
@@ -46,5 +53,5 @@ for sweep in range(4):  # 1 warmup + 3 recorded: odd count => true median
 for name, rs in results.items():
     c = sorted(x[0] for x in rs)[len(rs)//2]
     e = sorted(x[1] for x in rs)[len(rs)//2]
-    print(f"{name:42s} construct={c:6.2f}s exec={e:6.2f}s jobs_c={rs[0][2]:3d} jobs_e={rs[0][3]:3d}")
+    print(f"{name:42s} construct={c:6.2f}s exec={e:6.2f}s jobs_c={rs[0][2]:3d} jobs_e={rs[0][3]:3d} compiles={rs[0][4]:3d}")
 spark.stop()
