@@ -1267,6 +1267,9 @@ def near_dup_components(
         rep_comp = duplicate_components(rep_pairs).select(
             F.col("doc_id").alias("rep_id"), F.col("component").alias("__rc")
         )
+        # the edges are materialized or collected: free the LSH
+        # candidates and shingle counts the pair frame reads lazily
+        release_checkpoint(rep_pairs, keep=df)
     finally:
         reps.unpersist()
     # rep_comp is bounded by the near-dup graph over distinct texts —
@@ -1972,6 +1975,8 @@ def leakage_safe_assignments(
     seed corpora and micro-batches in the incremental split sink."""
     comp = near_dup_components(docs, id_col, text_col, **dedup_kwargs)
     g = component_groups(docs, id_col, comp).drop("is_dup_member")
+    # component_groups checkpointed its own copy of the map
+    release_checkpoint(comp, keep=docs)
     return deterministic_split(g, "group_id", splits=splits, salt=salt)
 
 
@@ -1998,5 +2003,9 @@ def semantic_leakage_safe_assignments(
         vecs.select(id_col, vec_col), id_col, vec_col, dim, **dedup_kwargs
     )
     comp = duplicate_components(pairs)
+    # the edges are materialized or collected: free the SRP candidates
+    release_checkpoint(pairs, keep=vecs)
     g = component_groups(vecs, id_col, comp).drop("is_dup_member")
+    # component_groups checkpointed its own copy of the map
+    release_checkpoint(comp, keep=vecs)
     return deterministic_split(g, "group_id", splits=splits, salt=salt)

@@ -1,34 +1,13 @@
-"""Similarity search over embedding columns (``array<float>``).
-
-North-star extension (BASELINE.json): approximate-nearest-neighbor over
-an embedding column. Two strategies behind one output contract
-``(query_id, rank, neighbor_id, cosine)``:
-
-* ``brute_force_topk`` — exact: broadcast the query set, score every
-  corpus row, rank per query. Linear in corpus size; the right baseline
-  and the correctness oracle for recall tests.
-* ``ivf_topk`` — IVF-style: deterministically pick centroids, assign
-  corpus rows to their nearest centroid (one broadcast pass), probe only
-  the ``n_probe`` nearest cells per query. Scan cost drops to
-  ~n_probe/n_centroids of the corpus — the 100 TB path (a real system
-  would k-means the centroids; deterministic pick keeps tests stable and
-  the plumbing identical).
-
-All math is JVM-side (``zip_with``/``aggregate`` fold in doubles,
-left-to-right — deterministic and oracle-reproducible). No UDFs.
-"""
+"""ANN over embedding columns, one home per stage: fit :func:`_lloyd`,
+elect :func:`_min_id_centroids`, assign :func:`nearest_centroid_expr`,
+probe :func:`_probed`, int8 :func:`int8_quantized` +
+:func:`_int8_topk`, PQ :func:`pq_encode` + :func:`_adc_topk`, numpy
+:func:`cosine_matrix`, rank :func:`_ranked`."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-)
 from pyspark.sql.window import Window
 
 from ..functions.vectors import (
@@ -58,6 +37,24 @@ __all__ = [
 ]
 
 
+def _centroid_sims(
+    vec: F.Column, cents: list[tuple[int, list[float]]]
+) -> tuple[F.Column, list[int]]:
+    """Rounded-6 cosines of ``vec`` against a literal centroid model, as
+    one array in centroid-id order, plus those ids.
+
+    The model is driver-side (k × dim floats — model-sized, like any
+    broadcast ML model) and goes in as ONE parsed-SQL literal (a single
+    Py4J call): even F.lit(matrix) costs one driver round-trip per
+    ELEMENT (~0.4 s per 8x64 model — measured r8). Sims round to 6
+    digits (repo float policy), so the SQL oracles reproduce every
+    compare bit-for-bit."""
+    ordered = sorted(cents, key=lambda t: t[0])
+    mat = lit_double_matrix([[float(x) for x in cv] for _, cv in ordered])
+    sims = F.transform(mat, lambda c: F.round(cosine_similarity(vec, c), 6))
+    return sims, [int(cid) for cid, _ in ordered]
+
+
 def nearest_centroid_expr(
     vec: F.Column,
     cents: list[tuple[int, list[float]]],
@@ -66,51 +63,101 @@ def nearest_centroid_expr(
     """Argmax-cosine centroid id as a single PROJECTION over a literal
     centroid table — the scan-shaped assignment plan.
 
-    The centroid model is driver-side (k × dim floats — model-sized by
-    construction, like any broadcast ML model), so assignment needs no
-    join at all: per row, evaluate the k rounded cosines and take the
-    max via lexicographic ``array_max`` over ``(sim, -centroid_id)``
-    structs — identical values and tie-break (toward the smaller id) to
-    the previous ``crossJoin + groupBy(max_by(struct(sim, -cid)))``
-    form, which shuffled the ENTIRE corpus (vectors included) through a
-    hash aggregate just to pick each row's best centroid. At 100 TB the
-    corpus-side shuffle is the difference between a map-only stage and
-    moving the whole embedding payload across the cluster.
-
-    Sims are rounded to 6 digits first (repo float policy), so the SQL
-    oracles reproduce the argmax bit-for-bit. ``id_type`` pins the
-    returned id's type to what the caller's schema contract expects
+    Per row, evaluate the k rounded cosines and take the first max —
+    identical values and tie-break (toward the smaller id) to the
+    previous ``crossJoin + groupBy(max_by(struct(sim, -cid)))`` form,
+    which shuffled the ENTIRE corpus (vectors included) through a hash
+    aggregate just to pick each row's best centroid. ``id_type`` pins
+    the returned id's type to what the caller's schema contract expects
     (``int`` for dense 0..k-1 model ids, ``long`` for corpus-row ids).
     """
-    ordered = sorted(cents, key=lambda t: t[0])
-    ids = [int(cid) for cid, _ in ordered]
-    matrix = [[float(x) for x in cvec] for _, cvec in ordered]
-    # ONE parsed-SQL literal (a single Py4J call): even F.lit(matrix)
-    # costs one driver round-trip per ELEMENT (~0.4 s per 8x64 model —
-    # measured r8), which dominated every literal-model query's wall.
-    mat = lit_double_matrix(matrix)
-    sims = F.transform(mat, lambda c: F.round(cosine_similarity(vec, c), 6))
-    # First occurrence of the max = smallest position; with centroids
-    # sorted by id, that reproduces max_by(struct(sim, -cid))'s
-    # smaller-id tie-break exactly. A zero-norm vector yields all-NULL
-    # sims (cosine's denom guard), so array_max/array_position are NULL
-    # — coalesce to position 1 (the smallest centroid id), which is what
-    # the max_by form, the numpy argmax-over--inf arm, and the oracles'
-    # ORDER BY cos DESC NULLS LAST, cid ASC all resolve to.
+    sims, ids = _centroid_sims(vec, cents)
+    # First occurrence of the max = smallest position = smallest id. A
+    # zero-norm vector yields all-NULL sims (cosine's denom guard), so
+    # array_max/array_position are NULL — coalesce to position 1 (the
+    # smallest centroid id), which is what the numpy argmax-over--inf
+    # arm and the oracles' ORDER BY cos DESC NULLS LAST, cid ASC all
+    # resolve to.
     pos = F.coalesce(
         F.array_position(sims, F.array_max(sims)).cast("int"), F.lit(1)
     )
     return F.element_at(lit_int_array(ids), pos).cast(id_type)
 
 
-def _ranked(scored: DataFrame, k: int) -> DataFrame:
+def _probed(
+    q: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    n_probe: int,
+    cell: str,
+) -> DataFrame:
+    """``q`` exploded to one row per probed cell, its id in ``cell``:
+    the ``n_probe`` cells nearest the query vector ``__qv`` by rounded-6
+    cosine desc, ties toward the smaller id — a literal ``array_sort``
+    over ``(-sim, cid)`` structs, so probing is a map-only projection
+    over the query scan (no window Exchange, no broadcast build).
+
+    A NULL cosine (zero-norm query or centroid) coalesces to +Inf so
+    the degenerate cell sorts LAST, as ``ORDER BY sim DESC`` (NULLS
+    LAST) does: struct comparison orders a NULL field FIRST, which would
+    burn probe slots on empty cells."""
+    sims, ids = _centroid_sims(F.col("__qv"), cents)
+    keyed = F.zip_with(
+        sims,
+        lit_int_array(ids),
+        lambda s, i: F.struct(
+            F.coalesce(-s, F.lit(float("inf"))).alias("neg"),
+            i.alias("cid"),
+        ),
+    )
+    cells = F.slice(F.array_sort(keyed), 1, n_probe)
+    return q.select("*", F.explode(cells).alias("__pc")).select(
+        *q.columns, F.col("__pc.cid").alias(cell)
+    )
+
+
+def _min_id_centroids(
+    df: DataFrame, id_col: str, vec_col: str, n: int
+) -> list[tuple[int, list[float]]]:
+    """The ``n`` smallest-id vectors of ``df`` as ``[(id, vec)]`` — the
+    deterministic IVF centroid model, in ONE collect (k rows). The model
+    then serves assignment and probing as literals; float→double
+    widening through collect is exact, so the literals reproduce an
+    in-plan cast bit-for-bit."""
+    # Renamed after the limit, as written: collecting a bare
+    # select(id, vec) of the corpus frame instead made the first IVF
+    # plan built on it (after a warm scan of the memoized table) fail
+    # with a probe-side filter inferred over the corpus vector
+    # (PySpark 4.1.2, embedding_topk_ivf at sf0.1).
+    rows = (
+        df.select(F.col(id_col), F.col(vec_col))
+        .orderBy(F.col(id_col).asc())
+        .limit(n)
+        .select(
+            F.col(id_col).alias("centroid_id"),
+            F.col(vec_col).alias("__cent"),
+        )
+        .collect()
+    )
+    return [(r["centroid_id"], list(r["__cent"])) for r in rows]
+
+
+def _ranked(
+    scored: DataFrame,
+    k: int,
+    score: str = "cosine",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Top ``k`` per query by ``score`` desc, ties toward the smaller
+    neighbor id; a query never matches itself. Output
+    ``(query_id, rank, neighbor_id, *carry, score)``."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(score).desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+        .select("query_id", "rank", "neighbor_id", *carry, score)
     )
 
 
@@ -120,9 +167,9 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k: score = cosine(query, corpus) for every pair.
+    """Exact cosine top-k: score = cosine(query, corpus) for every pair —
+    the baseline and the correctness oracle for recall tests.
 
     ``queries`` is broadcast (query sets are small by construction); the
     corpus is scanned once with no shuffle until the per-query ranking,
@@ -141,9 +188,101 @@ def brute_force_topk(
         "cosine",
         F.round(cosine_similarity(F.col("__qv"), F.col("__cv")), 6),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     return _ranked(scored, k)
+
+
+def _lloyd(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    spaces: list[tuple[slice, int]],
+    iters: int,
+    sample_mod: int = 1,
+) -> list[list[list[float]]]:
+    """Deterministic batched Lloyd k-means: every ``(slice, k)`` space —
+    a slice of the vector, or the whole vector for ``slice(None)`` —
+    fitted with its own ``k`` in ONE job per iteration plus ONE init
+    collect. Returns each space's centroids (k lists, index = id).
+
+    Determinism contract (what makes this oracle-reproducible, unlike
+    MLlib's randomized KMeans): init = the ``k`` smallest-id vectors (a
+    space's init rows are slices of the SAME rows, so one collect serves
+    every space); a FIXED number of iterations (no convergence test);
+    assignment by cosine rounded to 6 digits with smaller-centroid-id
+    tie-break; new centroids = per-(space, cluster, dim) means rounded
+    to 9 digits (so Spark's partial-agg summation order and any other
+    engine's agree); empty clusters keep their previous centroid.
+
+    Per iteration the fit input is scanned once and exploded to
+    (space, cid, dim, x) rows, then one partial-agg shuffle produces
+    every space's means; only k×dim means cross the driver — model-
+    sized, like any distributed ML fit. At 100 TB fit on a
+    deterministic slice via ``sample_mod`` (keep row iff
+    ``id % sample_mod == 0``); assignment quality needs a sample, not
+    the corpus."""
+    fit = corpus.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    )
+    if sample_mod > 1:
+        fit = fit.filter(F.col(id_col) % sample_mod == 0)
+    # The per-iteration assignment is a heavy per-row expression
+    # (argmax trees of interpreted HOF cosines) over a COMPACT input — a
+    # one-file scan leaves every evaluation on one core; spread() fixes
+    # exactly this shape (no-op once the scan yields >= cores splits).
+    # Consumed once per iteration plus init: checkpoint so the
+    # scan+cast+shuffle runs once (lazy — the init collect materializes
+    # it, saving a separate job).
+    fit = spread(fit).localCheckpoint(eager=False)
+    n_init = max(k for _, k in spaces)
+    init = fit.orderBy(F.col(id_col).asc()).limit(n_init).collect()
+    vecs = [list(r["__v"]) for r in init]
+    model = [[v[sl] for v in vecs[:k]] for sl, k in spaces]
+
+    def part(sl: slice) -> F.Column:
+        if sl.start is None:
+            return F.col("__v")
+        return F.slice(F.col("__v"), sl.start + 1, sl.stop - sl.start)
+
+    for _ in range(iters):
+        structs = [
+            F.struct(
+                nearest_centroid_expr(
+                    part(sl), list(enumerate(cents)), id_type="int"
+                ).alias("cid"),
+                part(sl).alias("sv"),
+            )
+            for (sl, _), cents in zip(spaces, model)
+        ]
+        # Three selects on purpose: the assignment structs materialize
+        # in their own projection before each posexplode (a generator
+        # sharing a select with the argmax struct trips Catalyst's
+        # generator extraction, which renames the struct's fields).
+        means = (
+            fit.select(F.array(*structs).alias("__spaces"))
+            .select(F.posexplode("__spaces").alias("space", "__x"))
+            .select(
+                "space",
+                F.col("__x.cid").alias("cid"),
+                F.posexplode("__x.sv").alias("dim", "x"),
+            )
+            .groupBy("space", "cid", "dim")
+            .agg(F.round(F.avg("x"), 9).alias("m"))
+            .collect()
+        )
+        by_space: dict[int, dict[int, dict[int, float]]] = {}
+        for r in means:
+            by_space.setdefault(r["space"], {}).setdefault(
+                r["cid"], {}
+            )[r["dim"]] = r["m"]
+        for s, (_, k) in enumerate(spaces):
+            got = by_space.get(s, {})
+            model[s] = [
+                [got[i][d] for d in sorted(got[i])]
+                if i in got
+                else model[s][i]
+                for i in range(k)
+            ]
+    return model
 
 
 def kmeans_centroids(
@@ -153,79 +292,21 @@ def kmeans_centroids(
     n_centroids: int = 16,
     iters: int = 2,
     sample_mod: int = 1,
-    round_to: int = 9,
 ) -> DataFrame:
-    """Deterministic Lloyd k-means fit over the embedding column →
-    ``(centroid_id, __cent)`` DataFrame consumable by :func:`ivf_topk`.
-
-    Determinism contract (what makes this oracle-reproducible, unlike
-    MLlib's randomized KMeans): init = the ``n_centroids`` smallest-id
-    vectors; a FIXED number of iterations (no convergence test);
-    assignment by cosine rounded to 6 digits with smaller-centroid-id
-    tie-break; new centroids = per-dimension means rounded to
-    ``round_to`` digits (so Spark's partial-agg summation order and any
-    other engine's agree); empty clusters keep their previous centroid.
-
-    Scale: each iteration is one broadcast-literal assignment pass +
-    one (cid, dim) partial-agg shuffle; only k×dim means cross the
-    driver per iteration — model-sized, like any distributed ML fit.
-    At 100 TB fit on a deterministic slice via ``sample_mod`` (keep row
-    iff ``id % sample_mod == 0``); assignment quality needs a sample,
-    not the corpus.
-    """
-    spark = corpus.sparkSession
-    fit = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    """Deterministic Lloyd k-means fit over the whole embedding →
+    ``(centroid_id, __cent)`` DataFrame consumable by :func:`ivf_topk`;
+    the single-space case of :func:`_lloyd` (its determinism contract)."""
+    [cents] = _lloyd(
+        corpus,
+        id_col,
+        vec_col,
+        [(slice(None), n_centroids)],
+        iters,
+        sample_mod,
     )
-    if sample_mod > 1:
-        fit = fit.filter(F.col(id_col) % sample_mod == 0)
-    # Spread before the heavy per-row assignment expression: a compact
-    # one-file fit input otherwise evaluates every interpreted-HOF
-    # argmax on one core (see _pq_fit; no-op at real scale).
-    fit = spread(fit)
-    # The fit frame is consumed once for init and once per Lloyd
-    # iteration; checkpoint so the scan+cast+shuffle runs once (lazy —
-    # the init collect below materializes it, saving a separate job).
-    # At 100 TB the fit input is the sample_mod slice — sized to be
-    # materializable.
-    fit = fit.localCheckpoint(eager=False)
-    schema = StructType(
-        [
-            StructField("centroid_id", IntegerType()),
-            StructField("__cent", ArrayType(DoubleType())),
-        ]
+    return corpus.sparkSession.createDataFrame(
+        list(enumerate(cents)), "centroid_id int, __cent array<double>"
     )
-    init = fit.orderBy(F.col(id_col).asc()).limit(n_centroids).collect()
-    cents: list[list[float]] = [list(r["__v"]) for r in init]
-    for _ in range(iters):
-        # Assignment is a PROJECTION against the literal centroid model
-        # (nearest_centroid_expr) — each Lloyd iteration is exactly one
-        # job: map-side argmax + one (cid, dim) partial-agg shuffle.
-        # (The previous crossJoin + groupBy(id) form ran three shuffles
-        # per iteration and moved every fit vector through a hash agg.)
-        cid = nearest_centroid_expr(
-            F.col("__v"), list(enumerate(cents)), id_type="int"
-        )
-        # (cid is computed in its own projection: a generator in the
-        # same select forces Catalyst's generator extraction, which
-        # renames the argmax struct's fields before resolution.)
-        means = (
-            fit.withColumn("cid", cid)
-            .select("cid", F.posexplode("__v").alias("dim", "x"))
-            .groupBy("cid", "dim")
-            .agg(F.round(F.avg("x"), round_to).alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(r["cid"], {})[r["dim"]] = r["m"]
-        cents = [
-            [by_cid[i][d] for d in sorted(by_cid[i])]
-            if i in by_cid
-            else cents[i]
-            for i in range(n_centroids)
-        ]
-    return spark.createDataFrame(list(enumerate(cents)), schema)
 
 
 def ivf_topk(
@@ -236,7 +317,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    exclude_self: bool = True,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-bucketed approximate top-k.
@@ -244,45 +324,26 @@ def ivf_topk(
     1. centroids := ``centroids`` if given (``(centroid_id, __cent)``,
        e.g. from :func:`kmeans_centroids`), else the ``n_centroids``
        corpus vectors with the smallest ids (deterministic stand-in —
-       same plan either way).
-    2. corpus rows → nearest centroid (broadcast centroids, row_number).
-    3. queries → ``n_probe`` nearest centroids.
+       same plan either way). One collect serves both consumers below.
+    2. corpus rows → nearest centroid (map-only literal projection).
+    3. queries → ``n_probe`` nearest cells (:func:`_probed`).
     4. score only corpus rows in probed cells; rank per query.
 
     Probing fraction n_probe/n_centroids bounds the scan. Recall is
     tested against ``brute_force_topk`` (tests/test_similarity.py).
     """
-    # The centroid model is collected ONCE (k rows — model-sized) and
-    # serves both consumers — corpus assignment AND query probing — as
-    # literal matrices. One action total; float→double widening through
-    # collect is exact, so the literals reproduce the in-plan cast
-    # bit-for-bit.
     if centroids is not None:
-        cent_rows = centroids.collect()
+        cent_model = [
+            (r["centroid_id"], list(r["__cent"]))
+            for r in centroids.collect()
+        ]
     else:
-        cent_rows = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("__cent"),
-            )
-            .collect()
-        )
-    cent_model = [
-        (r["centroid_id"], list(r["__cent"])) for r in cent_rows
-    ]
+        cent_model = _min_id_centroids(corpus, id_col, vec_col, n_centroids)
     c = spread(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
         )
     )
-    # Corpus assignment is a map-only projection against the literal
-    # centroid model. Ties break toward the smaller centroid id
-    # (matching the probe order). The previous crossJoin + groupBy form
-    # shuffled every corpus VECTOR through a hash agg just to label it
-    # with a cell id.
     assigned = c.select(
         "neighbor_id",
         "__cv",
@@ -293,55 +354,41 @@ def ivf_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
-    # Probe = top n_probe cells by (rounded cosine desc, id asc), as a
-    # literal array_sort + slice + explode over the SAME centroid model
-    # the assignment uses — ``ivf_pq_topk``'s probe shape (r8 "not yet"
-    # list). The previous crossJoin(broadcast(cent)) + row_number form
-    # paid a window Exchange on query_id plus a driver-built broadcast
-    # frame; this one is a map-only projection over the query scan —
-    # one fewer Exchange, no broadcast build. Values are identical:
-    # rounded-6 cosine, ties toward the smaller centroid id (the
-    # (-sim, cid) struct sort ≡ ORDER BY sim DESC, cid ASC). A NULL
-    # cosine (zero-norm query or centroid) coalesces to +Inf so the
-    # degenerate cell sorts LAST — struct comparison orders a NULL
-    # field FIRST, which would otherwise invert the window form's
-    # `desc()` NULLS-LAST and burn probe slots on empty cells
-    # (post-round review finding; no certified dataset hits it).
-    ordered = sorted(cent_model, key=lambda t: t[0])
-    cent_mat = lit_double_matrix([list(cv) for _, cv in ordered])
-    cent_ids = lit_int_array([cid for cid, _ in ordered])
-    sims = F.transform(
-        cent_mat,
-        lambda cv: F.round(cosine_similarity(F.col("__qv"), cv), 6),
-    )
-    ranked_cells = F.slice(
-        F.array_sort(
-            F.zip_with(
-                sims,
-                cent_ids,
-                lambda s_, i: F.struct(
-                    F.coalesce(-s_, F.lit(float("inf"))).alias("neg"),
-                    i.alias("cid"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    probed = q.select(
-        "query_id",
-        "__qv",
-        F.explode(ranked_cells).alias("__pc"),
-    ).select(
-        "query_id", "__qv", F.col("__pc.cid").alias("centroid_id")
-    )
+    probed = _probed(q, cent_model, n_probe, "centroid_id")
     scored = assigned.join(probed, "centroid_id").withColumn(
         "cosine",
         F.round(cosine_similarity(F.col("__qv"), F.col("__cv")), 6),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     return _ranked(scored, k)
+
+
+def int8_quantized(df: DataFrame, vec_col: str) -> DataFrame:
+    """``df`` plus the vector's max-abs ``__amax`` and its int8 codes
+    ``__q`` (``functions.vectors.quantize_int8``); zero vectors
+    (amax == 0) are unquantizable and dropped, mirrored by the oracles."""
+    return (
+        df.withColumn("__amax", max_abs(F.col(vec_col)))
+        .filter(F.col("__amax") > 0)
+        .withColumn("__q", quantize_int8(F.col(vec_col), F.col("__amax")))
+    )
+
+
+def _int8_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Rank ``(query_id, __qq, neighbor_id, __nq)`` int8 pairs by the
+    quantized cosine: ``qdot`` is an EXACT int64 dot and
+    ``qcos = qdot / (|q| · |n|)`` rounded to 6 (norms also integer, so
+    the only float ops are two sqrts and one divide — bit-reproducible
+    cross-engine). Output ``(query_id, rank, neighbor_id, qdot, qcos)``."""
+    qq, nq = F.col("__qq"), F.col("__nq")
+    scored = pairs.withColumn("qdot", int_dot(qq, nq)).withColumn(
+        "qcos",
+        F.round(
+            F.col("qdot")
+            / (F.sqrt(int_dot(qq, qq)) * F.sqrt(int_dot(nq, nq))),
+            6,
+        ),
+    )
+    return _ranked(scored, k, "qcos", ("qdot",))
 
 
 def quantized_topk(
@@ -350,17 +397,13 @@ def quantized_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Int8-quantized cosine top-k — the bandwidth/storage scale path.
 
-    Symmetric per-vector max-abs quantization (``functions.vectors.
-    quantize_int8``) shrinks a float32 embedding 4x; candidate scoring
-    is then an EXACT int64 dot product, ranked by the quantized cosine
-    ``qdot / (|q| · |n|)`` (norms also integer, so the only float ops
-    are two sqrts and one divide — bit-reproducible cross-engine).
-
-    Output: ``(query_id, rank, neighbor_id, qdot, qcos)``.
+    Symmetric per-vector max-abs quantization (:func:`int8_quantized`)
+    shrinks a float32 embedding 4x; candidates are ranked by
+    :func:`_int8_topk`. Output: ``(query_id, rank, neighbor_id, qdot,
+    qcos)``.
 
     Why it matters at 100 TB: a 1e9-vector corpus of 768-dim float32 is
     ~3 TB of embedding payload per scan; int8 cuts the scan (and every
@@ -368,49 +411,17 @@ def quantized_topk(
     multiply-adds vectorize wider than float on every CPU. Plan shape
     is identical to ``brute_force_topk``: broadcast the (quantized)
     query set, scan-score the corpus, per-query ranking moves only
-    scored rows. Zero vectors (amax == 0) are unquantizable and are
-    dropped from both sides, mirrored by the oracle.
+    scored rows.
     """
-    def q8(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        amax = max_abs(F.col(vec_col))
-        return (
-            df.withColumn("__amax", amax)
-            .filter(F.col("__amax") > 0)
-            .select(
-                F.col(id_col).alias(out_id),
-                quantize_int8(F.col(vec_col), F.col("__amax")).alias(
-                    out_vec
-                ),
-            )
-        )
-
-    q = q8(queries, "query_id", "__qv")
-    c = spread(q8(corpus, "neighbor_id", "__nv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("qdot", int_dot(F.col("__qv"), F.col("__nv")))
-        .withColumn(
-            "qcos",
-            F.round(
-                F.col("qdot")
-                / (
-                    F.sqrt(int_dot(F.col("__qv"), F.col("__qv")))
-                    * F.sqrt(int_dot(F.col("__nv"), F.col("__nv")))
-                ),
-                6,
-            ),
+    q = int8_quantized(queries, vec_col).select(
+        F.col(id_col).alias("query_id"), F.col("__q").alias("__qq")
+    )
+    c = spread(
+        int8_quantized(corpus, vec_col).select(
+            F.col(id_col).alias("neighbor_id"), F.col("__q").alias("__nq")
         )
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "qdot", "qcos")
-    )
+    return _int8_topk(c.crossJoin(F.broadcast(q)), k)
 
 
 def ivf_int8_topk(
@@ -421,100 +432,44 @@ def ivf_int8_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """The production ANN composition: IVF cell pruning + int8 scoring.
 
     Cell assignment and probing use FLOAT cosine against the (min-id)
     centroids — centroid geometry should not inherit quantization
-    error — while candidate scoring inside the probed cells is the
-    exact-int64 quantized dot of :func:`quantized_topk`. Scan cost is
-    bounded by n_probe/n_centroids AND every scanned vector is 4x
-    smaller: the two levers compose. Unquantizable (zero) vectors are
-    dropped from corpus, queries, and centroid election alike, so the
-    deterministic contract (and the SQL oracle) is unchanged.
+    error — with :func:`ivf_topk`'s map-only assignment and probe, while
+    candidate scoring inside the probed cells is the exact-int64
+    quantized dot of :func:`quantized_topk`. Scan cost is bounded by
+    n_probe/n_centroids AND every scanned vector is 4x smaller: the two
+    levers compose. Unquantizable (zero) vectors are dropped from
+    corpus, queries, and centroid election alike, so the deterministic
+    contract (and the SQL oracle) is unchanged.
 
     Output: ``(query_id, rank, neighbor_id, qdot, qcos)``.
     """
-    def q8(df: DataFrame, out_id: str) -> DataFrame:
-        amax = max_abs(F.col(vec_col))
-        return (
-            df.withColumn("__amax", amax)
-            .filter(F.col("__amax") > 0)
-            .select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).cast("array<double>").alias("__v"),
-                quantize_int8(F.col(vec_col), F.col("__amax")).alias(
-                    "__q"
-                ),
-            )
+    nonzero = int8_quantized(corpus, vec_col)
+    cent_model = _min_id_centroids(nonzero, id_col, vec_col, n_centroids)
+    c = spread(
+        nonzero.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).cast("array<double>").alias("__v"),
+            F.col("__q").alias("__nq"),
         )
-
-    # Same single-collect centroid model as ivf_topk: one action feeds
-    # the literal assignment matrix AND the driver-built probe frame.
-    cent_rows = (
-        q8(corpus, "centroid_id")
-        .orderBy(F.col("centroid_id").asc())
-        .limit(n_centroids)
-        .select("centroid_id", F.col("__v").alias("__cent"))
-        .collect()
     )
-    cent_model = [
-        (r["centroid_id"], list(r["__cent"])) for r in cent_rows
-    ]
-    cent = corpus.sparkSession.createDataFrame(
-        cent_model, "centroid_id long, __cent array<double>"
-    )
-    c = spread(q8(corpus, "neighbor_id"))
-    # Map-only cell assignment against the literal centroid model —
-    # same scan-shaped plan as ivf_topk: the quantized corpus payload
-    # never shuffles for labeling.
     assigned = c.select(
         "neighbor_id",
-        F.col("__q").alias("__nq"),
+        "__nq",
         nearest_centroid_expr(
             F.col("__v"), cent_model, id_type="long"
         ).alias("centroid_id"),
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__qsim").desc(), F.col("centroid_id").asc()
+    q = int8_quantized(queries, vec_col).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        F.col("__q").alias("__qq"),
     )
-    probed = (
-        q8(queries, "query_id")
-        .crossJoin(F.broadcast(cent))
-        .withColumn(
-            "__qsim",
-            F.round(cosine_similarity(F.col("__v"), F.col("__cent")), 6),
-        )
-        .withColumn("__rn", F.row_number().over(probe_w))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", F.col("__q").alias("__qq"), "centroid_id")
-    )
-    scored = (
-        assigned.join(probed, "centroid_id")
-        .withColumn("qdot", int_dot(F.col("__qq"), F.col("__nq")))
-        .withColumn(
-            "qcos",
-            F.round(
-                F.col("qdot")
-                / (
-                    F.sqrt(int_dot(F.col("__qq"), F.col("__qq")))
-                    * F.sqrt(int_dot(F.col("__nq"), F.col("__nq")))
-                ),
-                6,
-            ),
-        )
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "qdot", "qcos")
-    )
+    probed = _probed(q, cent_model, n_probe, "centroid_id")
+    return _int8_topk(assigned.join(probed, "centroid_id"), k)
 
 
 def round_half_away(x, digits: int):
@@ -526,6 +481,21 @@ def round_half_away(x, digits: int):
 
     s = 10.0**digits
     return np.copysign(np.floor(np.abs(x) * s + 0.5), x) / s
+
+
+def cosine_matrix(a, b):
+    """Rounded-6 cosine of every row of ``a`` against every row of ``b``
+    (2-D float64 arrays) — the numpy arms' twin of the JVM's rounded
+    ``cosine_similarity``. A zero-norm pair scores -inf, so argmax and
+    descending sorts rank it last, like the JVM's NULL."""
+    import numpy as np
+
+    na = np.linalg.norm(a, axis=1, keepdims=True)
+    nb = np.linalg.norm(b, axis=1, keepdims=True)
+    denom = na @ nb.T
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = np.where(denom > 0, (a @ b.T) / denom, -np.inf)
+    return round_half_away(sims, 6)
 
 
 def kmeans_fit_numpy(ids, vecs, n_centroids: int, iters: int):
@@ -553,14 +523,7 @@ def kmeans_fit_numpy(ids, vecs, n_centroids: int, iters: int):
     v = np.asarray(vecs, dtype=np.float64)[order]
     cents = v[:n_centroids].copy()
     for _ in range(iters):
-        g = v @ cents.T
-        nv = np.linalg.norm(v, axis=1, keepdims=True)
-        nc = np.linalg.norm(cents, axis=1, keepdims=True)
-        denom = nv @ nc.T
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom > 0, g / denom, -np.inf)
-        sims = round_half_away(sims, 6)
-        cid = sims.argmax(axis=1)  # first max ⇒ smaller centroid id
+        cid = cosine_matrix(v, cents).argmax(axis=1)  # first max ⇒ min id
         for i in range(n_centroids):
             members = v[cid == i]
             if len(members):
@@ -576,7 +539,6 @@ def ivf_topk_arrow(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """:func:`ivf_topk`, the Arrow/numpy production arm — IDENTICAL
     stage semantics (min-id centroid model, rounded-6 cosine argmax
@@ -591,9 +553,9 @@ def ivf_topk_arrow(
     ARROW BATCH.
 
     Float contract (the SemDeDup-arm acceptance class): cosines are
-    rounded half-away to 6 digits (:func:`round_half_away`) before
-    every compare/rank; BLAS vs left-to-right summation differs below
-    the rounding scale. Zero-norm vectors score -inf everywhere, so
+    rounded half-away to 6 digits (:func:`cosine_matrix`) before every
+    compare/rank; BLAS vs left-to-right summation differs below the
+    rounding scale. Zero-norm vectors score -inf everywhere, so
     assignment falls back to the smallest centroid id (the JVM/oracle
     NULLS-LAST behavior) and their candidate cosines surface as NULL
     (never NaN — Spark sorts NaN ABOVE every number, which would rank
@@ -607,27 +569,10 @@ def ivf_topk_arrow(
     import numpy as np
     import pandas as pd
 
-    cent_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.col(id_col).asc())
-        .limit(n_centroids)
-        .collect()
-    )
-    cent_ids = np.array([r[id_col] for r in cent_rows], dtype=np.int64)
-    order = np.argsort(cent_ids, kind="stable")
-    cent_ids = cent_ids[order]
-    cmat = np.array(
-        [list(cent_rows[i][vec_col]) for i in order], dtype=np.float64
-    )
+    cents = _min_id_centroids(corpus, id_col, vec_col, n_centroids)
+    cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    cmat = np.array([cv for _, cv in cents], dtype=np.float64)
     bc = corpus.sparkSession.sparkContext.broadcast((cent_ids, cmat))
-
-    def _sims(v: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-        nv = np.linalg.norm(v, axis=1, keepdims=True)
-        nc = np.linalg.norm(c, axis=1, keepdims=True)
-        denom = nv @ nc.T
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom > 0, (v @ c.T) / denom, -np.inf)
-        return round_half_away(sims, 6)
 
     def assign(batches):
         ids, c = bc.value
@@ -636,7 +581,7 @@ def ivf_topk_arrow(
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             # first max ⇒ smallest position ⇒ smallest centroid id
-            pos = _sims(v, c).argmax(axis=1)
+            pos = cosine_matrix(v, c).argmax(axis=1)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col].to_numpy(),
@@ -652,7 +597,7 @@ def ivf_topk_arrow(
     def probe(batches):
         ids, c = bc.value
         # a corpus smaller than n_probe has fewer centroids than the
-        # requested probe width — clamp, like the JVM arm's rank filter
+        # requested probe width — clamp, like the JVM arm's slice
         # just emits fewer probe rows (ADVICE r4: unclamped repeat vs
         # top's min(n_probe, n_centroids) columns crashed the reshape)
         p = min(n_probe, len(ids))
@@ -660,9 +605,9 @@ def ivf_topk_arrow(
             if not len(pdf):
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = _sims(v, c)
+            sims = cosine_matrix(v, c)
             # stable argsort of -sims over the id-ASC-sorted matrix =
-            # (sim DESC, centroid_id ASC) — the JVM probe_w ordering;
+            # (sim DESC, centroid_id ASC) — the JVM probe ordering;
             # -inf (zero-norm query) ranks last = NULLS LAST
             top = np.argsort(-sims, axis=1, kind="stable")[:, :p]
             nq = len(pdf)
@@ -708,8 +653,6 @@ def ivf_topk_arrow(
     scored = assigned.join(probed, "centroid_id").mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     return _ranked(scored, k)
 
 
@@ -791,129 +734,13 @@ def kcenter_coreset(
     )
 
 
-def _pq_fit(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_sub: int,
-    n_codes: int,
-    iters: int = 2,
-    sample_mod: int = 1,
-    full_k: int = 0,
-    round_to: int = 9,
-) -> tuple[list[list[list[float]]], list[list[float]]]:
-    """Batched deterministic Lloyd fit for product quantization: all
-    ``n_sub`` subspace codebooks (and, when ``full_k`` > 0, the coarse
-    full-vector centroids IVF-PQ also needs) fitted in ONE job per
-    iteration plus ONE init collect, instead of one 3-action
-    :func:`kmeans_centroids` run per subspace.
-
-    Numerically identical to the sequential per-subspace fits (same
-    contract the oracles replay): init is the ``n`` smallest-id
-    vectors — a subspace's init subvectors are slices of the SAME
-    rows, so one collect serves every subspace and the coarse fit;
-    assignment per subspace is the same rounded-cosine argmax
-    projection; new centroids are per-(space, cluster, dim) means over
-    exactly the multiset each independent fit averaged, rounded to
-    ``round_to`` digits (the order-insensitivity contract). Empty
-    clusters keep their previous centroid, as before.
-
-    Per iteration the fit input is scanned once and exploded to
-    (space, cid, dim, x) rows — the same total element count the
-    sequential fits exploded across their separate jobs — then one
-    partial-agg shuffle produces every space's means. Action count:
-    1 + ``iters`` collects for the whole model, vs
-    3 x (``n_sub`` [+1 coarse]) sequential."""
+def _pq_spaces(dim: int, n_sub: int, n_codes: int) -> list[tuple[slice, int]]:
+    """The ``n_sub`` contiguous subspaces of a ``dim``-dim vector, each
+    fitted with ``n_codes`` codes (:func:`_lloyd` spaces)."""
     if dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_dim = dim // n_sub
-    fit = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    if sample_mod > 1:
-        fit = fit.filter(F.col(id_col) % sample_mod == 0)
-    # The per-iteration assignment is a heavy per-row expression (n_sub
-    # argmax trees of interpreted HOF cosines) over a COMPACT input — a
-    # one-file scan leaves every evaluation on one core. spread() is the
-    # repo's fix for exactly this shape (no-op once the scan yields
-    # >= cores splits at real scale).
-    fit = spread(fit)
-    # Consumed once per Lloyd iteration (plus init): checkpoint so the
-    # scan+cast+shuffle runs once. At 100 TB the fit input is the
-    # sample_mod slice — sized to be materializable.
-    fit = fit.localCheckpoint(eager=False)
-    n_init = max(n_codes, full_k)
-    init = fit.orderBy(F.col(id_col).asc()).limit(n_init).collect()
-    vecs = [list(r["__v"]) for r in init]
-    books: list[list[list[float]]] = [
-        [v[s * sub_dim : (s + 1) * sub_dim] for v in vecs[:n_codes]]
-        for s in range(n_sub)
-    ]
-    full: list[list[float]] = [list(v) for v in vecs[:full_k]]
-    for _ in range(iters):
-        structs = [
-            F.struct(
-                nearest_centroid_expr(
-                    F.slice(F.col("__v"), s * sub_dim + 1, sub_dim),
-                    list(enumerate(books[s])),
-                    id_type="int",
-                ).alias("cid"),
-                F.slice(F.col("__v"), s * sub_dim + 1, sub_dim).alias(
-                    "sv"
-                ),
-            )
-            for s in range(n_sub)
-        ]
-        if full_k:
-            structs.append(
-                F.struct(
-                    nearest_centroid_expr(
-                        F.col("__v"),
-                        list(enumerate(full)),
-                        id_type="int",
-                    ).alias("cid"),
-                    F.col("__v").alias("sv"),
-                )
-            )
-        # Three selects on purpose: the assignment structs materialize
-        # in their own projection before each posexplode (a generator
-        # sharing a select with the argmax struct trips Catalyst's
-        # generator extraction — see kmeans_centroids).
-        means = (
-            fit.select(F.array(*structs).alias("__spaces"))
-            .select(F.posexplode("__spaces").alias("space", "__x"))
-            .select(
-                "space",
-                F.col("__x.cid").alias("cid"),
-                F.posexplode("__x.sv").alias("dim", "x"),
-            )
-            .groupBy("space", "cid", "dim")
-            .agg(F.round(F.avg("x"), round_to).alias("m"))
-            .collect()
-        )
-        by_space: dict[int, dict[int, dict[int, float]]] = {}
-        for r in means:
-            by_space.setdefault(r["space"], {}).setdefault(
-                r["cid"], {}
-            )[r["dim"]] = r["m"]
-        for s in range(n_sub):
-            got = by_space.get(s, {})
-            books[s] = [
-                [got[i][d] for d in sorted(got[i])]
-                if i in got
-                else books[s][i]
-                for i in range(n_codes)
-            ]
-        if full_k:
-            got = by_space.get(n_sub, {})
-            full = [
-                [got[i][d] for d in sorted(got[i])]
-                if i in got
-                else full[i]
-                for i in range(full_k)
-            ]
-    return books, full
+    w = dim // n_sub
+    return [(slice(s * w, (s + 1) * w), n_codes) for s in range(n_sub)]
 
 
 def pq_codebooks(
@@ -931,21 +758,120 @@ def pq_codebooks(
     DETERMINISTIC Lloyd fit (min-id init, fixed iterations,
     rounded-cosine assignment, rounded-9 means) on each subspace's
     subvectors independently — all subspaces batched into one job per
-    iteration (:func:`_pq_fit`). Returns the model as plain Python
+    iteration (:func:`_lloyd`). Returns the model as plain Python
     lists (n_sub x n_codes x dim/n_sub floats) — like any broadcast ML
-    model, the codebooks are model-sized by construction (n_sub x
-    n_codes x sub_dim doubles), never corpus-shaped."""
-    books, _ = _pq_fit(
+    model, the codebooks are model-sized by construction, never
+    corpus-shaped."""
+    return _lloyd(
         corpus,
         id_col,
         vec_col,
-        dim,
-        n_sub,
-        n_codes,
-        iters=iters,
-        sample_mod=sample_mod,
+        _pq_spaces(dim, n_sub, n_codes),
+        iters,
+        sample_mod,
     )
-    return books
+
+
+def pq_encode(vec: F.Column, books: list[list[list[float]]]) -> list[F.Column]:
+    """The PQ codes of ``vec``: per subspace ``s``, ``__code{s}`` is the
+    id of its argmax-cosine codeword (:func:`nearest_centroid_expr` —
+    the module's one assignment rule), a map-only projection against
+    the literal codebook."""
+    w = len(books[0][0])
+    return [
+        nearest_centroid_expr(
+            F.slice(vec, s * w + 1, w), list(enumerate(book)), id_type="int"
+        ).alias(f"__code{s}")
+        for s, book in enumerate(books)
+    ]
+
+
+def _adc_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: list[list[list[float]]],
+    k: int,
+    cells: list[tuple[int, list[float]]] | None = None,
+    n_probe: int = 0,
+) -> DataFrame:
+    """PQ top-k with asymmetric-distance (ADC) scoring.
+
+    Corpus rows are encoded (:func:`pq_encode`) and carry their
+    reconstruction self-dot ``__rn2`` (a literal lookup per subspace,
+    left-associated so the oracle's ``(((n0 + n1) + n2) + n3)``
+    reproduces it exactly). Each query builds one ``n_codes``-entry
+    LOOKUP TABLE of subvector dots per subspace — model-sized work once
+    per query, not once per pair — and every pair scores
+    ``(lut0[c0] + lut1[c1] + ...) / (|q| * sqrt(__rn2))`` rounded to 6:
+    ``n_sub`` lookups + adds instead of a ``dim``-wide dot.
+
+    With ``cells`` (the coarse IVF model), corpus rows also carry their
+    nearest cell and each query explodes to its ``n_probe`` probed cells
+    (:func:`_probed`), so the pair scan is a broadcast equi-join on
+    the cell id instead of a broadcast cross join."""
+    w = len(books[0][0])
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+    )
+    cell = (
+        [nearest_centroid_expr(F.col("__cv"), cells, "int").alias("__cell")]
+        if cells
+        else []
+    )
+    enc = c.select("neighbor_id", *cell, *pq_encode(F.col("__cv"), books))
+
+    def lookup(tables: list[F.Column]) -> F.Column:
+        total = F.element_at(tables[0], F.col("__code0") + 1)
+        for s in range(1, len(tables)):
+            total = total + F.element_at(tables[s], F.col(f"__code{s}") + 1)
+        return total
+
+    enc = enc.withColumn(
+        "__rn2",
+        lookup(
+            [
+                F.transform(lit_double_matrix(b), lambda cv: dot(cv, cv))
+                for b in books
+            ]
+        ),
+    )
+
+    def lut(s: int):
+        # closure factory, NOT a default-arg lambda: a two-argument
+        # lambda makes pyspark's transform() pass the ARRAY INDEX as
+        # the second argument, silently clobbering the subspace id
+        def per_code(cv: F.Column) -> F.Column:
+            return dot(F.slice(F.col("__qv"), s * w + 1, w), cv)
+
+        return per_code
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+    )
+    if cells:
+        q = _probed(q, cells, n_probe, "__cell")
+    q = q.select(
+        "query_id",
+        l2_norm(F.col("__qv")).alias("__qn"),
+        *(["__cell"] if cells else []),
+        *[
+            F.transform(lit_double_matrix(b), lut(s)).alias(f"__lut{s}")
+            for s, b in enumerate(books)
+        ],
+    )
+    pairs = (
+        spread(enc).join(F.broadcast(q), "__cell")
+        if cells
+        else spread(enc).crossJoin(F.broadcast(q))
+    )
+    approx_dot = lookup([F.col(f"__lut{s}") for s in range(len(books))])
+    denom = F.col("__qn") * F.sqrt(F.col("__rn2"))
+    scored = pairs.withColumn(
+        "cosine", F.when(denom > 0, F.round(approx_dot / denom, 6))
+    )
+    return _ranked(scored, k)
 
 
 def pq_topk(
@@ -961,22 +887,8 @@ def pq_topk(
 ) -> DataFrame:
     """Product-quantization top-k with asymmetric-distance (ADC)
     scoring — the MEMORY-compression ANN arm beside int8's bandwidth
-    cut and IVF's scan cut.
-
-    Pipeline: (1) fit per-subspace codebooks (:func:`pq_codebooks`);
-    (2) ENCODE each corpus vector as ``n_sub`` code ids via the same
-    rounded-cosine argmax / min-id tie-break as every assignment in
-    this module (``nearest_centroid_expr`` per subspace — a map-only
-    projection against the literal codebook, no join, no shuffle); the
-    row also carries its reconstruction self-dot, a second literal
-    lookup; (3) per query, build the ADC LOOKUP TABLES — one
-    ``n_codes``-entry array of subvector dots per subspace, model-sized
-    work done once per query, not once per pair; (4) score every
-    (query, corpus) pair as
-    ``(lut0[c0] + lut1[c1] + ... ) / (|q| * sqrt(sum of code
-    self-dots))`` — the reconstructed-vector cosine, but each pair
-    costs ``n_sub`` array lookups + adds instead of a ``dim``-wide
-    dot: 64 mult-adds become 4 lookups at this geometry.
+    cut and IVF's scan cut: fit per-subspace codebooks
+    (:func:`pq_codebooks`), then encode and score (:func:`_adc_topk`).
 
     Why this is the 100 TB arm: the corpus-resident state after
     encoding is ``n_sub`` SMALL-INT CODES per vector (4 bytes here vs
@@ -990,83 +902,10 @@ def pq_topk(
     Approximate RECALL (quantization error), deterministic OUTPUT;
     recall vs :func:`brute_force_topk` is asserted in
     tests/test_similarity.py."""
-    if dim % n_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_dim = dim // n_sub
     books = pq_codebooks(
         corpus, id_col, vec_col, dim, n_sub, n_codes, iters=iters
     )
-
-    def _sub(col: F.Column, s: int) -> F.Column:
-        return F.slice(col, s * sub_dim + 1, sub_dim)
-
-    # (2) encode: per subspace, argmax-cosine code + self-dot lookup
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-    )
-    code_cols = []
-    for s in range(n_sub):
-        code_cols.append(
-            nearest_centroid_expr(
-                _sub(F.col("__cv"), s),
-                list(enumerate(books[s])),
-                id_type="int",
-            ).alias(f"__code{s}")
-        )
-    enc = c.select("neighbor_id", *code_cols)
-    # reconstruction self-dot: sum over subspaces of dot(code_vec,
-    # code_vec), each a literal-array lookup; left-associated so the
-    # oracle's (((n0 + n1) + n2) + n3) reproduces it exactly
-    selfdots = [
-        F.transform(lit_double_matrix(books[s]), lambda cv: dot(cv, cv))
-        for s in range(n_sub)
-    ]
-    rnorm2 = F.element_at(selfdots[0], F.col("__code0") + 1)
-    for s in range(1, n_sub):
-        rnorm2 = rnorm2 + F.element_at(
-            selfdots[s], F.col(f"__code{s}") + 1
-        )
-    enc = enc.withColumn("__rn2", rnorm2)
-
-    # (3) per-query ADC lookup tables + query self-norm
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    def _lut(s: int):
-        # closure factory, NOT a default-arg lambda: a two-argument
-        # lambda makes pyspark's transform() pass the ARRAY INDEX as
-        # the second argument, silently clobbering the subspace id
-        def per_code(cv: F.Column) -> F.Column:
-            return dot(_sub(F.col("__qv"), s), cv)
-
-        return per_code
-
-    lut_cols = [
-        F.transform(lit_double_matrix(books[s]), _lut(s)).alias(f"__lut{s}")
-        for s in range(n_sub)
-    ]
-    q = q.select(
-        "query_id", l2_norm(F.col("__qv")).alias("__qn"), *lut_cols
-    )
-
-    # (4) scan: n_sub lookups + adds per pair, broadcast query side
-    approx_dot = F.element_at(F.col("__lut0"), F.col("__code0") + 1)
-    for s in range(1, n_sub):
-        approx_dot = approx_dot + F.element_at(
-            F.col(f"__lut{s}"), F.col(f"__code{s}") + 1
-        )
-    denom = F.col("__qn") * F.sqrt(F.col("__rn2"))
-    scored = (
-        spread(enc)
-        .crossJoin(F.broadcast(q))
-        .withColumn(
-            "cosine",
-            F.when(denom > 0, F.round(approx_dot / denom, 6)),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _ranked(scored, k)
+    return _adc_topk(corpus, queries, id_col, vec_col, books, k)
 
 
 def ivf_pq_topk(
@@ -1101,124 +940,24 @@ def ivf_pq_topk(
     recall delta is measured, not hidden (tests/test_similarity.py
     pins IVF-PQ recall against plain PQ and IVF).
 
+    The coarse full-vector centroids ride the same per-iteration fit
+    job as the subspace codebooks (one :func:`_lloyd` call).
     Deterministic end-to-end like both parents; same-oracle
     hash-certified via ``embedding_topk_ivf_pq``."""
-    if dim % n_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_dim = dim // n_sub
-    # One batched fit: the coarse full-vector centroids ride the same
-    # per-iteration job as the subspace codebooks (identical values to
-    # the sequential kmeans_centroids + pq_codebooks runs — same init
-    # rows, same assignment argmax, same rounded means).
-    books, full = _pq_fit(
+    *books, full = _lloyd(
         corpus,
         id_col,
         vec_col,
-        dim,
-        n_sub,
-        n_codes,
-        iters=iters,
-        full_k=n_centroids,
+        _pq_spaces(dim, n_sub, n_codes) + [(slice(None), n_centroids)],
+        iters,
     )
-    cents = [(i, cv) for i, cv in enumerate(full)]
-
-    def _sub(col: F.Column, s: int) -> F.Column:
-        return F.slice(col, s * sub_dim + 1, sub_dim)
-
-    # corpus: ONE map-only projection — coarse cell + PQ codes + the
-    # reconstruction self-dot, all against literal models
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
+    return _adc_topk(
+        corpus,
+        queries,
+        id_col,
+        vec_col,
+        books,
+        k,
+        cells=list(enumerate(full)),
+        n_probe=n_probe,
     )
-    code_cols = [
-        nearest_centroid_expr(
-            _sub(F.col("__cv"), s),
-            list(enumerate(books[s])),
-            id_type="int",
-        ).alias(f"__code{s}")
-        for s in range(n_sub)
-    ]
-    enc = c.select(
-        "neighbor_id",
-        nearest_centroid_expr(F.col("__cv"), cents, "int").alias(
-            "__cell"
-        ),
-        *code_cols,
-    )
-    selfdots = [
-        F.transform(lit_double_matrix(books[s]), lambda cv: dot(cv, cv))
-        for s in range(n_sub)
-    ]
-    rnorm2 = F.element_at(selfdots[0], F.col("__code0") + 1)
-    for s in range(1, n_sub):
-        rnorm2 = rnorm2 + F.element_at(
-            selfdots[s], F.col(f"__code{s}") + 1
-        )
-    enc = enc.withColumn("__rn2", rnorm2)
-
-    # queries: probed cells (top n_probe by rounded cosine, id ties
-    # toward the smaller cell — (-sim, cid) struct sort; NULL cosine
-    # coalesces to +Inf = ranked last, matching `desc()` NULLS LAST —
-    # see ivf_topk's probe note) + ADC LUTs
-    cent_mat = lit_double_matrix([cv for _, cv in sorted(cents)])
-    cent_ids = lit_int_array([cid for cid, _ in sorted(cents)])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    sims = F.transform(
-        cent_mat, lambda cv: F.round(cosine_similarity(F.col("__qv"), cv), 6)
-    )
-    ranked_cells = F.slice(
-        F.array_sort(
-            F.zip_with(
-                sims,
-                cent_ids,
-                lambda s_, i: F.struct(
-                    F.coalesce(-s_, F.lit(float("inf"))).alias("neg"),
-                    i.alias("cid"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-
-    def _lut(s: int):
-        # closure factory — see pq_topk for the transform-arity trap
-        def per_code(cv: F.Column) -> F.Column:
-            return dot(_sub(F.col("__qv"), s), cv)
-
-        return per_code
-
-    lut_cols = [
-        F.transform(lit_double_matrix(books[s]), _lut(s)).alias(f"__lut{s}")
-        for s in range(n_sub)
-    ]
-    q = q.select(
-        "query_id",
-        l2_norm(F.col("__qv")).alias("__qn"),
-        F.explode(
-            F.transform(ranked_cells, lambda x: x["cid"])
-        ).alias("__cell"),
-        *lut_cols,
-    )
-
-    # scan only probed cells: equi-join on the cell id, query side
-    # broadcast (n_queries x n_probe rows)
-    approx_dot = F.element_at(F.col("__lut0"), F.col("__code0") + 1)
-    for s in range(1, n_sub):
-        approx_dot = approx_dot + F.element_at(
-            F.col(f"__lut{s}"), F.col(f"__code{s}") + 1
-        )
-    denom = F.col("__qn") * F.sqrt(F.col("__rn2"))
-    scored = (
-        spread(enc)
-        .join(F.broadcast(q), "__cell")
-        .withColumn(
-            "cosine",
-            F.when(denom > 0, F.round(approx_dot / denom, 6)),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _ranked(scored, k)

@@ -14,6 +14,8 @@ Reference citations in each query's docstring say which inventory row
 
 from __future__ import annotations
 
+from importlib import import_module
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,7 +31,8 @@ from .operators.relational import (
     top_k_per_group,
     top_n,
 )
-from .registry import QUERIES, register  # noqa: F401  (re-exported)
+# QUERIES and register are re-exported
+from .registry import MODULE_ORDER, QUERIES, register  # noqa: F401
 from .sources.readers import load_table
 
 
@@ -1143,11 +1146,8 @@ def revenue_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Extension registrations (LLM-data-pipeline + events/streaming-batch).
-# Imported last so their @register calls land in the same QUERIES dict.
-from . import queries_llm  # noqa: E402,F401
-from . import queries_events  # noqa: E402,F401
-from . import queries_multimodal  # noqa: E402,F401
-from . import queries_curation  # noqa: E402,F401
-from . import queries_tpch  # noqa: E402,F401
-from . import queries_analytics  # noqa: E402,F401
+# Extension registrations (LLM-data-pipeline + events/streaming-batch),
+# in the registry's canonical module order. Imported last so their
+# @register calls land in the same QUERIES dict.
+for _module in MODULE_ORDER[1:]:
+    import_module(f".{_module}", __package__)

@@ -2123,10 +2123,7 @@ def embedding_pq_distortion(
     (n_sub x n_codes)-sized. The fit itself is the same
     action-bounded Lloyd as the ANN queries (shared
     ``pq_codebooks``)."""
-    from .operators.similarity import (
-        nearest_centroid_expr,
-        pq_codebooks,
-    )
+    from .operators.similarity import pq_codebooks, pq_encode
     from .functions.vectors import cosine_similarity as _cos
     from .functions.vectors import lit_double_matrix
 
@@ -2141,17 +2138,7 @@ def embedding_pq_distortion(
     # code expression into the cosine would re-evaluate the 8-cosine
     # argmax tree 3x per subspace (dot + both norms reference the
     # codeword) and was measured at ~2x the query's wall
-    enc = emb.select(
-        "embedding",
-        *[
-            nearest_centroid_expr(
-                F.slice(F.col("embedding"), s * sub_dim + 1, sub_dim),
-                list(enumerate(books[s])),
-                id_type="int",
-            ).alias(f"__code{s}")
-            for s in range(PQ_SUB)
-        ],
-    )
+    enc = emb.select("embedding", *pq_encode(F.col("embedding"), books))
     structs = []
     for s in range(PQ_SUB):
         sub = F.slice(F.col("embedding"), s * sub_dim + 1, sub_dim)
@@ -2487,22 +2474,15 @@ def embedding_quantization_profile(
     before switching the ANN scan to the quantized path; per-row error
     is bit-reproducible (MAX is order-free; the AVG rounds per-row to
     6 digits first, then to 4)."""
-    from .functions.vectors import max_abs, quantize_int8
+    from .operators.similarity import int8_quantized
 
     emb = _t(spark, sf_dir, "embeddings")
-    q8 = (
-        emb.withColumn("__amax", max_abs(F.col("embedding")))
-        .filter(F.col("__amax") > 0)
-        .withColumn(
-            "__qv", quantize_int8(F.col("embedding"), F.col("__amax"))
-        )
-    )
-    err = q8.withColumn(
+    err = int8_quantized(emb, "embedding").withColumn(
         "__err",
         F.array_max(
             F.zip_with(
                 F.col("embedding"),
-                F.col("__qv"),
+                F.col("__q"),
                 lambda x, q: F.abs(
                     x.cast("double") - q * F.col("__amax") / 127.0
                 ),
@@ -3464,7 +3444,7 @@ def dedup_semdedup_prune_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .operators.similarity import kmeans_fit_numpy, round_half_away
+    from .operators.similarity import cosine_matrix, kmeans_fit_numpy
 
     emb = _t(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -3487,14 +3467,9 @@ def dedup_semdedup_prune_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def assign(batches):
         c = b_cents.value
-        nc = np.linalg.norm(c, axis=1, keepdims=True)
         for pdf in batches:
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            nv = np.linalg.norm(v, axis=1, keepdims=True)
-            denom = nv @ nc.T
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, (v @ c.T) / denom, -np.inf)
-            sims = round_half_away(sims, 6)
+            sims = cosine_matrix(v, c)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -3510,11 +3485,7 @@ def dedup_semdedup_prune_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         v = np.stack(pdf["av"].to_numpy())
-        nv = np.linalg.norm(v, axis=1, keepdims=True)
-        denom = nv @ nv.T
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom > 0, (v @ v.T) / denom, -np.inf)
-        sims = round_half_away(sims, 6)
+        sims = cosine_matrix(v, v)
         # pruned[j] ⇔ some i<j (smaller id) in the cluster has
         # cosine ≥ τ — the upper triangle read column-wise.
         hit = np.triu(sims >= SEMDEDUP_TAU, k=1).any(axis=0)

@@ -165,9 +165,20 @@ def release_checkpoints(spark: SparkSession) -> int:
     return len(jrdds)
 
 
-def release_checkpoint(df) -> None:
+def _checkpoint_rdds(df) -> list:
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return [
+        leaves.apply(i).rdd()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    ]
+
+
+def release_checkpoint(df, keep=None) -> None:
     """Free the RDD blocks pinned by every ``localCheckpoint`` under
     ``df``: a bare checkpoint frame, or a frame joined from several.
+    Checkpoints that ``keep`` also reads stay pinned: pass the input a
+    pipeline was built from when the caller still needs it.
 
     ``DataFrame.unpersist`` cannot: it drops cache-manager entries, and
     a local checkpoint is a persisted RDD under a ``LogicalRDD`` leaf
@@ -175,9 +186,8 @@ def release_checkpoint(df) -> None:
     (unpersisting a leaf that was never persisted is a no-op). Only
     the leaves are reachable: a checkpoint that fed another checkpoint
     sits behind the truncated lineage and stays pinned. The frame, and
-    every frame built on its leaves, is unreadable afterwards."""
-    leaves = df._jdf.queryExecution().logical().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.nodeName() == "LogicalRDD":
-            leaf.rdd().unpersist(False)
+    every frame built on the freed leaves, is unreadable afterwards."""
+    kept = set() if keep is None else {r.id() for r in _checkpoint_rdds(keep)}
+    for rdd in _checkpoint_rdds(df):
+        if rdd.id() not in kept:
+            rdd.unpersist(False)

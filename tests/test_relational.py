@@ -200,9 +200,14 @@ def test_driver_window_registry_ordering():
     that would otherwise starve) fits the driver's ~50-row window.
     Fresh names (never seen by the driver) may overflow; they wait one
     round by construction."""
+    import hashlib
     import pathlib
     import subprocess
     import sys
+
+    # ahead of queries.py unless an earlier test imported it already (a
+    # full run collects tests/test_curation.py, which imports it first)
+    import mknssh_11_bigdata_spark.queries_curation  # noqa: F401
 
     root = pathlib.Path(__file__).resolve().parent.parent
     if str(root) not in sys.path:  # the driver shim lives at the repo root
@@ -211,6 +216,7 @@ def test_driver_window_registry_ordering():
         _RECERTIFY,
         _driver_certified,
         _scan_correctness,
+        oracle_sql,
         queries,
     )
 
@@ -219,8 +225,11 @@ def test_driver_window_registry_ordering():
     # the driver order recorded before the ordering moved out of the
     # library: md5 of the "\n"-joined queries() and oracle_sql() keys,
     # taken the driver's way — a fresh process that imports the shim
-    # first (here, a test may have imported a queries_* module before
-    # queries.py, and registration order follows import order)
+    # first — and in this process, whatever the import order was
+    want = [
+        "b3b67f68b9777c57ca93c8fdebd9f095",
+        "f54cce653c2e9ff0a026f423784735c8",
+    ]
     probe = (
         "import hashlib, sys; sys.path.insert(0, sys.argv[1]); "
         "import __spark_entry__ as e; "
@@ -231,10 +240,11 @@ def test_driver_window_registry_ordering():
         [sys.executable, "-c", probe, str(root)],
         capture_output=True, text=True, check=True,
     ).stdout.split()
-    assert digest == [
-        "b3b67f68b9777c57ca93c8fdebd9f095",
-        "f54cce653c2e9ff0a026f423784735c8",
-    ]
+    assert digest == want
+    assert [
+        hashlib.md5("\n".join(keys).encode()).hexdigest()
+        for keys in (queries(), oracle_sql())
+    ] == want
     names = list(queries())
     recorded, certified = _scan_correctness()
     assert certified == _driver_certified()

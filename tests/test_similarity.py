@@ -573,9 +573,53 @@ def test_ivf_probe_ranks_zero_norm_centroid_last(spark):
         k=1,
         n_centroids=3,
         n_probe=1,
-        exclude_self=False,
         centroids=cents,
     ).collect()
     # probing cell 1 (nearest) finds corpus vec 10; probing the
     # zero-norm cell 0 would find nothing at all
     assert [(r["query_id"], r["neighbor_id"]) for r in got] == [(99, 10)]
+
+
+def test_ivf_int8_probe_is_windowless_and_ranks_zero_norm_cell_last(spark):
+    """``ivf_int8_topk`` probes through the same literal array_sort as
+    ``ivf_topk``: its executed plan keeps only the ranking Window (the
+    probe's row_number window and its exchange are gone), it has no
+    more exchanges than ``ivf_topk`` on the same input, and a
+    NULL-cosine centroid sorts LAST in both. Vector 0 is that centroid
+    candidate: its amax is nonzero, so the int8 arm keeps it, but its
+    squared norm underflows to 0, so every cosine against it is NULL.
+    With n_probe=1 the query must probe cell 1 (vectors 1 and 10); the
+    degenerate cell 0 holds only vector 0."""
+    import re
+
+    from mknssh_11_bigdata_spark.operators.similarity import ivf_int8_topk
+
+    corpus = spark.createDataFrame(
+        [
+            (0, [1e-200, 1e-200]),
+            (1, [1.0, 0.0]),
+            (2, [0.0, 1.0]),
+            (10, [1.0, 0.05]),
+            (20, [0.05, 1.0]),
+        ],
+        "vec_id long, v array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(99, [1.0, 0.1])], "vec_id long, v array<double>"
+    )
+    kw = dict(k=2, n_centroids=3, n_probe=1)
+    plans = {}
+    for op in (ivf_topk, ivf_int8_topk):
+        df = op(corpus, queries, "vec_id", "v", **kw)
+        rows = [tuple(r) for r in df.collect()]
+        assert [r[:3] for r in rows] == [(99, 1, 10), (99, 2, 1)], op
+        plans[op] = df._jdf.queryExecution().executedPlan().toString()
+    assert rows == [(99, 1, 10, 16207, 0.998499), (99, 2, 1, 16129, 0.994802)]
+    windows = [
+        ln for ln in plans[ivf_int8_topk].splitlines()
+        if re.search(r"\bWindow \[", ln)
+    ]
+    assert windows and all("qcos" in ln for ln in windows), windows
+    assert plans[ivf_int8_topk].count("Exchange") <= plans[
+        ivf_topk
+    ].count("Exchange")

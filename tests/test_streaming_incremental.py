@@ -521,11 +521,10 @@ def test_leakage_safe_split_sink_invariants(spark, tmp_path):
     for i, b in enumerate(incs):
         pinned = set(jsc.getPersistentRDDs().keys())
         sink(b, i)
-        # left pinned per batch: the LSH candidates, and the component
-        # maps behind the split's checkpointed group map (5 while
-        # duplicate_components kept its edges and minhash_dedup_pairs
-        # its signatures)
-        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 3
+        # nothing left pinned per batch (3 while the split left the LSH
+        # candidates, the Jaccard shingle counts and the rep component
+        # map behind its checkpointed group map)
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) == 0
         snapshots.append(
             {r["doc_id"]: (r["group_id"], r["split"])
              for r in sink.assignments(spark).collect()}
@@ -702,10 +701,9 @@ def test_semantic_split_sink_contracts(spark, tmp_path):
     for i, b in enumerate(incs):
         pinned = set(jsc.getPersistentRDDs().keys())
         sink(b, i)
-        # left pinned per batch: the SRP candidates only (3 while
-        # duplicate_components kept its edges and the pair search its
-        # signatures)
-        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) <= 1
+        # nothing left pinned per batch (1 while the split left the SRP
+        # candidates behind the materialized component edges)
+        assert len(set(jsc.getPersistentRDDs().keys()) - pinned) == 0
         snapshots.append(
             {r["vec_id"]: (r["group_id"], r["split"])
              for r in sink.assignments(spark).collect()}

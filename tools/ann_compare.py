@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Measure ANN strategy tradeoffs (wall clock + recall@k vs brute force)
 on a scale dataset: brute-force cosine, IVF (min-id centroids), IVF
-(deterministic k-means), and int8-quantized scoring.
+(deterministic k-means), the Arrow IVF arm, int8-quantized scoring,
+IVF x int8, product quantization and IVF-PQ.
 
 The point (BASELINE.md): the approximate strategies must buy their scan
 reduction with bounded recall loss, measured — not asserted — at a
@@ -14,14 +15,21 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(pathlib.Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+# the Arrow arm's Python workers import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def main() -> int:
-    data = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.benchdata/sf1fair"
+    data = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     nq = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
@@ -32,8 +40,10 @@ def main() -> int:
         brute_force_topk,
         ivf_int8_topk,
         ivf_topk,
+        ivf_pq_topk,
         ivf_topk_arrow,
         kmeans_centroids,
+        pq_topk,
         quantized_topk,
     )
     from mknssh_11_bigdata_spark.sources.readers import load_table
@@ -42,6 +52,7 @@ def main() -> int:
     emb = load_table(spark, data, "embeddings")
     n_corpus = emb.count()  # warms the scan
     queries = emb.filter(F.col("vec_id") < nq)
+    dim = len(queries.first()["embedding"])
 
     def run(tag, df_factory):
         t0 = time.perf_counter()
@@ -78,6 +89,10 @@ def main() -> int:
         ),
         "ivf_x_int8": lambda: ivf_int8_topk(
             emb, queries, "vec_id", "embedding", k=k
+        ),
+        "pq": lambda: pq_topk(emb, queries, "vec_id", "embedding", dim, k=k),
+        "ivf_pq": lambda: ivf_pq_topk(
+            emb, queries, "vec_id", "embedding", dim, k=k
         ),
     }
     for tag, factory in strategies.items():
